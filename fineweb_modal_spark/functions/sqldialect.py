@@ -79,11 +79,6 @@ def regexp_replace_all(col: str, pattern: str, repl: str, d: str) -> str:
     return f"regexp_replace({col}, '{esc(pattern, d)}', '{repl}', 'g')"
 
 
-def strip_ws_len(col: str, d: str) -> str:
-    """Total non-whitespace character count."""
-    return f"length({regexp_replace_all(col, chr(92) + 's+', '', d)})"
-
-
 def token_len_sum(toks: str, d: str) -> str:
     """Sum of token lengths (== non-ws chars) from an existing token
     array — avoids a second regex pass over the text."""
@@ -97,11 +92,6 @@ def n_words_sql(col: str, d: str) -> str:
         f"CASE WHEN length({ws_trim(col, d)}) = 0 THEN 0 "
         f"ELSE {arr_len(ws_tokens(col, d), d)} END"
     )
-
-
-def dbl(e: str, d: str) -> str:
-    """Portable cast to double."""
-    return f"CAST({e} AS DOUBLE)"
 
 
 def occ_count(col: str, needle_sql: str, needle_len: int, d: str) -> str:

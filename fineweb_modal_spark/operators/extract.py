@@ -26,11 +26,3 @@ def with_extracted_text(
     pages: DataFrame, html_col: str = "html", out_col: str = "extracted_text"
 ) -> DataFrame:
     return pages.withColumn(out_col, extract_text_expr(html_col))
-
-
-def extraction_check(pages: DataFrame) -> DataFrame:
-    """(url, ok) — per-url byte-identity of extraction vs stored text."""
-    ex = with_extracted_text(pages)
-    return ex.select(
-        "url", (F.col("extracted_text") == F.col("text")).alias("ok")
-    )

@@ -1,6 +1,6 @@
 """Trained word-bigram LM with stupid backoff — corpus-fit perplexity.
 
-The pipeline's existing perplexity stage (operators/perplexity.py)
+The pipeline's existing perplexity stage (operators/scoring.py)
 scores against a FIXED char-bigram table shipped with the repo (the
 hermetic stand-in for the reference's KenLM model, features.py
 analog). This module adds the other half a real data pipeline needs:

@@ -4,7 +4,7 @@ Spark rendering of spec/quality_rules.py (gopher/FineWeb-style rules
 generalizing the reference's threshold filters, filter.py:50 and
 summary.py:53-55). Everything here is JVM-side whole-stage-codegen
 column expressions — zero Python in the hot path (north rule); the
-perplexity stage (Python numpy) lives in operators/perplexity.py.
+perplexity stage (Python numpy) lives in operators/scoring.py.
 
 `signals_sql` renders the byte-equivalent DuckDB oracle for the
 driver gate.

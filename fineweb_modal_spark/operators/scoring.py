@@ -5,8 +5,8 @@ set per task and a second Arrow round-trip per batch (measured ~7×
 slower warm than a single fused node on local[32]); on a cluster it
 doubles the Python-worker memory footprint per executor. Both models
 consume the same text column, so the pipeline fuses them into one
-iterator UDF that returns a struct. The standalone operators
-(operators/langid.py, operators/perplexity.py) remain for ad-hoc use.
+iterator UDF that returns a struct; it is the engine's only Python
+scoring stage.
 
 Reference analog: one container holding both models across batches
 (features.py:92-101 `@enter` + 135-145), not one container per model.

@@ -15,7 +15,14 @@ engine generalizes that to *partition-granular snapshot commits*:
   fingerprint) — these are the "per-partition lineage + metrics rows";
 * `resume_run` recomputes only partitions missing from the manifest —
   the kill-and-resume contract (tests/test_resume.py kills mid-run
-  and completes on the second invocation without redoing work).
+  and completes on the second invocation without redoing work);
+* `commit_stream_batch` appends one stream micro-batch to the same
+  table (stage → deterministic-rename publish → manifest), replay-safe
+  under the foreachBatch batchId contract.
+
+This module is the only one that knows the committed-table format:
+the partition directory and stage file names, the three partition
+metrics (n_rows / n_keep / out_chars) and the manifest row shape.
 
 Metrics ride on `df.observe(...)` so they cost no extra pass; the
 salt column spreads a skewed host across `n_salts` write tasks
@@ -25,15 +32,23 @@ table layout query-prunable.
 
 from __future__ import annotations
 
+import glob
 import os
+import shutil
 import time
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.errors import AnalysisException
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 N_SALTS = 16
 MANIFEST_DIR = "_manifest"
+STREAM_STAGE_DIR = "_stream_stage"
+# the stage is partitioned on a COPY of ds, so the staged (and then
+# published) files keep their in-file ds column like batch-sink files
+_STAGE_KEY = "stage_ds"
+_METRICS = ("n_rows", "n_keep", "out_chars")
 
 # When set (e.g. spark.conf.set(ICEBERG_TABLE_CONF, "cat.db.docs")), the
 # partition write goes through Iceberg's `writeTo(...).overwritePartitions()`
@@ -76,9 +91,42 @@ def committed_partitions(spark: SparkSession, out_dir: str) -> set[str]:
         return set()
 
 
-def _write_manifest_row(spark: SparkSession, out_dir: str, row: dict) -> None:
+def _partition_metrics() -> list[Column]:
+    """The aggregates behind every manifest row's _METRICS."""
+    return [
+        F.count(F.lit(1)).alias("n_rows"),
+        F.sum(F.col("keep").cast("long")).alias("n_keep"),
+        F.sum(F.length("scrubbed_text").cast("long")).alias("out_chars"),
+    ]
+
+
+def _metric_values(m) -> dict:
+    """_METRICS of an observed/aggregated row as ints (empty sums → 0)."""
+    return {k: int(m[k] or 0) for k in _METRICS}
+
+
+def _commit_stamp() -> dict:
+    """committed_at has 1-second resolution; commit_seq (time_ns)
+    breaks same-second ties between rows of one ds."""
+    return {
+        "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+        "commit_seq": time.time_ns(),
+    }
+
+
+def _append_manifest(spark: SparkSession, out_dir: str, rows: list[dict]) -> None:
+    """Append manifest rows as ONE parquet write."""
     mpath = os.path.join(out_dir, MANIFEST_DIR)
-    spark.createDataFrame([row]).coalesce(1).write.mode("append").parquet(mpath)
+    spark.createDataFrame(rows).coalesce(1).write.mode("append").parquet(mpath)
+
+
+def _data_files(d: str) -> list[str]:
+    try:
+        return sorted(
+            f for f in os.listdir(d) if f.endswith(".parquet") and not f.startswith("_")
+        )
+    except OSError:
+        return []
 
 
 def write_partition(
@@ -95,18 +143,11 @@ def write_partition(
     form: `df.writeTo(tbl).overwritePartitions()` + snapshot commit.
     """
     obs = Observation(f"metrics_{ds}")
-    observed = df_partition.observe(
-        obs,
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum(F.col("keep").cast("long")).alias("n_keep"),
-        F.sum(F.length("scrubbed_text").cast("long")).alias("out_chars"),
-    )
+    observed = df_partition.observe(obs, *_partition_metrics())
     t0 = time.monotonic()
     sink = "parquet"
     tbl = spark.conf.get(ICEBERG_TABLE_CONF, None)
     if tbl:
-        from pyspark.errors import AnalysisException
-
         try:
             # Analysis failures (catalog/jars/table absent) surface before
             # any job runs, so the Observation is untouched and the parquet
@@ -125,16 +166,12 @@ def write_partition(
             .write.mode("overwrite")
             .parquet(os.path.join(out_dir, f"ds={ds}"))
         )
-    m = obs.get
     row = {
         "ds": ds,
         "sink": sink,
-        "n_rows": int(m["n_rows"] or 0),
-        "n_keep": int(m["n_keep"] or 0),
-        "out_chars": int(m["out_chars"] or 0),
+        **_metric_values(obs.get),
         "wall_s": round(time.monotonic() - t0, 3),
-        "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-        "commit_seq": time.time_ns(),
+        **_commit_stamp(),
         **(extra_lineage or {}),
     }
     if sink == "iceberg":
@@ -142,7 +179,7 @@ def write_partition(
         # (they have no parquet directory under out_dir); omitted on the
         # parquet path — mergeSchema widens reads across row shapes
         row["iceberg_table"] = tbl
-    _write_manifest_row(spark, out_dir, row)
+    _append_manifest(spark, out_dir, [row])
     return row
 
 
@@ -172,6 +209,113 @@ def resume_run(
         part = df.where(F.col("ds") == F.lit(ds))
         rows.append(write_partition(spark, part, out_dir, ds))
     return rows
+
+
+def commit_stream_batch(
+    spark: SparkSession,
+    df: DataFrame,
+    out_dir: str,
+    batch_id: int,
+    publish_hook: Callable[[str, int], None] | None = None,
+) -> int:
+    """Append one stream micro-batch to the committed ds=... table.
+
+    `df` carries ds/salt/keep/scrubbed_text (with_partition_cols over
+    the pipeline). Under the foreachBatch batchId contract a crash at
+    ANY point replays to the identical on-disk state:
+
+    1. STAGE — ONE write of `df` (repartition(salt), partitioned on a
+       copy of ds) under out_dir/_stream_stage/batch=N, overwritten on
+       replay; the DAG behind `df` runs once. The per-ds metrics come
+       from a scan of the staged files, with ds read back as a string.
+    2. PUBLISH — each staged file moves to
+       ds=X/stream-b{N:06d}-{i:04d}.parquet. Names are deterministic
+       per (batch, position), and stream-b{N}-* leftovers of a torn
+       earlier attempt are deleted first, so replay converges on the
+       identical file set — no duplicates, no partials.
+    3. MANIFEST — one op='stream_append' row per (ds, batch), all in one
+       append, holding the partition's totals AFTER the batch (the ds's
+       latest manifest row + this batch's counts), so read_manifest /
+       read_output_asof / vacuum_manifest stay right for streamed and
+       mixed partitions. A (ds, batch) already in the manifest (crash
+       between manifest append and checkpoint advance) is skipped.
+
+    `publish_hook(phase, batch_id)` is a crash-injection point, called
+    with phase 'staged', 'published' and 'manifested'. Returns the rows
+    this call committed (0 for a fully replayed batch)."""
+    stage = os.path.join(out_dir, STREAM_STAGE_DIR, f"batch={batch_id}")
+    staged = df.withColumn(_STAGE_KEY, F.col("ds"))
+    staged.repartition(F.col("salt")).write.mode("overwrite").partitionBy(
+        _STAGE_KEY
+    ).parquet(stage)
+    batch = {
+        r.ds: _metric_values(r)
+        for r in spark.read.schema(staged.schema).parquet(stage)
+        .groupBy("ds").agg(*_partition_metrics()).collect()
+    }
+    if publish_hook:
+        publish_hook("staged", batch_id)
+    prefix = f"stream-b{int(batch_id):06d}-"
+    for ds in sorted(batch):
+        tgt = os.path.join(out_dir, f"ds={ds}")
+        os.makedirs(tgt, exist_ok=True)
+        for old in glob.glob(os.path.join(tgt, f"{prefix}*.parquet")):
+            os.remove(old)
+        src = os.path.join(stage, f"{_STAGE_KEY}={ds}")
+        for i, f in enumerate(_data_files(src)):
+            os.replace(
+                os.path.join(src, f), os.path.join(tgt, f"{prefix}{i:04d}.parquet")
+            )
+    if publish_hook:
+        publish_hook("published", batch_id)
+    seen, before = _stream_manifest_state(spark, out_dir, sorted(batch))
+    rows = [
+        {
+            "ds": ds,
+            "sink": "parquet",
+            "op": "stream_append",
+            "batch_id": int(batch_id),
+            **{k: before.get(ds, {}).get(k, 0) + v for k, v in batch[ds].items()},
+            **_commit_stamp(),
+        }
+        for ds in sorted(batch)
+        if (ds, int(batch_id)) not in seen
+    ]
+    if rows:
+        _append_manifest(spark, out_dir, rows)
+    if publish_hook:
+        # crash-injection point for the replay-dedup window: manifest
+        # rows appended, checkpoint NOT yet advanced
+        publish_hook("manifested", batch_id)
+    shutil.rmtree(stage, ignore_errors=True)
+    return sum(batch[r["ds"]]["n_rows"] for r in rows)
+
+
+def _stream_manifest_state(
+    spark: SparkSession, out_dir: str, ds_list: list[str]
+) -> tuple[set[tuple[str, int]], dict[str, dict]]:
+    """One manifest read for a stream commit over `ds_list`: the
+    (ds, batch_id) pairs already committed (the replay guard) and each
+    ds's latest _METRICS (the totals the batch adds to)."""
+    try:
+        m = _manifest_rows(spark, out_dir)
+    except AnalysisException as e:
+        # only the first-commit case (no manifest dir yet) is benign;
+        # any other read failure must not silently turn off idempotence
+        if "PATH_NOT_FOUND" not in str(e):
+            raise
+        return set(), {}
+    # batch-sink-only manifests have no batch_id column
+    if "batch_id" not in m.columns:
+        m = m.withColumn("batch_id", F.lit(None).cast("long"))
+    rows = (
+        m.where(F.col("ds").isin(ds_list))
+        .withColumn("__rn", _latest_first())
+        .select("ds", "batch_id", "__rn", *_METRICS)
+        .collect()
+    )
+    seen = {(r.ds, int(r.batch_id)) for r in rows if r.batch_id is not None}
+    return seen, {r.ds: _metric_values(r) for r in rows if r["__rn"] == 1}
 
 
 def read_output(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -230,25 +374,36 @@ def read_output(spark: SparkSession, out_dir: str) -> DataFrame:
     return out
 
 
-def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Latest manifest row per ds (rewrites supersede older rows).
-    mergeSchema: maintenance rows (op/compaction fields) widen the
-    manifest schema over time — reads must union all row shapes."""
+def _manifest_rows(spark: SparkSession, out_dir: str) -> DataFrame:
+    """Every manifest row. mergeSchema: maintenance and stream rows
+    (op/compaction/batch_id fields) widen the manifest schema over
+    time — plain inference could sample one row shape and drop the
+    others' columns."""
     m = spark.read.option("mergeSchema", "true").parquet(
         os.path.join(out_dir, MANIFEST_DIR)
     )
     if "commit_seq" not in m.columns:  # pre-upgrade manifests
         m = m.withColumn("commit_seq", F.lit(None).cast("long"))
-    # committed_at has 1-second resolution — commit_seq (time_ns) breaks
-    # same-second ties (e.g. a compaction right after its write); rows
-    # from pre-upgrade manifests have NULL seq and lose ties, which is
-    # the correct supersedence order
-    w = F.row_number().over(
+    return m
+
+
+def _latest_first() -> Column:
+    """Rank of a manifest row within its ds, 1 = the one in force.
+    committed_at has 1-second resolution — commit_seq (time_ns) breaks
+    same-second ties (e.g. a compaction right after its write); rows
+    from pre-upgrade manifests have NULL seq and lose ties, which is
+    the correct supersedence order."""
+    return F.row_number().over(
         Window.partitionBy("ds").orderBy(
             F.desc("committed_at"), F.desc_nulls_last("commit_seq")
         )
     )
-    return m.withColumn("__rn", w).where("__rn = 1").drop("__rn")
+
+
+def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
+    """Latest manifest row per ds (rewrites supersede older rows)."""
+    m = _manifest_rows(spark, out_dir)
+    return m.withColumn("__rn", _latest_first()).where("__rn = 1").drop("__rn")
 
 
 def read_output_asof(spark: SparkSession, out_dir: str, as_of: str) -> DataFrame:
@@ -270,15 +425,7 @@ def read_output_asof(spark: SparkSession, out_dir: str, as_of: str) -> DataFrame
 
 
 def partition_files(out_dir: str, ds: str) -> list[str]:
-    pdir = os.path.join(out_dir, f"ds={ds}")
-    try:
-        return [
-            f
-            for f in os.listdir(pdir)
-            if f.endswith(".parquet") and not f.startswith("_")
-        ]
-    except OSError:
-        return []
+    return _data_files(os.path.join(out_dir, f"ds={ds}"))
 
 
 def compact_partition(
@@ -290,8 +437,8 @@ def compact_partition(
     planning is dominated by file-open overhead). Reads the partition,
     coalesces, overwrites the SAME directory via a temp dir + atomic
     rename, and appends a superseding manifest row (op='compact') so
-    time-travel reads stay consistent. Returns the manifest row."""
-    import shutil
+    time-travel reads stay consistent; the row re-derives the
+    partition's metrics from the compacted files. Returns the row."""
     import uuid
 
     pdir = os.path.join(out_dir, f"ds={ds}")
@@ -303,7 +450,9 @@ def compact_partition(
     tag = uuid.uuid4().hex[:8]
     tmp = os.path.join(out_dir, f"_compact_{tag}")
     df.coalesce(target_files).write.mode("overwrite").parquet(tmp)
-    n_rows = spark.read.parquet(tmp).count()
+    metrics = _metric_values(
+        spark.read.parquet(tmp).agg(*_partition_metrics()).first()
+    )
     # move-aside-then-delete: a crash mid-swap leaves either the old
     # dir in place or recoverable at the aside path — never zero copies
     aside = os.path.join(out_dir, f"_compact_old_{tag}")
@@ -314,14 +463,13 @@ def compact_partition(
         "ds": ds,
         "sink": "parquet",
         "op": "compact",
-        "n_rows": int(n_rows),
+        **metrics,
         "n_files_before": n_before,
         "n_files_after": len(partition_files(out_dir, ds)),
         "wall_s": round(time.monotonic() - t0, 3),
-        "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-        "commit_seq": time.time_ns(),
+        **_commit_stamp(),
     }
-    _write_manifest_row(spark, out_dir, row)
+    _append_manifest(spark, out_dir, [row])
     return row
 
 
@@ -336,8 +484,6 @@ def vacuum_manifest(spark: SparkSession, out_dir: str) -> int:
     n_removed = full.count() - latest.count()
     tmp = mpath + "__vacuum"
     latest.coalesce(1).write.mode("overwrite").parquet(tmp)
-    import shutil
-
     # move-aside-then-delete (same discipline as compact_partition): a
     # crash mid-swap leaves the manifest either in place or recoverable
     # at the aside path — never destroyed

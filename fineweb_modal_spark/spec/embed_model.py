@@ -107,15 +107,6 @@ def signature_one(text: str) -> tuple[int, str]:
     return norm_sq, hashlib.md5(parts.encode("utf-8")).hexdigest()
 
 
-def signature_batch(texts: list[str]) -> tuple[list[int], list[str]]:
-    ns, sigs = [], []
-    for t in texts:
-        n, s = signature_one(t)
-        ns.append(n)
-        sigs.append(s)
-    return ns, sigs
-
-
 def embed_batch_with_sig(
     texts: list[str],
 ) -> tuple[np.ndarray, list[int], list[str]]:

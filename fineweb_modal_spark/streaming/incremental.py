@@ -4,25 +4,25 @@ The reference is batch-only; its incremental story is idempotent
 per-shard reruns (SURVEY.md §2.9). The Spark engine adds the real
 thing:
 
-* `run_pipeline_incremental` — `readStream` over a pages directory +
-  the SAME stateless pipeline DAG (plans/pipeline.py) + `writeStream`
-  parquet with `Trigger.AvailableNow` and a checkpoint: each
-  invocation processes exactly the files that arrived since the last
-  checkpoint commit — exactly-once incremental filtering of a growing
-  crawl, no manifest bookkeeping needed (the checkpoint's file log IS
-  the manifest).
+* `stream_commit_pages` — `readStream` over a pages directory + the
+  SAME stateless pipeline DAG (plans/pipeline.py) + `foreachBatch`
+  into the committed ds=... table (sinks.commit_stream_batch), with
+  `Trigger.AvailableNow` and a checkpoint: each invocation commits
+  exactly the files that arrived since the last checkpoint commit —
+  exactly-once incremental filtering of a growing crawl, into the
+  same table and manifest as the batch sink.
 * `hourly_event_counts` — watermarked event-time windowed aggregation
   over an events stream (late data beyond 1 hour dropped), the
-  canonical streaming agg.
+  canonical streaming agg; the other stateful and train-batch /
+  score-stream operators below share its shape.
 
-Both run on AvailableNow so batch tests and cron-style incremental
+All run on AvailableNow so batch tests and cron-style incremental
 jobs share one code path; a `processingTime` trigger turns the same
 plan into a live stream untouched.
 """
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -88,42 +88,14 @@ def hourly_event_counts(
     return spark.table(query_name)
 
 
-def run_pipeline_incremental(
-    spark: SparkSession, pages_dir: str, out_dir: str, checkpoint: str
-) -> int:
-    """One AvailableNow increment of the full langid→quality→scrub DAG
-    over whatever pages parquet files are new since the checkpoint.
-    Returns the number of rows appended this increment."""
-    schema = spark.read.parquet(pages_dir).schema
-    stream = spark.readStream.schema(schema).parquet(pages_dir)
-    result = pl.pipeline_df(stream).select(
-        "url", "warc_ts", "doc_id", "lang_pred", "lang_conf", "ppl",
-        "keep", "drop_reason", "scrubbed_text",
-    )
-    q = (
-        result.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    progress = q.lastProgress
-    return int(progress["numInputRows"]) if progress else 0
-
-
-def incremental_output(spark: SparkSession, out_dir: str) -> DataFrame:
-    return spark.read.parquet(out_dir)
-
-
 def dedup_stream(
     spark: SparkSession, pages_dir: str, out_dir: str, checkpoint: str
-) -> int:
+) -> None:
     """Streaming exact-dedup on url with a 1-day event-time watermark:
     re-crawled duplicates arriving within the watermark are dropped
     exactly-once across micro-batches (state = seen keys inside the
     watermark window — bounded, unlike an unwatermarked distinct).
-    Returns rows written this increment."""
+    Writes the deduplicated rows to out_dir; returns None."""
     schema = spark.read.parquet(pages_dir).schema
     stream = (
         spark.readStream.schema(schema)
@@ -141,8 +113,6 @@ def dedup_stream(
         .start()
     )
     q.awaitTermination()
-    progress = q.lastProgress
-    return int(progress["numInputRows"]) if progress else 0
 
 
 def attribution_join_stream(
@@ -484,38 +454,24 @@ def stream_commit_pages(
     max_files_per_trigger: int | None = None,
     publish_hook=None,
 ) -> int:
-    """Streaming ingest through the SAME committed ds=... layout as the
-    batch sink (sinks.write_partition) — foreachBatch + the batchId
-    idempotence contract, so a crash at ANY point replays to the
-    identical on-disk state:
+    """Streaming ingest through the SAME committed ds=... table as the
+    batch sink: readStream → pipeline_df → foreachBatch, where each
+    micro-batch runs the DAG once and goes to
+    sinks.commit_stream_batch (stage → deterministic-rename publish →
+    one manifest append). The batchId idempotence contract makes a
+    crash at ANY point replay to the identical on-disk state, and the
+    checkpoint gives exactly-once over arriving files: an invocation
+    commits only the files that landed since the last one.
 
-    1. STAGE  — the micro-batch runs the full pipeline DAG, gets
-       ds/salt partition columns, and is written per-ds under
-       out_dir/_stream_stage/batch=N (mode=overwrite: a replayed batch
-       rebuilds its stage from scratch).
-    2. PUBLISH — the driver moves each staged file to
-       ds=X/stream-b{N:06d}-{i:04d}.parquet. Names are DETERMINISTIC
-       per (batch, position), and any stream-b{N}-* leftovers of a
-       torn earlier attempt are deleted first, so replay converges on
-       the identical file set — no duplicates, no partials.
-    3. MANIFEST — one op='stream_append' lineage row per (ds, batch)
-       with the same n_rows/n_keep/out_chars metrics the batch sink
-       observes; skipped if that (ds, batch) row already exists
-       (crash landed between manifest append and checkpoint advance).
-
-    The published layout is file-identical in shape to the batch
-    sink's, so read_output / compact_partition / vacuum_manifest work
-    unchanged over mixed batch+stream partitions. Scale: the per-batch
-    driver loop touches file NAMES and a collected per-ds metrics row
-    set (both ds-count-sized); row data moves via os.replace only.
+    The per-ds metrics come from a scan of the staged files, and each
+    (ds, batch) manifest row holds the partition's totals after the
+    batch, so read_manifest, read_output, compact_partition and
+    vacuum_manifest work unchanged over streamed and mixed batch+stream
+    partitions.
 
     `publish_hook(phase, epoch_id)` is a test crash-injection point
-    (phase in {'staged', 'published'}). Returns total rows committed
-    by THIS run (sum of manifest rows it appended)."""
-    import glob
-    import os
-    import shutil
-
+    (phase in {'staged', 'published', 'manifested'}). Returns the rows
+    committed by THIS run."""
     from .. import sinks
 
     total = {"n": 0}
@@ -523,109 +479,21 @@ def stream_commit_pages(
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(pages_dir)
 
-    def _publish(bdf: DataFrame, epoch_id: int) -> None:
+    def _commit(bdf: DataFrame, epoch_id: int) -> None:
         part = sinks.with_partition_cols(
             pl.pipeline_df(bdf), granularity=granularity
         ).select(
             "url", "ds", "salt", "doc_id", "lang_pred", "ppl",
             "keep", "drop_reason", "scrubbed_text",
         )
-        stage = os.path.join(out_dir, "_stream_stage", f"batch={epoch_id}")
-        metrics = {
-            str(r["ds"]): r
-            for r in part.groupBy("ds").agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum(F.col("keep").cast("long")).alias("n_keep"),
-                F.sum(F.length("scrubbed_text").cast("long")).alias(
-                    "out_chars"
-                ),
-            ).collect()
-        }
-        for ds in sorted(metrics):
-            part.where(F.col("ds") == F.lit(ds)).repartition(
-                F.col("salt")
-            ).write.mode("overwrite").parquet(os.path.join(stage, f"ds={ds}"))
-        if publish_hook:
-            publish_hook("staged", epoch_id)
-        for ds in sorted(metrics):
-            tgt = os.path.join(out_dir, f"ds={ds}")
-            os.makedirs(tgt, exist_ok=True)
-            for old in glob.glob(
-                os.path.join(tgt, f"stream-b{int(epoch_id):06d}-*.parquet")
-            ):
-                os.remove(old)
-            staged = sorted(
-                f
-                for f in os.listdir(os.path.join(stage, f"ds={ds}"))
-                if f.endswith(".parquet") and not f.startswith("_")
-            )
-            for i, f in enumerate(staged):
-                os.replace(
-                    os.path.join(stage, f"ds={ds}", f),
-                    os.path.join(
-                        tgt, f"stream-b{int(epoch_id):06d}-{i:04d}.parquet"
-                    ),
-                )
-        if publish_hook:
-            publish_hook("published", epoch_id)
-        already: set[tuple[str, int]] = set()
-        try:
-            # mergeSchema: on a mixed batch+stream table the manifest
-            # holds differently-shaped rows (batch-sink rows lack
-            # batch_id); plain schema inference could sample a
-            # batch-row file, drop the column, and silently disable
-            # the replay-dedup guard — a crash-replay would then
-            # double-append manifest rows and double-count totals.
-            man = spark.read.option("mergeSchema", "true").parquet(
-                os.path.join(out_dir, sinks.MANIFEST_DIR)
-            )
-            if "batch_id" in man.columns:
-                already = {
-                    (str(r.ds), int(r.batch_id))
-                    for r in man.where(
-                        F.col("batch_id").isNotNull()
-                    ).select("ds", "batch_id").collect()
-                }
-        except AnalysisException as e:
-            # only the first-commit case (no manifest dir yet) is
-            # benign; any other read failure must not silently turn
-            # off idempotence
-            if "PATH_NOT_FOUND" not in str(e):
-                raise
-        import time as _time
-
-        for ds in sorted(metrics):
-            if (ds, int(epoch_id)) in already:
-                continue
-            m = metrics[ds]
-            sinks._write_manifest_row(
-                spark,
-                out_dir,
-                {
-                    "ds": ds,
-                    "sink": "parquet",
-                    "op": "stream_append",
-                    "batch_id": int(epoch_id),
-                    "n_rows": int(m["n_rows"]),
-                    "n_keep": int(m["n_keep"] or 0),
-                    "out_chars": int(m["out_chars"] or 0),
-                    "committed_at": _time.strftime(
-                        "%Y-%m-%dT%H:%M:%SZ", _time.gmtime()
-                    ),
-                    "commit_seq": _time.time_ns(),
-                },
-            )
-            total["n"] += int(m["n_rows"])
-        if publish_hook:
-            # crash-injection point for the replay-dedup window:
-            # manifest rows appended, checkpoint NOT yet advanced
-            publish_hook("manifested", epoch_id)
-        shutil.rmtree(stage, ignore_errors=True)
+        total["n"] += sinks.commit_stream_batch(
+            spark, part, out_dir, epoch_id, publish_hook
+        )
 
     q = (
-        stream.writeStream.foreachBatch(_publish)
+        reader.parquet(pages_dir)
+        .writeStream.foreachBatch(_commit)
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()

@@ -8,7 +8,7 @@ Ship it exactly as the north rule prescribes::
         jobs/run_pipeline.py \
         --input  /data/sf0.001 \
         --output /out/scored \
-        [--mode batch|resume|incremental] \
+        [--mode batch|resume|stream-commit|...] \
         [--granularity day|minute] \
         [--checkpoint /out/ckpt]
 
@@ -18,14 +18,15 @@ batch        one straight-through run, partitioned committed writes.
 resume       partition-by-partition with manifest checkpointing —
              re-invoking after a failure completes only the missing
              partitions (sinks.resume_run).
-incremental  Structured Streaming AvailableNow over a growing pages
-             directory (streaming/incremental.py); --input must then
-             be a directory of pages parquet (url/warc_ts/text/lang).
-stream-commit  like incremental, but publishing through the SAME
-             committed ds=... layout + manifest lineage rows as
-             batch/resume (stream_commit_pages: replay-safe renames,
-             per-(ds,batch) metrics rows) — stream and batch runs
-             share one output table and one maintenance toolchain.
+stream-commit  Structured Streaming AvailableNow over a growing pages
+             directory (--input: pages parquet, url/warc_ts/text/lang);
+             each invocation commits exactly the files that arrived
+             since the last checkpoint, into the SAME committed ds=...
+             layout + manifest as batch/resume
+             (incremental.stream_commit_pages: one pipeline pass per
+             micro-batch, replay-safe renames, manifest rows holding
+             partition totals) — stream and batch runs share one
+             output table and one maintenance toolchain.
 hygiene      the composed five-stage hygiene pass (domain blocklist →
              recency URL keeper → line dedup → quality keep → scrub)
              over a crawl-feed parquet dir (doc_id/url/warc_ts/text),
@@ -73,13 +74,13 @@ import time
 
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--input", required=True, help="sf dir (batch/resume) or pages parquet dir (incremental)")
+    ap.add_argument("--input", required=True, help="sf dir (batch/resume) or pages parquet dir (stream-commit)")
     ap.add_argument("--output", required=True)
     ap.add_argument(
         "--mode",
         default="batch",
         choices=[
-            "batch", "resume", "incremental", "stream-commit",
+            "batch", "resume", "stream-commit",
             "hygiene", "crawl",
             "train-lm", "score-lm", "train-clf", "score-clf",
             "train-dsir", "score-dsir",
@@ -363,12 +364,6 @@ def main(argv: list[str] | None = None) -> int:
             "rows": back.count(),
             "kept": back.where(F2.col("clf_keep")).count(),
         }
-    elif args.mode == "incremental":
-        from fineweb_modal_spark.streaming import incremental
-
-        ckpt = args.checkpoint or (args.output.rstrip("/") + "_ckpt")
-        n = incremental.run_pipeline_incremental(spark, args.input, args.output, ckpt)
-        out = {"mode": "incremental", "rows_this_increment": n}
     elif args.mode == "stream-commit":
         from fineweb_modal_spark.streaming import incremental
 

@@ -211,10 +211,10 @@ def test_read_output_refuses_partial_when_iceberg_unresolvable(spark, tmp_path):
     sinks.resume_run(spark, _build, out)
     n_parquet_ds = sinks.read_manifest(spark, out).count()
     # forge an iceberg-committed partition row (a ds with no parquet dir)
-    sinks._write_manifest_row(
+    sinks._append_manifest(
         spark,
         out,
-        {
+        [{
             "ds": "9999-01-01-00-00",
             "sink": "iceberg",
             "iceberg_table": "nosuchcat.db.docs",
@@ -224,7 +224,7 @@ def test_read_output_refuses_partial_when_iceberg_unresolvable(spark, tmp_path):
             "wall_s": 0.0,
             "committed_at": "2099-01-01T00:00:00Z",
             "commit_seq": 1,
-        },
+        }],
     )
     with pytest.raises(RuntimeError, match="refusing to return partial"):
         sinks.read_output(spark, out).count()

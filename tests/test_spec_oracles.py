@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from fineweb_modal_spark.operators import langid, perplexity, quality, scrub
+from fineweb_modal_spark.operators import quality, scoring, scrub
 from fineweb_modal_spark.operators.chunker import chunk_documents
 from fineweb_modal_spark.spec import langid_model, quality_rules, scrub_spec
 from fineweb_modal_spark.spec import tokenizer as tok
@@ -87,7 +87,7 @@ def test_langid_matches_oracle(spark):
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(EDGE_TEXTS)], "doc_id long, text string"
     )
-    rows = langid.with_langid(df).select("doc_id", "lang_pred", "lang_conf").collect()
+    rows = scoring.with_scores(df).select("doc_id", "lang_pred", "lang_conf").collect()
     for r in rows:
         want_lang, want_conf = langid_model.predict_one(EDGE_TEXTS[r.doc_id])
         assert r.lang_pred == want_lang
@@ -107,7 +107,7 @@ def test_perplexity_matches_oracle(spark):
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(EDGE_TEXTS)], "doc_id long, text string"
     )
-    rows = perplexity.with_perplexity(df).select("doc_id", "ppl").collect()
+    rows = scoring.with_scores(df).select("doc_id", "ppl").collect()
     for r in rows:
         want = quality_rules.perplexity_py(EDGE_TEXTS[r.doc_id])
         assert r.ppl == pytest.approx(want, rel=1e-6), r.doc_id

@@ -1,5 +1,6 @@
-"""Structured Streaming tests: incremental pipeline (exactly-once via
-checkpoint), watermarked windowed agg, stateful sessionization.
+"""Structured Streaming tests: incremental committed ingest
+(exactly-once via checkpoint), watermarked windowed agg, stateful
+sessionization.
 """
 
 from __future__ import annotations
@@ -16,8 +17,10 @@ SF = "/root/testdata/sf0.001"
 
 def test_incremental_pipeline_exactly_once(spark, tmp_path):
     """Two increments over a growing pages dir: the second run must
-    process ONLY the newly arrived file, and the union must equal the
+    commit ONLY the newly arrived file, and the union must equal the
     batch pipeline's result."""
+    from fineweb_modal_spark import sinks
+
     pages_dir = str(tmp_path / "pages")
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
@@ -25,19 +28,19 @@ def test_incremental_pipeline_exactly_once(spark, tmp_path):
     full = pages_mod.load_pages(spark, SF, with_html=False)
     full.where("doc_id % 2 = 0").coalesce(1).write.mode("append").parquet(pages_dir)
 
-    n1 = incremental.run_pipeline_incremental(spark, pages_dir, out, ckpt)
+    n1 = incremental.stream_commit_pages(spark, pages_dir, out, ckpt)
     assert n1 == full.where("doc_id % 2 = 0").count()
 
     full.where("doc_id % 2 = 1").coalesce(1).write.mode("append").parquet(pages_dir)
-    n2 = incremental.run_pipeline_incremental(spark, pages_dir, out, ckpt)
+    n2 = incremental.stream_commit_pages(spark, pages_dir, out, ckpt)
     assert n2 == full.where("doc_id % 2 = 1").count()
 
-    got = incremental.incremental_output(spark, out)
+    got = sinks.read_output(spark, out)
     assert got.count() == full.count()
     assert got.select("doc_id").distinct().count() == full.count()
 
-    # a third run with nothing new appends nothing
-    n3 = incremental.run_pipeline_incremental(spark, pages_dir, out, ckpt)
+    # a third run with nothing new commits nothing
+    n3 = incremental.stream_commit_pages(spark, pages_dir, out, ckpt)
     assert n3 == 0
 
     # streamed results equal the batch plan row-for-row
@@ -481,6 +484,86 @@ def test_stream_commit_replay_converges(spark, tmp_path):
     assert {(r.ds, r["count"]) for r in gotc.collect()} == {
         (r.ds, r["count"]) for r in want.collect()
     }
+
+
+def test_stream_manifest_rows_hold_partition_totals(spark, tmp_path):
+    """Two micro-batches land in ONE ds: the manifest row in force for
+    that ds must describe the whole partition, not the last batch."""
+    from fineweb_modal_spark import sinks
+
+    pages_dir = str(tmp_path / "pages")
+    out = str(tmp_path / "out")
+    full = pages_mod.load_pages(spark, SF, with_html=False)
+    for parity in (0, 1):
+        full.where(f"doc_id % 2 = {parity}").coalesce(1).write.mode(
+            "append"
+        ).parquet(pages_dir)
+    n = incremental.stream_commit_pages(
+        spark, pages_dir, out, str(tmp_path / "ck"),
+        granularity="day", max_files_per_trigger=1,
+    )
+    assert n == full.count()
+    man = spark.read.parquet(f"{out}/{sinks.MANIFEST_DIR}")
+    assert man.select("batch_id").distinct().count() == 2
+    (got,) = sinks.read_manifest(spark, out).collect()
+    (want,) = (
+        sinks.read_output(spark, out)
+        .groupBy("ds")
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sum(F.col("keep").cast("long")).alias("n_keep"),
+            F.sum(F.length("scrubbed_text").cast("long")).alias("out_chars"),
+        )
+        .collect()
+    )
+    assert (got.n_rows, got.n_keep, got.out_chars) == (
+        want.n_rows, want.n_keep, want.out_chars
+    )
+    assert got.n_rows == full.count()
+
+
+def test_stream_commit_scans_each_page_once(spark, tmp_path):
+    """Each micro-batch runs the DAG once: summed over the run's
+    progress events, numInputRows equals the pages landed, however
+    many ds partitions the batch spans."""
+    import threading
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    class Progress(StreamingQueryListener):
+        def __init__(self):
+            self.rows = 0
+            self.done = threading.Event()
+
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            self.rows += event.progress.numInputRows
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            self.done.set()
+
+    pages_dir = str(tmp_path / "pages")
+    full = pages_mod.load_pages(spark, SF, with_html=False)
+    full.coalesce(1).write.parquet(pages_dir)
+    listener = Progress()
+    spark.streams.addListener(listener)
+    try:
+        incremental.stream_commit_pages(
+            spark, pages_dir, str(tmp_path / "out"), str(tmp_path / "ck"),
+            granularity="minute",
+        )
+        # listener events arrive asynchronously; termination comes last
+        assert listener.done.wait(60)
+    finally:
+        spark.streams.removeListener(listener)
+    n_ds = full.select(F.date_trunc("minute", "warc_ts")).distinct().count()
+    assert n_ds > 1
+    assert listener.rows == full.count()
 
 
 def test_session_window_boundary_semantics(spark):
