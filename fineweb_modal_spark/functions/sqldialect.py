@@ -99,8 +99,8 @@ def occ_count(col: str, needle_sql: str, needle_len: int, d: str) -> str:
     replace/length arithmetic, integer-typed in BOTH dialects
     (DuckDB `/` promotes to DOUBLE, so it gets `//`; Spark gets an
     explicit BIGINT cast). `needle_sql` is an already-rendered SQL
-    expression for the needle (e.g. a chr() concat). Single-sources
-    the div/cast convention that scrub/gopher/langid render inline."""
+    expression for the needle (e.g. a chr() concat). One caller, the
+    encodingfix DuckDB oracle; scrub/gopher/langid count inline."""
     delta = f"(length({col}) - length(replace({col}, {needle_sql}, '')))"
     if d == SPARK:
         return f"CAST({delta} / {needle_len} AS BIGINT)"

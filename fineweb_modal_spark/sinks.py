@@ -12,7 +12,9 @@ engine generalizes that to *partition-granular snapshot commits*:
   partition overwrite;
 * a MANIFEST parquet table records one row per committed partition
   (partition value, row counts, bytes hint, wall seconds, input
-  fingerprint) — these are the "per-partition lineage + metrics rows";
+  fingerprint) — these are the "per-partition lineage + metrics rows",
+  written and read on the driver with pyarrow (no Spark job); each
+  append is one parquet file, published by rename;
 * `resume_run` recomputes only partitions missing from the manifest —
   the kill-and-resume contract (tests/test_resume.py kills mid-run
   and completes on the second invocation without redoing work);
@@ -36,10 +38,14 @@ import glob
 import os
 import shutil
 import time
+import uuid
 from collections.abc import Callable
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.errors import AnalysisException
-from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 N_SALTS = 16
@@ -84,11 +90,8 @@ def list_partitions(df: DataFrame) -> list[str]:
 
 
 def committed_partitions(spark: SparkSession, out_dir: str) -> set[str]:
-    mpath = os.path.join(out_dir, MANIFEST_DIR)
-    try:
-        return {str(r.ds) for r in spark.read.parquet(mpath).select("ds").collect()}
-    except Exception:  # noqa: BLE001 — manifest absent on first run
-        return set()
+    m = _manifest_table(out_dir)
+    return set() if m is None else set(m.column("ds").to_pylist())
 
 
 def _partition_metrics() -> list[Column]:
@@ -114,16 +117,28 @@ def _commit_stamp() -> dict:
     }
 
 
-def _append_manifest(spark: SparkSession, out_dir: str, rows: list[dict]) -> None:
-    """Append manifest rows as ONE parquet write."""
-    mpath = os.path.join(out_dir, MANIFEST_DIR)
-    spark.createDataFrame(rows).coalesce(1).write.mode("append").parquet(mpath)
+def _append_manifest(out_dir: str, rows: list[dict]) -> None:
+    """Append manifest rows (all of one shape) as ONE parquet file."""
+    _write_manifest_file(os.path.join(out_dir, MANIFEST_DIR), pa.Table.from_pylist(rows))
+
+
+def _write_manifest_file(mpath: str, table: pa.Table) -> None:
+    """One new manifest file, written hidden and renamed into place;
+    columns in name order, as Spark's row inference wrote them. No
+    schema metadata: a stale Spark row schema hides columns from Spark."""
+    os.makedirs(mpath, exist_ok=True)
+    name = f"part-{time.time_ns():020d}-{uuid.uuid4().hex[:8]}.parquet"
+    tmp = os.path.join(mpath, "." + name)
+    table = table.select(sorted(table.column_names)).replace_schema_metadata()
+    pq.write_table(table, tmp)
+    os.replace(tmp, os.path.join(mpath, name))
 
 
 def _data_files(d: str) -> list[str]:
+    """Parquet files of `d`, minus `_`/`.`-prefixed names (as Spark)."""
     try:
         return sorted(
-            f for f in os.listdir(d) if f.endswith(".parquet") and not f.startswith("_")
+            f for f in os.listdir(d) if f.endswith(".parquet") and not f.startswith(("_", "."))
         )
     except OSError:
         return []
@@ -177,9 +192,9 @@ def write_partition(
     if sink == "iceberg":
         # recorded so read_output can locate iceberg-committed partitions
         # (they have no parquet directory under out_dir); omitted on the
-        # parquet path — mergeSchema widens reads across row shapes
+        # parquet path — the manifest read unifies the row shapes
         row["iceberg_table"] = tbl
-    _append_manifest(spark, out_dir, [row])
+    _append_manifest(out_dir, [row])
     return row
 
 
@@ -268,7 +283,7 @@ def commit_stream_batch(
             )
     if publish_hook:
         publish_hook("published", batch_id)
-    seen, before = _stream_manifest_state(spark, out_dir, sorted(batch))
+    seen, before = _stream_manifest_state(out_dir, sorted(batch))
     rows = [
         {
             "ds": ds,
@@ -282,7 +297,7 @@ def commit_stream_batch(
         if (ds, int(batch_id)) not in seen
     ]
     if rows:
-        _append_manifest(spark, out_dir, rows)
+        _append_manifest(out_dir, rows)
     if publish_hook:
         # crash-injection point for the replay-dedup window: manifest
         # rows appended, checkpoint NOT yet advanced
@@ -292,30 +307,21 @@ def commit_stream_batch(
 
 
 def _stream_manifest_state(
-    spark: SparkSession, out_dir: str, ds_list: list[str]
+    out_dir: str, ds_list: list[str]
 ) -> tuple[set[tuple[str, int]], dict[str, dict]]:
     """One manifest read for a stream commit over `ds_list`: the
     (ds, batch_id) pairs already committed (the replay guard) and each
     ds's latest _METRICS (the totals the batch adds to)."""
-    try:
-        m = _manifest_rows(spark, out_dir)
-    except AnalysisException as e:
-        # only the first-commit case (no manifest dir yet) is benign;
-        # any other read failure must not silently turn off idempotence
-        if "PATH_NOT_FOUND" not in str(e):
-            raise
+    m = _manifest_table(out_dir)
+    if m is None:
         return set(), {}
+    m = m.filter(pc.is_in(m["ds"], pa.array(ds_list, pa.string())))
     # batch-sink-only manifests have no batch_id column
-    if "batch_id" not in m.columns:
-        m = m.withColumn("batch_id", F.lit(None).cast("long"))
-    rows = (
-        m.where(F.col("ds").isin(ds_list))
-        .withColumn("__rn", _latest_first())
-        .select("ds", "batch_id", "__rn", *_METRICS)
-        .collect()
-    )
-    seen = {(r.ds, int(r.batch_id)) for r in rows if r.batch_id is not None}
-    return seen, {r.ds: _metric_values(r) for r in rows if r["__rn"] == 1}
+    seen = {
+        (r["ds"], r["batch_id"]) for r in m.to_pylist()
+        if r.get("batch_id") is not None
+    }
+    return seen, {r["ds"]: _metric_values(r) for r in _latest_per_ds(m).to_pylist()}
 
 
 def read_output(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -333,32 +339,22 @@ def read_output(spark: SparkSession, out_dir: str) -> DataFrame:
             os.path.join(out_dir, "ds=*")
         )
 
-    try:
-        man = read_manifest(spark, out_dir)
-    except Exception:  # noqa: BLE001 — no manifest yet: plain directory scan
+    m = _manifest_table(out_dir)
+    if m is None or "sink" not in m.column_names:
         return _parquet_scan()
-    if "sink" not in man.columns:
-        return _parquet_scan()
-    ice_rows = man.where(F.col("sink") == "iceberg").select(
-        "ds", *(["iceberg_table"] if "iceberg_table" in man.columns else [])
-    ).collect()
-    if not ice_rows:
-        return _parquet_scan()
-    have_parquet_ds = any(
-        str(r.ds) not in {str(i.ds) for i in ice_rows}
-        for r in man.select("ds").collect()
-    )
-    out = _parquet_scan() if have_parquet_ds else None
+    latest = _latest_per_ds(m)
+    ice_rows = latest.filter(pc.equal(latest["sink"], "iceberg")).to_pylist()
+    out = _parquet_scan() if len(ice_rows) < latest.num_rows else None
     by_table: dict[str, list[str]] = {}
     for r in ice_rows:
-        tbl = getattr(r, "iceberg_table", None)
+        tbl = r.get("iceberg_table")
         if not tbl:
             raise RuntimeError(
-                f"manifest records ds={r.ds} committed to iceberg but no "
+                f"manifest records ds={r['ds']} committed to iceberg but no "
                 "iceberg_table column — cannot locate the data; refusing "
                 "to return partial output"
             )
-        by_table.setdefault(str(tbl), []).append(str(r.ds))
+        by_table.setdefault(tbl, []).append(r["ds"])
     for tbl, ds_list in by_table.items():
         try:
             ice = spark.table(tbl).where(F.col("ds").isin(ds_list))
@@ -374,44 +370,50 @@ def read_output(spark: SparkSession, out_dir: str) -> DataFrame:
     return out
 
 
-def _manifest_rows(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Every manifest row. mergeSchema: maintenance and stream rows
-    (op/compaction/batch_id fields) widen the manifest schema over
-    time — plain inference could sample one row shape and drop the
-    others' columns."""
-    m = spark.read.option("mergeSchema", "true").parquet(
-        os.path.join(out_dir, MANIFEST_DIR)
-    )
-    if "commit_seq" not in m.columns:  # pre-upgrade manifests
-        m = m.withColumn("commit_seq", F.lit(None).cast("long"))
+def _manifest_table(out_dir: str) -> pa.Table | None:
+    """Every manifest row, or None when there is no manifest yet.
+    Stream, compaction and iceberg rows widen the schema over time:
+    the files' schemas are unified (the mergeSchema analog)."""
+    mpath = os.path.join(out_dir, MANIFEST_DIR)
+    files = [os.path.join(mpath, f) for f in _data_files(mpath)]
+    if not files:
+        return None
+    schema = pa.unify_schemas([pq.read_schema(f) for f in files])
+    m = pq.read_table(files, schema=schema, partitioning=None)
+    if "commit_seq" not in m.column_names:  # pre-upgrade manifests
+        m = m.append_column("commit_seq", pa.nulls(m.num_rows, pa.int64()))
     return m
 
 
-def _latest_first() -> Column:
-    """Rank of a manifest row within its ds, 1 = the one in force.
-    committed_at has 1-second resolution — commit_seq (time_ns) breaks
-    same-second ties (e.g. a compaction right after its write); rows
-    from pre-upgrade manifests have NULL seq and lose ties, which is
-    the correct supersedence order."""
-    return F.row_number().over(
-        Window.partitionBy("ds").orderBy(
-            F.desc("committed_at"), F.desc_nulls_last("commit_seq")
-        )
+def _latest_per_ds(m: pa.Table | None) -> pa.Table:
+    """The manifest row in force for each ds (rewrites supersede older
+    rows); raises when there is no manifest. committed_at has 1-second
+    resolution — commit_seq (time_ns) breaks same-second ties (e.g. a
+    compaction right after its write); rows from pre-upgrade manifests
+    have null seq and lose ties, the correct supersedence order."""
+    if m is None:
+        raise FileNotFoundError(f"no {MANIFEST_DIR} to read")
+    m = m.sort_by(  # nulls sort last
+        [("ds", "ascending"), ("committed_at", "descending"), ("commit_seq", "descending")]
     )
+    ds = m["ds"].to_pylist()
+    first = [i for i in range(len(ds)) if i == 0 or ds[i] != ds[i - 1]]
+    # typed: an empty (filtered) manifest must still take cleanly
+    return m.take(pa.array(first, pa.int64()))
 
 
 def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Latest manifest row per ds (rewrites supersede older rows)."""
-    m = _manifest_rows(spark, out_dir)
-    return m.withColumn("__rn", _latest_first()).where("__rn = 1").drop("__rn")
+    """Latest manifest row per ds, as a local relation: filters and
+    collects over it start no Spark job."""
+    return spark.createDataFrame(_latest_per_ds(_manifest_table(out_dir)))
 
 
 def read_output_asof(spark: SparkSession, out_dir: str, as_of: str) -> DataFrame:
     """Snapshot read: only partitions whose manifest commit is ≤ as_of
     (ISO-8601 UTC string) — the parquet-manifest analog of Iceberg
     time travel (`VERSION AS OF` / `TIMESTAMP AS OF`)."""
-    man = read_manifest(spark, out_dir).where(F.col("committed_at") <= as_of)
-    ds_list = [r.ds for r in man.select("ds").collect()]
+    man = _latest_per_ds(_manifest_table(out_dir))
+    ds_list = man.filter(pc.less_equal(man["committed_at"], as_of))["ds"].to_pylist()
     if not ds_list:
         return read_output(spark, out_dir).limit(0)
     return read_output(spark, out_dir).where(F.col("ds").isin(ds_list))
@@ -439,8 +441,6 @@ def compact_partition(
     rename, and appends a superseding manifest row (op='compact') so
     time-travel reads stay consistent; the row re-derives the
     partition's metrics from the compacted files. Returns the row."""
-    import uuid
-
     pdir = os.path.join(out_dir, f"ds={ds}")
     n_before = len(partition_files(out_dir, ds))
     t0 = time.monotonic()
@@ -469,7 +469,7 @@ def compact_partition(
         "wall_s": round(time.monotonic() - t0, 3),
         **_commit_stamp(),
     }
-    _append_manifest(spark, out_dir, [row])
+    _append_manifest(out_dir, [row])
     return row
 
 
@@ -479,16 +479,16 @@ def vacuum_manifest(spark: SparkSession, out_dir: str) -> int:
     vacuum horizon stop resolving, exactly like Iceberg retention.
     Returns the number of rows removed."""
     mpath = os.path.join(out_dir, MANIFEST_DIR)
-    full = spark.read.parquet(mpath)
-    latest = read_manifest(spark, out_dir)
-    n_removed = full.count() - latest.count()
+    full = _manifest_table(out_dir)
+    latest = _latest_per_ds(full)
     tmp = mpath + "__vacuum"
-    latest.coalesce(1).write.mode("overwrite").parquet(tmp)
+    shutil.rmtree(tmp, ignore_errors=True)  # a torn earlier vacuum
+    _write_manifest_file(tmp, latest)
     # move-aside-then-delete (same discipline as compact_partition): a
     # crash mid-swap leaves the manifest either in place or recoverable
     # at the aside path — never destroyed
     aside = mpath + "__vacuum_old"
     os.rename(mpath, aside)
-    shutil.move(tmp, mpath)
+    os.rename(tmp, mpath)
     shutil.rmtree(aside)
-    return int(n_removed)
+    return full.num_rows - latest.num_rows

@@ -89,10 +89,10 @@ def test_report_matches_handcount(spark, docs):
     natural non-ASCII text (3-char quote renders fold 3->1, delta 2
     per count, and C1 strays are counted but not repaired), recompute
     the expectation instead of relying on this identity."""
-    ascii_only = docs.where(
+    n_non_ascii = docs.where(
         F.col("text").rlike("[^\\x20-\\x7e]")
     ).count()
-    assert ascii_only == 0, "fixture gained non-ASCII text"
+    assert n_non_ascii == 0, "fixture gained non-ASCII text"
     rep = ef.anomaly_report(docs).collect()
     assert len(rep) > 0
     for r in rep:

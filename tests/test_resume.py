@@ -212,7 +212,6 @@ def test_read_output_refuses_partial_when_iceberg_unresolvable(spark, tmp_path):
     n_parquet_ds = sinks.read_manifest(spark, out).count()
     # forge an iceberg-committed partition row (a ds with no parquet dir)
     sinks._append_manifest(
-        spark,
         out,
         [{
             "ds": "9999-01-01-00-00",
@@ -251,3 +250,123 @@ def test_vacuum_survives_and_is_crash_safe_layout(spark, tmp_path):
         if f.startswith("_manifest__vacuum")
     ]
     assert leftovers == []
+
+
+def _tiny_df(spark, ds_list=("2024-01-01-00-00", "2024-01-01-00-01")):
+    """A few committed-shape rows per ds, without the pipeline."""
+    return spark.createDataFrame(
+        [
+            (f"http://t.example/{ds}/{i}", ds, i, n * 10 + i, i % 2 == 0,
+             None, f"text {i}")
+            for n, ds in enumerate(ds_list)
+            for i in range(3)
+        ],
+        "url string, ds string, salt long, doc_id long, keep boolean, "
+        "drop_reason string, scrubbed_text string",
+    )
+
+
+def test_unreadable_manifest_fails_loudly(spark, tmp_path):
+    """A corrupt manifest file must raise, not read as "no manifest":
+    otherwise resume_run silently recommits every partition and
+    read_output silently drops iceberg-committed partitions."""
+    import pyarrow as pa
+
+    out = str(tmp_path / "out_corrupt")
+    assert len(sinks.resume_run(spark, _tiny_df, out)) == 2
+    with open(os.path.join(out, sinks.MANIFEST_DIR, "part-x.parquet"), "wb") as f:
+        f.write(b"not a parquet file")
+    with pytest.raises(pa.ArrowInvalid):
+        sinks.resume_run(spark, _tiny_df, out)
+    with pytest.raises(pa.ArrowInvalid):
+        sinks.read_output(spark, out)
+
+
+def test_hidden_files_stay_hidden(spark, tmp_path):
+    """`.`-prefixed files (a torn manifest temp file, a stray hidden
+    file in a ds= or stage dir) are never listed, published or read
+    as manifest rows — the rule Spark and Arrow readers apply."""
+    out = str(tmp_path / "out_hidden")
+    ds0, ds1 = "2024-01-01-00-00", "2024-01-01-00-01"
+    sinks.write_partition(spark, _tiny_df(spark, [ds0]), out, ds0)
+    junk = b"torn write"
+    with open(os.path.join(out, sinks.MANIFEST_DIR, ".part-torn.parquet"), "wb") as f:
+        f.write(junk)
+    with open(os.path.join(out, f"ds={ds0}", ".part-stray.parquet"), "wb") as f:
+        f.write(junk)
+    assert all(not f.startswith(".") for f in sinks.partition_files(out, ds0))
+    assert sinks.committed_partitions(spark, out) == {ds0}
+
+    def stray_in_stage(phase, batch_id):
+        if phase == "staged":
+            stage = os.path.join(out, sinks.STREAM_STAGE_DIR, f"batch={batch_id}")
+            for d in os.listdir(stage):
+                if d.startswith("stage_ds="):
+                    with open(os.path.join(stage, d, ".part-stray.parquet"), "wb") as f:
+                        f.write(junk)
+
+    n = sinks.commit_stream_batch(spark, _tiny_df(spark, [ds1]), out, 0, stray_in_stage)
+    assert n == 3
+    assert all(not f.startswith(".") for f in os.listdir(os.path.join(out, f"ds={ds1}")))
+    assert {r.ds: r.n_rows for r in sinks.read_manifest(spark, out).collect()} == {
+        ds0: 3, ds1: 3,
+    }
+    assert sinks.read_output(spark, out).count() == 6
+
+
+def test_manifest_path_starts_no_spark_job(spark, tmp_path):
+    """The manifest is written and read on the driver: an append, a
+    filtered read_manifest collect and committed_partitions start no
+    Spark job."""
+    out = str(tmp_path / "out_nojob")
+    sc = spark.sparkContext
+    group = "manifest-no-job"
+    sc.setJobGroup(group, "manifest append + reads")
+    try:
+        for i, ds in enumerate(["2024-01-01", "2024-01-02", "2024-01-01"]):
+            sinks._append_manifest(out, [{
+                "ds": ds, "sink": "parquet", "n_rows": i, "n_keep": i,
+                "out_chars": i, "committed_at": f"2024-01-0{i + 1}T00:00:00Z",
+                "commit_seq": i,
+            }])
+        got = (
+            sinks.read_manifest(spark, out)
+            .where(F.col("ds").isin(["2024-01-01"]))
+            .select("ds", "n_rows")
+            .collect()
+        )
+        done = sinks.committed_partitions(spark, out)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert [(r.ds, r.n_rows) for r in got] == [("2024-01-01", 2)]
+    assert done == {"2024-01-01", "2024-01-02"}
+    assert jobs == []
+
+
+def test_pre_upgrade_manifest_reads_merged(spark, tmp_path):
+    """A manifest first written by Spark (no commit_seq column), then
+    appended to on the driver, reads as one table; the old rows'
+    null commit_seq loses a same-second tie to a new row."""
+    out = str(tmp_path / "out_upgrade")
+    mpath = os.path.join(out, sinks.MANIFEST_DIR)
+    stamp = "2024-01-01T00:00:00Z"
+    old = [
+        {"ds": ds, "sink": "parquet", "n_rows": n, "n_keep": n,
+         "out_chars": n, "wall_s": 0.5, "committed_at": stamp}
+        for ds, n in (("a", 1), ("b", 2))
+    ]
+    spark.createDataFrame(old).coalesce(1).write.parquet(mpath)
+    sinks._append_manifest(out, [{
+        "ds": "a", "sink": "parquet", "op": "compact", "n_rows": 10,
+        "n_keep": 10, "out_chars": 10, "committed_at": stamp, "commit_seq": 1,
+    }])
+    assert sinks.committed_partitions(spark, out) == {"a", "b"}
+    man = {r.ds: r for r in sinks.read_manifest(spark, out).collect()}
+    assert (man["a"].n_rows, man["a"].op, man["a"].commit_seq) == (10, "compact", 1)
+    assert (man["b"].n_rows, man["b"].op, man["b"].commit_seq) == (2, None, None)
+    # the mixed file set stays readable by Spark itself
+    merged = spark.read.option("mergeSchema", "true").parquet(mpath)
+    assert merged.count() == 3
+    assert {"op", "commit_seq", "wall_s"} <= set(merged.columns)

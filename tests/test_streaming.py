@@ -522,6 +522,43 @@ def test_stream_manifest_rows_hold_partition_totals(spark, tmp_path):
     assert got.n_rows == full.count()
 
 
+def test_stream_triggers_into_new_ds_keep_manifest_right(spark, tmp_path):
+    """Two AvailableNow triggers, each landing in a ds the manifest has
+    not seen (the second one while a manifest already exists): every
+    ds's manifest row must equal read_output's aggregates."""
+    from fineweb_modal_spark import sinks
+
+    pages_dir = str(tmp_path / "pages")
+    out = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ck")
+    full = pages_mod.load_pages(spark, SF, with_html=False)
+    next_day = full.withColumn("warc_ts", F.col("warc_ts") + F.expr("INTERVAL 1 DAY"))
+    for parity, pages in ((0, full), (1, next_day)):
+        pages.where(f"doc_id % 2 = {parity}").coalesce(1).write.mode(
+            "append"
+        ).parquet(pages_dir)
+        incremental.stream_commit_pages(spark, pages_dir, out, ckpt, granularity="day")
+    # partition discovery reads a day-granular ds back as a DATE
+    want = {
+        str(r.ds): (r.n_rows, r.n_keep, r.out_chars)
+        for r in sinks.read_output(spark, out)
+        .groupBy("ds")
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sum(F.col("keep").cast("long")).alias("n_keep"),
+            F.sum(F.length("scrubbed_text").cast("long")).alias("out_chars"),
+        )
+        .collect()
+    }
+    got = {
+        r.ds: (r.n_rows, r.n_keep, r.out_chars)
+        for r in sinks.read_manifest(spark, out).collect()
+    }
+    assert len(want) == 2
+    assert got == want
+    assert sum(n for n, _, _ in got.values()) == full.count()
+
+
 def test_stream_commit_scans_each_page_once(spark, tmp_path):
     """Each micro-batch runs the DAG once: summed over the run's
     progress events, numInputRows equals the pages landed, however
