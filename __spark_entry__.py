@@ -3,9 +3,9 @@
 ``entry(spark)`` smoke-runs the flagship langid→quality→scrub DAG at
 sf0.01 — the same fixtures the oracle gates use; ``queries()``/
 ``oracle_sql()`` expose every implemented operator (SURVEY.md §2)
-with its DuckDB oracle for the sf0.01 correctness gate, ordered so
-never-driver-validated gates come first (the driver samples the
-first 50 entries). Registry lives in
+with its DuckDB oracle for the sf0.01 correctness gate, in a fixed
+order: a committed front list of gates, then registration order (the
+correctness check samples the first 50 entries). Registry lives in
 fineweb_modal_spark/plans/queries.py.
 """
 

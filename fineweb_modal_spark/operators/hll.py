@@ -39,9 +39,11 @@ HLL_P = 8
 HLL_M = 1 << HLL_P  # 256 buckets
 _W_BITS = 60 - HLL_P  # w < 2^52
 _SCALE = _W_BITS + 1  # max rho = 53; terms 1 << (SCALE - rho) >= 1
-# alpha_m for m >= 128 (Flajolet Fig. 3); both engines evaluate this
-# arithmetic identically under IEEE 754
-_ALPHA = f"(0.7213 / (1 + 1.079 / {HLL_M}.0))"
+# alpha_m for m >= 128 (Flajolet Fig. 3). The constants are cast to
+# DOUBLE: Spark reads a bare 0.7213 as a DECIMAL and divides in decimal
+# scale, which moves the estimate by ~1e-8 relative to DuckDB's double
+# division. In DOUBLE both engines run the same IEEE 754 operations.
+_ALPHA = f"(CAST(0.7213 AS DOUBLE) / (1 + CAST(1.079 AS DOUBLE) / {HLL_M}))"
 
 
 def _bitlen(w: str, d: str) -> str:

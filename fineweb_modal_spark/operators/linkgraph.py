@@ -370,14 +370,30 @@ def _undirected_host_edges(linked: DataFrame) -> DataFrame:
     )
 
 
-def _triangles_degree_oriented(und: DataFrame, deg: DataFrame) -> DataFrame:
-    """(a, b, c) triangle list via degree orientation: each edge
+def host_triangles(linked: DataFrame) -> DataFrame:
+    """(host, degree, n_triangles, cc_ppm): per-host triangle count
+    and local clustering coefficient over the undirected host graph —
+    the link-farm / mutual-admiration-society detector (organic link
+    neighborhoods are sparse; paid networks interlink densely).
+
+    Compact-forward enumeration with degree orientation: each edge
     points low-rank → high-rank where rank = (degree, host), so every
     triangle is found exactly once as a wedge at its lowest-rank
-    vertex plus one closing-edge equi-join. This is the standard
-    power-law-safe enumeration (wedge fan-out O(sqrt(|E|)) per node):
-    a 10^6-degree hub contributes wedges only through its (few)
-    higher-rank neighbors, never deg² pairs."""
+    vertex plus one closing-edge equi-join. Wedge fan-out per node is
+    O(sqrt(|E|)): a 10^6-degree hub contributes wedges only through
+    its (few) higher-rank neighbors, never deg² pairs — the
+    power-law-safe form for web host graphs.
+
+    cc_ppm = 2*T*10^6 DIV (deg*(deg-1)) in exact integer ppm so no
+    float boundary flips a value between engines."""
+    und = _undirected_host_edges(linked).localCheckpoint(eager=False)
+    # degree: each canonical edge contributes to both endpoints
+    deg = (
+        und.select(F.col("u").alias("host"))
+        .unionAll(und.select(F.col("v").alias("host")))
+        .groupBy("host")
+        .agg(F.count(F.lit(1)).alias("degree"))
+    )
     du = deg.select(F.col("host").alias("u"), F.col("degree").alias("du"))
     dv = deg.select(F.col("host").alias("v"), F.col("degree").alias("dv"))
     e = und.join(du, "u").join(dv, "v")
@@ -402,49 +418,7 @@ def _triangles_degree_oriented(und: DataFrame, deg: DataFrame) -> DataFrame:
         | ((F.col("db") == F.col("dc")) & (F.col("b") < F.col("c")))
     )
     closing = o.select(F.col("x").alias("b"), F.col("y").alias("c"))
-    return wedges.join(closing, ["b", "c"]).select("a", "b", "c")
-
-
-def host_triangles(linked: DataFrame, orientation: str = "id") -> DataFrame:
-    """(host, degree, n_triangles, cc_ppm): per-host triangle count
-    and local clustering coefficient over the undirected host graph —
-    the link-farm / mutual-admiration-society detector (organic link
-    neighborhoods are sparse; paid networks interlink densely).
-
-    Compact-forward algorithm, two orientations behind one flag:
-
-    * ``orientation="id"`` (default, the gate/oracle form): canonical
-      edges (u < v) make each triangle a < b < c exactly once, so two
-      equi-joins enumerate it once — wedges (a,b)x(b,c) then a
-      semi-check that closing edge (a,c) exists.
-    * ``orientation="degree"`` (the web-scale form): each edge is
-      oriented low-degree → high-degree (ties by id), every triangle
-      is enumerated once from its LOWEST-RANK vertex, and wedge
-      fan-out per node is provably O(sqrt(|E|)) — a power-law hub
-      with degree d no longer fans out d² wedges. The join SHAPE is
-      identical; only the ordering key changes, so the two variants
-      must return byte-identical results (pinned by
-      tests/test_linkgraph.py equality test).
-
-    cc_ppm = 2*T*10^6 DIV (deg*(deg-1)) in exact integer ppm so no
-    float boundary flips a value between engines."""
-    und = _undirected_host_edges(linked).localCheckpoint(eager=False)
-    # degree: each canonical edge contributes to both endpoints
-    deg = (
-        und.select(F.col("u").alias("host"))
-        .unionAll(und.select(F.col("v").alias("host")))
-        .groupBy("host")
-        .agg(F.count(F.lit(1)).alias("degree"))
-    )
-    if orientation == "degree":
-        tri = _triangles_degree_oriented(und, deg)
-    elif orientation == "id":
-        e1 = und.select(F.col("u").alias("a"), F.col("v").alias("b"))
-        e2 = und.select(F.col("u").alias("b"), F.col("v").alias("c"))
-        e3 = und.select(F.col("u").alias("a"), F.col("v").alias("c"))
-        tri = e1.join(e2, "b").join(e3, ["a", "c"])
-    else:
-        raise ValueError(f"orientation must be 'id' or 'degree': {orientation}")
+    tri = wedges.join(closing, ["b", "c"]).select("a", "b", "c")
     per_host = (
         tri.select(F.col("a").alias("host"))
         .unionAll(tri.select(F.col("b").alias("host")))

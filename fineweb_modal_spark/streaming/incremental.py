@@ -16,12 +16,15 @@ thing:
   canonical streaming agg; the other stateful and train-batch /
   score-stream operators below share its shape.
 
-All run on AvailableNow so batch tests and cron-style incremental
+The memory-sink operators all drain through `run_to_memory`. All
+run on AvailableNow so batch tests and cron-style incremental
 jobs share one code path; a `processingTime` trigger turns the same
 plan into a live stream untouched.
 """
 
 from __future__ import annotations
+
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -29,11 +32,29 @@ from pyspark.sql import functions as F
 from ..plans import pipeline as pl
 
 
-def _events_stream(
+def run_to_memory(df: DataFrame, output_mode: str, checkpoint: str) -> DataFrame:
+    """Drain the streaming `df` with one AvailableNow trigger into a
+    memory sink under a fresh query name; returns the sink's table as
+    a batch DataFrame."""
+    name = f"mem_{uuid.uuid4().hex}"
+    (
+        df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+    return df.sparkSession.table(name)
+
+
+def events_stream(
     spark: SparkSession,
     events_dir: str,
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
+    """A file stream over an events directory, `ts` as TIMESTAMP."""
     schema = spark.read.parquet(events_dir).schema  # schema from footer
     # fixture ts is TIMESTAMP_NTZ; watermarks require TIMESTAMP (LTZ) —
     # gate dispatch pins the session TZ to UTC (plans/queries.py
@@ -50,7 +71,6 @@ def hourly_event_counts(
     spark: SparkSession,
     events_dir: str,
     checkpoint: str,
-    query_name: str = "hourly_counts",
     watermark: str = "1 hour",
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
@@ -64,7 +84,7 @@ def hourly_event_counts(
     silently dropped — the result must equal the batch oracle under
     EVERY legal batch split, not just the single-batch one.
     `max_files_per_trigger` lets tests force that multi-batch split."""
-    ev = _events_stream(spark, events_dir, max_files_per_trigger)
+    ev = events_stream(spark, events_dir, max_files_per_trigger)
     agg = (
         ev.withWatermark("ts", watermark)
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
@@ -76,16 +96,7 @@ def hourly_event_counts(
             F.col("w.start").alias("hour"), "event_type", "n_events", "sum_value"
         )
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return run_to_memory(agg, "complete", checkpoint)
 
 
 def dedup_stream(
@@ -119,7 +130,6 @@ def attribution_join_stream(
     spark: SparkSession,
     events_dir: str,
     checkpoint: str,
-    query_name: str = "attrib_join",
     trigger_type: str = "view",
     target_type: str = "purchase",
     horizon_minutes: int = 30,
@@ -146,13 +156,7 @@ def attribution_join_stream(
     tests can prove matches survive ACROSS micro-batches on buffered
     state. Scale shape: one state-store exchange per side on user_id,
     no other shuffle."""
-    schema = spark.read.parquet(events_dir).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    ev = reader.parquet(events_dir).withColumn(
-        "ts", F.col("ts").cast("timestamp")
-    )
+    ev = events_stream(spark, events_dir, max_files_per_trigger)
     views = (
         ev.where(F.col("event_type") == trigger_type)
         .select(
@@ -199,23 +203,13 @@ def attribution_join_stream(
             F.round("purchase_value", 6).alias("purchase_value"),
         )
     )
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return run_to_memory(joined, "append", checkpoint)
 
 
 def weekly_distinct_sketch(
     spark: SparkSession,
     events_dir: str,
     checkpoint: str,
-    query_name: str = "weekly_hll",
     watermark: str = "1 day",
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
@@ -238,7 +232,7 @@ def weekly_distinct_sketch(
     from ..functions import sqldialect as sd
     from ..operators import hll
 
-    ev = _events_stream(spark, events_dir, max_files_per_trigger)
+    ev = events_stream(spark, events_dir, max_files_per_trigger)
     bucket, rho = hll.register_fragments("event_id", sd.SPARK)
     regs = (
         ev.withWatermark("ts", watermark)
@@ -253,23 +247,13 @@ def weekly_distinct_sketch(
             F.col("w.start").cast("date").alias("week"), "bucket", "m_j"
         )
     )
-    q = (
-        regs.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return hll.estimate(spark.table(query_name))
+    return hll.estimate(run_to_memory(regs, "complete", checkpoint))
 
 
 def windowed_token_histogram(
     spark: SparkSession,
     pages_dir: str,
     checkpoint: str,
-    query_name: str = "token_hist",
     watermark: str = "1 hour",
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
@@ -299,23 +283,13 @@ def windowed_token_histogram(
         .agg(F.count(F.lit(1)).alias("n_tokens"))
         .select(F.col("w.start").alias("win_start"), "token", "n_tokens")
     )
-    q = (
-        hist.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return run_to_memory(hist, "complete", checkpoint)
 
 
 def lm_score_stream(
     spark: SparkSession,
     docs_dir: str,
     checkpoint: str,
-    query_name: str = "lm_scores",
 ) -> DataFrame:
     """Train-batch / score-stream: the bigram LM is frozen from the
     BATCH view of docs_dir, then a readStream over the same directory
@@ -332,23 +306,13 @@ def lm_score_stream(
     model, uni, n_total = ngramlm.train_model(batch)
     stream = spark.readStream.schema(batch.schema).parquet(docs_dir)
     scored = ngramlm.score_against_model(stream, model, uni, n_total)
-    q = (
-        scored.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return run_to_memory(scored, "complete", checkpoint)
 
 
 def dsir_score_stream(
     spark: SparkSession,
     docs_dir: str,
     checkpoint: str,
-    query_name: str = "dsir_scores",
 ) -> DataFrame:
     """Train-batch / score-stream for the DSIR reweighting stage: the
     bucket log-ratio index is frozen from the BATCH view of docs_dir
@@ -368,23 +332,13 @@ def dsir_score_stream(
     scored = stream.select(
         "doc_id", tok_count.alias("tok_count"), lw.alias("lw_micro")
     )
-    q = (
-        scored.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return run_to_memory(scored, "append", checkpoint)
 
 
 def edu_score_stream(
     spark: SparkSession,
     emb_dir: str,
     checkpoint: str,
-    query_name: str = "edu_scores",
 ) -> DataFrame:
     """Train-batch / score-stream for the SEMANTIC admission stage:
     the seed centroid is frozen from the BATCH view of emb_dir, then a
@@ -399,23 +353,13 @@ def edu_score_stream(
     cent = similarity.train_edu_centroid(batch)
     stream = spark.readStream.schema(batch.schema).parquet(emb_dir)
     scored = similarity.edu_scores(stream, cent)
-    q = (
-        scored.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return run_to_memory(scored, "append", checkpoint)
 
 
 def scrub_stats_stream(
     spark: SparkSession,
     pages_dir: str,
     checkpoint: str,
-    query_name: str = "scrub_stats",
 ) -> DataFrame:
     """Live scrub-metrics dashboard: the per-host PII/toxicity hit
     counts computed over a pages STREAM — stateless codegen scrub
@@ -433,16 +377,7 @@ def scrub_stats_stream(
         )
     )
     agg = scrub.scrub_stats(stream, by="host")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return run_to_memory(agg, "complete", checkpoint)
 
 
 def stream_commit_pages(
@@ -506,11 +441,10 @@ def pack_layout_stream(
     spark: SparkSession,
     docs_dir: str,
     checkpoint: str,
-    query_name: str = "pack_layout",
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """The sequence packer IN THE INGEST STREAM: per-source running
-    token offsets are kept as stream state (one BIGINT per source —
+    token offsets are kept as stream state (the offset per source is
     the same |sources|-row relation `seqpack.source_totals` persists
     for the batch-incremental path), and every arriving document is
     emitted with its packed coordinates in append mode.
@@ -522,9 +456,12 @@ def pack_layout_stream(
     `seqpack.sequence_layout` relation (the gate's oracle), and under
     forced multi-batch execution the offsets continue across batches
     (state continuation is pytest-proven equal to the batch layout
-    when files partition doc_id ranges in order). State is
-    O(|sources|), shuffle key is `source` — identical partitioning to
-    the batch window path, so the operator survives a 10^12-doc
+    when files partition doc_id ranges in order). A batch that brings
+    a source's doc_id at or below the last one already packed would
+    make the layout depend on arrival order, so it fails the query
+    instead. State is O(|sources|) — (tokens_so_far, last_doc_id) per
+    source — and the shuffle key is `source`, identical partitioning
+    to the batch window path, so the operator survives a 10^12-doc
     stream."""
     from collections.abc import Iterator as _Iterator
 
@@ -553,11 +490,19 @@ def pack_layout_stream(
             return
         pdf = _pd.concat(frames, ignore_index=True)
         pdf = pdf.sort_values("doc_id").reset_index(drop=True)
-        base = state.get[0] if state.exists else 0
+        base, last_doc_id = state.get if state.exists else (0, None)
+        first = int(pdf["doc_id"].iloc[0])
+        if last_doc_id is not None and first <= last_doc_id:
+            raise ValueError(
+                f"pack_layout_stream: out-of-order input for source "
+                f"{source!r}: doc_id {first} arrived after {last_doc_id}"
+            )
         tok = (pdf["n_chars"].astype("int64") // 4 + 2).astype("int64")
         start = base + tok.cumsum() - tok
         end = start + tok - 1
-        state.update((int(base + int(tok.sum())),))
+        state.update(
+            (int(base + int(tok.sum())), int(pdf["doc_id"].iloc[-1]))
+        )
         yield _pd.DataFrame(
             {
                 "doc_id": pdf["doc_id"].astype("int64"),
@@ -581,17 +526,8 @@ def pack_layout_stream(
     packed = stream.groupBy("source").applyInPandasWithState(
         _pack_fn,
         out_schema,
-        "tokens_so_far bigint",
+        "tokens_so_far bigint, last_doc_id bigint",
         "append",
         GroupStateTimeout.NoTimeout,
     )
-    q = (
-        packed.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return run_to_memory(packed, "append", checkpoint)

@@ -47,60 +47,50 @@ def test_registry_counts_match_docs():
     assert f"**{n_q} queries — {n_o} oracle-checked" in baseline
 
 
-def test_rotation_self_advances_on_driver_artifacts(tmp_path):
-    """The driver validates the FIRST 50 registry entries each round.
-    When a new per-round driver artifact (CORRECTNESS_r*.json) lands
-    at the repo root, the next import must retire its gate names to
-    the registry's tail so the following round's 50-gate budget
-    reaches never-validated gates — with no manual bookkeeping."""
+def test_fixed_gate_order_reads_no_files():
+    """The registry order is one committed front list, then
+    registration order: the stream HLL gate and its batch twin lead,
+    the first 50 gates all carry oracles, and a stray result file in
+    the repo root changes nothing."""
     import json
+    import os
 
     from fineweb_modal_spark.plans import queries as Q
 
-    before = list(Q.queries().keys())
-    front = before[:50]
-    # every front gate must carry an oracle (errorless driver artifact)
+    before = list(Q.queries())
+    assert before[:2] == ["hll_distinct_stream", "hll_distinct_events"]
     oracles = Q.oracles()
-    assert all(n in oracles for n in front)
-    # simulate the driver writing this round's artifact
-    (tmp_path / "CORRECTNESS_r98.json").write_text(
-        json.dumps({"queries": {n: {"hash_match": True} for n in front}})
+    assert all(n in oracles for n in before[:50])
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    forged = os.path.join(root, "CORRECTNESS_r98.json")
+    with open(forged, "w") as f:
+        json.dump({"queries": {n: {"hash_match": True} for n in before}}, f)
+    try:
+        assert list(Q.queries()) == before
+        assert list(Q.oracles()) == [n for n in before if n in oracles]
+    finally:
+        os.remove(forged)
+
+
+def test_gate_scratch_root_removed_at_exit():
+    """Gate scratch dirs live under one per-process root that outlives
+    every gate (their lazy results read from it) and is gone once the
+    process exits."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "import os\n"
+        "from fineweb_modal_spark.plans import queries as Q\n"
+        "d = Q._scratch_dir()\n"
+        "assert os.path.isdir(d) and os.path.isdir(Q._scratch_dir())\n"
+        "print(d)\n"
     )
-    seen = Q._driver_seen(root=str(tmp_path))
-    assert set(front) <= seen
-    # _local full sweeps must NOT retire gates
-    (tmp_path / "CORRECTNESS_local_r98.json").write_text(
-        json.dumps({"queries": {"only_local_gate": {"hash_match": True}}})
-    )
-    assert "only_local_gate" not in Q._driver_seen(root=str(tmp_path))
-    # a gate the driver ran but FAILED must stay unseen (re-queued at
-    # the rotation front until the driver shows it green) — the r4
-    # hll_distinct_stream case; rows-only gates retire on a clean
-    # rows record
-    (tmp_path / "CORRECTNESS_r99.json").write_text(
-        json.dumps({"queries": {
-            "failed_gate": {
-                "rows_match": True, "schema_match": True,
-                "hash_match": False, "spark_rows": 5, "oracle_rows": 5,
-                "err": None,
-            },
-            "errored_gate": {
-                "rows_match": None, "schema_match": None,
-                "hash_match": None, "spark_rows": None,
-                "oracle_rows": None, "err": "spark: boom",
-            },
-            "rows_only_gate": {
-                "rows_match": None, "schema_match": None,
-                "hash_match": None, "spark_rows": 500,
-                "oracle_rows": None, "err": "no_oracle",
-            },
-        }})
-    )
-    seen99 = Q._driver_seen(root=str(tmp_path))
-    assert "failed_gate" not in seen99
-    assert "errored_gate" not in seen99
-    assert "rows_only_gate" in seen99
-    # the real repo root: r4's hash-FAIL re-queues at the very front
-    assert list(Q.queries().keys())[0] == "hll_distinct_stream"
-    # and the live registry (no new artifact in the real root) is stable
-    assert list(Q.queries().keys()) == before
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=root, capture_output=True, text=True, check=True,
+    ).stdout.split()[-1]
+    assert os.path.basename(os.path.dirname(out)).startswith("gate_scratch_")
+    assert not os.path.exists(os.path.dirname(out))

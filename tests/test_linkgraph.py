@@ -207,16 +207,13 @@ def test_host_triangles_ignores_direction_and_multiplicity(spark):
     }
 
 
-def test_host_triangles_degree_orientation_equals_id_orientation(spark):
-    """The web-scale degree-oriented enumeration (wedge fan-out
-    bounded O(sqrt(|E|)) per node) must return byte-identical rows to
-    the id-oriented gate form — on the hand graph AND on the sf0.01
-    fixture host graph (skewed degrees, ties, pendants)."""
-    from fineweb_modal_spark.sources import pages as pages_mod
-
-    # hand graph: K4 + pendant (ties in degree among h1..h3)
+def test_host_triangles_degree_ties_hand_values(spark):
+    """Degree orientation on K4 plus a pendant hung off h3: h0..h2 tie
+    at degree 3 (rank falls back to the host name) and h3 is the
+    highest-rank hub. Each K4 host sits in 3 triangles, the pendant
+    in none — every triangle is enumerated exactly once."""
     edges = [(a, b) for a in range(4) for b in range(4) if a != b]
-    edges += [(0, 4), (4, 0)]
+    edges += [(3, 4), (4, 3)]
     rows = [
         (
             i,
@@ -228,29 +225,14 @@ def test_host_triangles_degree_orientation_equals_id_orientation(spark):
     linked = spark.createDataFrame(
         rows, "doc_id long, url string, html string"
     )
-    by_id = sorted(map(tuple, linkgraph.host_triangles(linked).collect()))
-    by_deg = sorted(
-        map(
-            tuple,
-            linkgraph.host_triangles(linked, orientation="degree").collect(),
-        )
-    )
-    assert by_id == by_deg
-
-    # fixture host graph (the gate's own input: pages with planted
-    # outlinks via linked_pages_sql — skewed degrees, h0 hub)
-    from fineweb_modal_spark.functions import sqldialect as sd
-
-    p = pages_mod.load_pages(spark, "/root/testdata/sf0.01", with_html=False)
-    p.createOrReplaceTempView("pages_tri_eqtest")
-    fixture = spark.sql(
-        linkgraph.linked_pages_sql(sd.SPARK, "pages_tri_eqtest")
-    )
-    f_id = sorted(map(tuple, linkgraph.host_triangles(fixture).collect()))
-    f_deg = sorted(
-        map(
-            tuple,
-            linkgraph.host_triangles(fixture, orientation="degree").collect(),
-        )
-    )
-    assert f_id == f_deg and len(f_id) > 0
+    out = {
+        r.host: (r.degree, r.n_triangles, r.cc_ppm)
+        for r in linkgraph.host_triangles(linked).collect()
+    }
+    assert out == {
+        "h0.example.com": (3, 3, 1000000),
+        "h1.example.com": (3, 3, 1000000),
+        "h2.example.com": (3, 3, 1000000),
+        "h3.example.com": (4, 3, 500000),
+        "h4.example.com": (1, 0, 0),
+    }

@@ -173,7 +173,7 @@ def test_stream_single_batch_equals_batch_layout(spark, docs, tmp_path):
     d = str(tmp_path / "docs")
     docs.select("doc_id", "source", "n_chars").write.parquet(d)
     out = si.pack_layout_stream(
-        spark, d, str(tmp_path / "ckpt"), query_name="t_pack_single"
+        spark, d, str(tmp_path / "ckpt")
     ).collect()
     batch = seqpack.sequence_layout(docs).collect()
     assert _key(out) == _key(batch)
@@ -206,11 +206,38 @@ def test_stream_state_continues_across_batches(spark, docs, tmp_path):
         spark,
         str(d / "*"),
         str(tmp_path / "ckpt"),
-        query_name="t_pack_multi",
         max_files_per_trigger=1,
     ).collect()
     batch = seqpack.sequence_layout(docs).collect()
     assert _key(out) == _key(batch)
+
+
+def test_stream_rejects_out_of_order_doc_ids(spark, docs, tmp_path):
+    """The high doc_id range lands FIRST (earlier mtime), the low range
+    after it: the second micro-batch would pack docs behind offsets
+    already emitted, so the stream must fail instead of returning a
+    layout that differs from the batch one."""
+    import time as _time
+
+    from fineweb_modal_spark.streaming import incremental as si
+
+    d = tmp_path / "docs"
+    d.mkdir()
+    cols = ("doc_id", "source", "n_chars")
+    docs.where(F.col("doc_id") >= 250).select(*cols).coalesce(1).write.parquet(
+        str(d / "batch_a")
+    )
+    _time.sleep(1.1)
+    docs.where(F.col("doc_id") < 250).select(*cols).coalesce(1).write.parquet(
+        str(d / "batch_b")
+    )
+    with pytest.raises(Exception, match="out-of-order input"):
+        si.pack_layout_stream(
+            spark,
+            str(d / "*"),
+            str(tmp_path / "ckpt"),
+            max_files_per_trigger=1,
+        ).collect()
 
 
 def test_plan_has_no_global_sort(spark, docs):

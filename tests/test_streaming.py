@@ -55,7 +55,7 @@ def test_hourly_event_counts_matches_batch(spark, tmp_path):
     events_dir = str(tmp_path / "events")
     spark.read.parquet(table_path(SF, "events")).write.parquet(events_dir)
     got = incremental.hourly_event_counts(
-        spark, events_dir, str(tmp_path / "ck"), query_name="t_hourly"
+        spark, events_dir, str(tmp_path / "ck")
     )
     want = (
         spark.read.parquet(events_dir)
@@ -107,7 +107,7 @@ def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
     events_dir = str(tmp_path / "events")
     spark.read.parquet(table_path(SF, "events")).write.parquet(events_dir)
     got = incremental.attribution_join_stream(
-        spark, events_dir, str(tmp_path / "ck"), query_name="t_attrib"
+        spark, events_dir, str(tmp_path / "ck")
     )
     want = _batch_attribution(spark, events_dir)
     assert want.count() > 0
@@ -134,7 +134,6 @@ def test_stream_stream_join_matches_across_micro_batches(spark, tmp_path):
         spark,
         events_dir,
         str(tmp_path / "ck"),
-        query_name="t_attrib_mb",
         max_files_per_trigger=1,
     )
     want = _batch_attribution(spark, events_dir)
@@ -247,7 +246,6 @@ def test_weekly_hll_sketch_matches_batch(spark, tmp_path):
     ev.write.mode("overwrite").parquet(str(tmp_path / "events"))
     est = incremental.weekly_distinct_sketch(
         spark, str(tmp_path / "events"), str(tmp_path / "ckpt"),
-        query_name="t_weekly_hll",
     ).collect()
     got = {r.week: r.n_est for r in est}
 
@@ -285,7 +283,6 @@ def test_windowed_token_histogram_matches_batch(spark, tmp_path):
         (r.win_start, r.token): r.n_tokens
         for r in inc.windowed_token_histogram(
             spark, str(tmp_path / "pages"), str(tmp_path / "ckpt"),
-            query_name="t_tok_hist",
         ).collect()
     }
     batch = (
@@ -313,7 +310,6 @@ def test_edu_score_stream_equals_batch(spark, tmp_path):
         r.doc_id: (r.edu_cosine, r.edu_score, r.keep)
         for r in inc.edu_score_stream(
             spark, str(tmp_path / "emb"), str(tmp_path / "ckpt"),
-            query_name="t_edu_stream",
         ).collect()
     }
     cent = similarity.train_edu_centroid(emb)
@@ -426,7 +422,6 @@ def test_attrib_left_outer_across_micro_batches(spark, tmp_path):
         spark,
         events_dir,
         str(tmp_path / "ck"),
-        query_name="t_attrib_outer_mb",
         max_files_per_trigger=1,
         how="left_outer",
     )
@@ -744,11 +739,11 @@ def test_gate_streams_stable_under_forced_multi_batch(spark, tmp_path):
 
     single = incremental.hourly_event_counts(
         spark, events_dir, str(tmp_path / "ck_h1"),
-        query_name="mb_hourly_1", watermark="90 days",
+        watermark="90 days",
     )
     multi = incremental.hourly_event_counts(
         spark, events_dir, str(tmp_path / "ck_hN"),
-        query_name="mb_hourly_n", watermark="90 days",
+        watermark="90 days",
         max_files_per_trigger=1,
     )
     assert single.count() == multi.count()
@@ -756,11 +751,11 @@ def test_gate_streams_stable_under_forced_multi_batch(spark, tmp_path):
 
     hll_single = incremental.weekly_distinct_sketch(
         spark, events_dir, str(tmp_path / "ck_w1"),
-        query_name="mb_hll_1", watermark="90 days",
+        watermark="90 days",
     ).collect()
     hll_multi = incremental.weekly_distinct_sketch(
         spark, events_dir, str(tmp_path / "ck_wN"),
-        query_name="mb_hll_n", watermark="90 days",
+        watermark="90 days",
         max_files_per_trigger=1,
     ).collect()
     assert sorted(map(tuple, hll_single)) == sorted(map(tuple, hll_multi))
@@ -771,11 +766,11 @@ def test_gate_streams_stable_under_forced_multi_batch(spark, tmp_path):
     ).write.parquet(pages_dir)
     th_single = incremental.windowed_token_histogram(
         spark, pages_dir, str(tmp_path / "ck_t1"),
-        query_name="mb_tok_1", watermark="30 days",
+        watermark="30 days",
     )
     th_multi = incremental.windowed_token_histogram(
         spark, pages_dir, str(tmp_path / "ck_tN"),
-        query_name="mb_tok_n", watermark="30 days",
+        watermark="30 days",
         max_files_per_trigger=1,
     )
     assert th_single.count() == th_multi.count()
@@ -822,12 +817,12 @@ def test_complete_mode_admits_late_rows_regardless_of_watermark(
 
     wide = incremental.weekly_distinct_sketch(
         spark, flat, str(tmp_path / "ck_wide"),
-        query_name="nc_wide", watermark="90 days",
+        watermark="90 days",
         max_files_per_trigger=1,
     ).collect()
     narrow = incremental.weekly_distinct_sketch(
         spark, flat, str(tmp_path / "ck_narrow"),
-        query_name="nc_narrow", watermark="1 day",
+        watermark="1 day",
         max_files_per_trigger=1,
     ).collect()
     assert len(wide) == len(wks)
