@@ -16,8 +16,10 @@ Plan (scale-first):
      combinable partial agg on (h)-keyed 16-byte rows; text never
      shuffles;
   3. hashes with >= 2 occurrences (a vanishing fraction of a clean
-     corpus) broadcast back over the window relation — clean rows die
-     at the semi-probe, so step 4 touches only duplicated windows;
+     corpus, but not of a raw crawl) semi-joined back onto the window
+     relation — broadcast when AQE sees the set is small, sort-merge
+     otherwise; clean rows die at the semi-probe, so step 4 touches
+     only duplicated windows;
   4. island merge per doc: consecutive duplicated window positions
      (pos - row_number() constant) collapse into [span_start,
      span_end] token ranges — a window agg over the tiny dup set.
@@ -79,7 +81,9 @@ def duplicated_spans(docs: DataFrame) -> DataFrame:
         .where(F.col("occ") >= 2)
         .select("h")
     )
-    dup = win.join(F.broadcast(dup_h), "h", "left_semi")
+    # AQE / the size threshold pick the join: the duplicated-hash set
+    # grows with the duplication of the input (large on a raw crawl)
+    dup = win.join(dup_h, "h", "left_semi")
     w = Window.partitionBy("doc_id").orderBy("pos")
     island = dup.withColumn(
         "island", F.col("pos") - F.row_number().over(w)

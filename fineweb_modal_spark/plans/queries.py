@@ -2677,7 +2677,8 @@ def q_committed_write_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     (salted, manifest + lineage rows) into a temp table, then return
     the manifest — the write layer driven end-to-end inside the gate,
     its per-partition counts re-derived relationally by the oracle
-    (covers S6/S9/A5: the manifest metrics ARE the observe() output)."""
+    (covers S6/S9/A5: the manifest metrics ARE the one aggregate
+    `sinks.commit` runs over its staged files)."""
     from .. import sinks
     from . import pipeline as pl
 
@@ -2704,8 +2705,6 @@ def q_timetravel_read_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition after it, then read as-of the cutoff and re-aggregate.
     The later partition must be invisible, so the result equals the
     same relational derivation the plain write gate uses."""
-    import time as _time
-
     from .. import sinks
     from . import pipeline as pl
 
@@ -2725,14 +2724,13 @@ def q_timetravel_read_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.max("committed_at"))
         .first()[0]
     )
-    _time.sleep(1.1)  # committed_at is second-granular; force separation
     late = spark.createDataFrame(
         [("http://late.example/p", "2099-12-31-00-00", 0, 10**9, True,
           None, "late row")],
         "url string, ds string, salt long, doc_id long, keep boolean, "
         "drop_reason string, scrubbed_text string",
     )
-    sinks.write_partition(spark, late, out, "2099-12-31-00-00")
+    sinks.commit(spark, late, out)
     return (
         sinks.read_output_asof(spark, out, cutoff)
         .groupBy("ds")

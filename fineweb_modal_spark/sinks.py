@@ -6,29 +6,30 @@ input file → same output file, rerun only what failed. The Spark
 engine generalizes that to *partition-granular snapshot commits*:
 
 * output is a parquet table partitioned by a date-ish key (`ds` from
-  `warc_ts`) — the Iceberg mapping is `writeTo(...).overwritePartitions()`
-  per ds; offline (no Iceberg jars) each partition directory is
-  overwritten atomically-enough via `replaceWhere`-style dynamic
-  partition overwrite;
+  `warc_ts`); `commit` is its one write path — batch, resume and
+  stream commits all stage the frame with ONE partitioned write, take
+  the per-ds metrics from one scan of the staged files, then publish
+  each ds by rename (a batch replaces the ds directory through the
+  move-aside swap, a stream micro-batch adds deterministically named
+  files). The Iceberg mapping is one `writeTo(...).overwritePartitions()`
+  from the staged files;
 * a MANIFEST parquet table records one row per committed partition
-  (partition value, row counts, bytes hint, wall seconds, input
-  fingerprint) — these are the "per-partition lineage + metrics rows",
-  written and read on the driver with pyarrow (no Spark job); each
-  append is one parquet file, published by rename;
+  (partition value, row/keep counts, output chars, commit stamp) — these are
+  the "per-partition lineage + metrics rows", written and read on the
+  driver with pyarrow (no Spark job); each ds's row is appended right
+  after its publish as one parquet file, published by rename;
 * `resume_run` recomputes only partitions missing from the manifest —
   the kill-and-resume contract (tests/test_resume.py kills mid-run
   and completes on the second invocation without redoing work);
-* `commit_stream_batch` appends one stream micro-batch to the same
-  table (stage → deterministic-rename publish → manifest), replay-safe
-  under the foreachBatch batchId contract.
+* a stream commit is replay-safe under the foreachBatch batchId
+  contract.
 
 This module is the only one that knows the committed-table format:
 the partition directory and stage file names, the three partition
 metrics (n_rows / n_keep / out_chars) and the manifest row shape.
 
-Metrics ride on `df.observe(...)` so they cost no extra pass; the
-salt column spreads a skewed host across `n_salts` write tasks
-(host-level skew, north rule) while `partitionBy("ds")` keeps the
+The salt column spreads a skewed host across `n_salts` write tasks
+(host-level skew, north rule) while `partitionBy` on ds keeps the
 table layout query-prunable.
 """
 
@@ -45,19 +46,19 @@ import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.errors import AnalysisException
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 N_SALTS = 16
 MANIFEST_DIR = "_manifest"
 STREAM_STAGE_DIR = "_stream_stage"
 # the stage is partitioned on a COPY of ds, so the staged (and then
-# published) files keep their in-file ds column like batch-sink files
+# published) files keep their in-file ds column
 _STAGE_KEY = "stage_ds"
 _METRICS = ("n_rows", "n_keep", "out_chars")
 
-# When set (e.g. spark.conf.set(ICEBERG_TABLE_CONF, "cat.db.docs")), the
-# partition write goes through Iceberg's `writeTo(...).overwritePartitions()`
+# When set (e.g. spark.conf.set(ICEBERG_TABLE_CONF, "cat.db.docs")), a
+# batch commit goes through Iceberg's `writeTo(...).overwritePartitions()`
 # — a real snapshot commit — instead of the parquet-directory overwrite.
 # The table must exist and be partitioned by ds. Offline (no Iceberg
 # catalog/jars) the branch degrades gracefully to the parquet path; the
@@ -104,17 +105,18 @@ def _partition_metrics() -> list[Column]:
 
 
 def _metric_values(m) -> dict:
-    """_METRICS of an observed/aggregated row as ints (empty sums → 0)."""
+    """_METRICS of an aggregated row as ints (empty sums → 0)."""
     return {k: int(m[k] or 0) for k in _METRICS}
 
 
 def _commit_stamp() -> dict:
-    """committed_at has 1-second resolution; commit_seq (time_ns)
-    breaks same-second ties between rows of one ds."""
-    return {
-        "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-        "commit_seq": time.time_ns(),
-    }
+    """committed_at is ISO-8601 UTC with microseconds (one commit
+    publishes many ds within a second, and as-of reads must still
+    order them); commit_seq (time_ns) breaks ties between rows of one
+    ds."""
+    ns = time.time_ns()
+    second = time.strftime("%Y-%m-%dT%H:%M:%S", time.gmtime(ns // 10**9))
+    return {"committed_at": f"{second}.{ns // 1000 % 10**6:06d}Z", "commit_seq": ns}
 
 
 def _append_manifest(out_dir: str, rows: list[dict]) -> None:
@@ -144,58 +146,137 @@ def _data_files(d: str) -> list[str]:
         return []
 
 
-def write_partition(
+def commit(
     spark: SparkSession,
-    df_partition: DataFrame,
+    df: DataFrame,
     out_dir: str,
-    ds: str,
-    extra_lineage: dict | None = None,
-) -> dict:
-    """Overwrite ONE ds partition + append its manifest/metrics row.
+    batch_id: int | None = None,
+    publish_hook: Callable[[str, object], None] | None = None,
+) -> list[dict]:
+    """Commit every ds of `df` to the ds=... table — the one write
+    path of batch, resume and stream commits.
 
-    Idempotent: rerunning a ds replaces its directory and appends a
-    fresh manifest row (readers take the latest row per ds). Iceberg
-    form: `df.writeTo(tbl).overwritePartitions()` + snapshot commit.
-    """
-    obs = Observation(f"metrics_{ds}")
-    observed = df_partition.observe(obs, *_partition_metrics())
+    `df` carries ds/salt/keep/scrubbed_text (with_partition_cols over
+    the pipeline). A batch commit (batch_id None) REPLACES each ds it
+    holds; a stream commit ADDS micro-batch `batch_id` to its ds, and
+    under the foreachBatch batchId contract a crash at ANY point
+    replays to the identical on-disk state.
+
+    1. STAGE — ONE write of `df` (repartition(salt), partitioned on a
+       copy of ds) under out_dir/_stream_stage/batch=N, or batch=replace
+       for a batch commit (no batch id renders to it), overwritten on a
+       rerun; the DAG behind `df` runs once.
+    2. METRICS — one scan of the staged files grouped by ds (ds read
+       back as a string): the same jobs whatever the number of ds.
+    3. PUBLISH, each ds in sorted order. Batch: the staged stage_ds=X
+       directory replaces ds=X by rename (`_swap_dir`). Stream: each
+       staged file moves to ds=X/stream-b{N:06d}-{i:04d}.parquet;
+       names are deterministic per (batch, position), and stream-b{N}-*
+       leftovers of a torn earlier attempt are deleted first, so replay
+       converges on the identical file set.
+    4. MANIFEST — the ds's row is appended right after its publish, so
+       a kill between partitions leaves each published ds committed
+       and a rerun (resume_run) redoes only the rest. A batch row holds
+       the ds's metrics and wall_s (seconds from the commit's start to
+       this row); a stream row (op='stream_append', batch_id) holds the
+       partition's totals AFTER the batch (the ds's latest row + this
+       batch's counts), and a (ds, batch) already in the manifest
+       (crash between manifest append and checkpoint advance) is
+       skipped.
+
+    With ICEBERG_TABLE_CONF set, a batch commit makes ONE
+    `writeTo(tbl).overwritePartitions()` from the staged files instead
+    of the renames, and its rows record sink='iceberg' + iceberg_table.
+    Analysis failures (catalog/jars/table absent) surface before any
+    job runs and fall back to the parquet path; a runtime failure
+    propagates — a parquet retry would hide a half-committed snapshot.
+
+    `publish_hook(phase, key)` is a crash-injection point, called with
+    ('staged', batch_id) once, ('publishing', ds) and ('published', ds)
+    around each ds's publish, and ('manifested', batch_id) after the
+    last manifest row. Returns one row per ds this call committed: its
+    manifest row, except that a stream row's metrics are the batch's
+    own counts (none for a fully replayed batch)."""
+    hook = publish_hook or (lambda phase, key: None)
     t0 = time.monotonic()
+    stream = batch_id is not None
+    stage = os.path.join(
+        out_dir, STREAM_STAGE_DIR, f"batch={batch_id}" if stream else "batch=replace"
+    )
+    staged = df.withColumn(_STAGE_KEY, F.col("ds"))
+    staged.repartition(F.col("salt")).write.mode("overwrite").partitionBy(
+        _STAGE_KEY
+    ).parquet(stage)
+    back = spark.read.schema(staged.schema).parquet(stage)
+    added = {
+        r.ds: _metric_values(r)
+        for r in back.groupBy("ds").agg(*_partition_metrics()).collect()
+    }
+    hook("staged", batch_id)
     sink = "parquet"
-    tbl = spark.conf.get(ICEBERG_TABLE_CONF, None)
-    if tbl:
+    tbl = None if stream else spark.conf.get(ICEBERG_TABLE_CONF, None)
+    if tbl and added:
         try:
-            # Analysis failures (catalog/jars/table absent) surface before
-            # any job runs, so the Observation is untouched and the parquet
-            # fallback below is safe. A mid-write RUNTIME failure must
-            # propagate — masking it with a parquet retry would hide a
-            # half-committed snapshot.
-            observed.repartition(F.col("salt")).writeTo(
-                tbl
-            ).overwritePartitions()
+            back.drop(_STAGE_KEY).writeTo(tbl).overwritePartitions()
             sink = "iceberg"
         except AnalysisException:
-            sink = "parquet"
-    if sink == "parquet":
-        (
-            observed.repartition(F.col("salt"))
-            .write.mode("overwrite")
-            .parquet(os.path.join(out_dir, f"ds={ds}"))
-        )
-    row = {
-        "ds": ds,
-        "sink": sink,
-        **_metric_values(obs.get),
-        "wall_s": round(time.monotonic() - t0, 3),
-        **_commit_stamp(),
-        **(extra_lineage or {}),
-    }
-    if sink == "iceberg":
-        # recorded so read_output can locate iceberg-committed partitions
-        # (they have no parquet directory under out_dir); omitted on the
-        # parquet path — the manifest read unifies the row shapes
-        row["iceberg_table"] = tbl
-    _append_manifest(out_dir, [row])
-    return row
+            pass
+    seen, before = _stream_manifest_state(out_dir, sorted(added)) if stream else (set(), {})
+    rows = []
+    for ds in sorted(added):
+        hook("publishing", ds)
+        src, tgt = os.path.join(stage, f"{_STAGE_KEY}={ds}"), os.path.join(out_dir, f"ds={ds}")
+        if stream:
+            prefix = f"stream-b{batch_id:06d}-"
+            os.makedirs(tgt, exist_ok=True)
+            for old in glob.glob(os.path.join(tgt, f"{prefix}*.parquet")):
+                os.remove(old)
+            for i, f in enumerate(_data_files(src)):
+                os.replace(os.path.join(src, f), os.path.join(tgt, f"{prefix}{i:04d}.parquet"))
+        elif sink == "parquet":
+            _swap_dir(src, tgt)
+        hook("published", ds)
+        if (ds, batch_id) in seen:
+            continue
+        row = {"ds": ds, "sink": sink, **added[ds], **_commit_stamp()}
+        if stream:
+            row.update(op="stream_append", batch_id=batch_id)
+            row.update({k: before.get(ds, {}).get(k, 0) + v for k, v in added[ds].items()})
+        else:
+            row["wall_s"] = round(time.monotonic() - t0, 3)
+        if sink == "iceberg":
+            # iceberg partitions have no parquet directory under out_dir:
+            # read_output locates them by this column
+            row["iceberg_table"] = tbl
+        _append_manifest(out_dir, [row])
+        rows.append({**row, **added[ds]})
+    hook("manifested", batch_id)
+    shutil.rmtree(stage, ignore_errors=True)
+    return rows
+
+
+def _swap_dir(src: str, dst: str) -> None:
+    """Put directory `src` at `dst` by rename (same filesystem). An
+    existing `dst` is moved aside first and deleted last: a crash
+    mid-swap leaves the old copy either in place or recoverable at the
+    `_`-prefixed aside path (hidden from readers) — never zero copies."""
+    aside = os.path.join(os.path.dirname(dst), f"_old_{uuid.uuid4().hex[:8]}")
+    if os.path.exists(dst):
+        os.rename(dst, aside)
+    os.rename(src, dst)
+    shutil.rmtree(aside, ignore_errors=True)
+
+
+def write_partition(
+    spark: SparkSession, df_partition: DataFrame, out_dir: str, ds: str
+) -> dict:
+    """`commit` of a frame holding only `ds`; returns its row. Raises
+    (before publishing it) on any other ds."""
+    def only_ds(phase, key):
+        if phase == "publishing" and key != ds:
+            raise ValueError(f"write_partition(ds={ds!r}) got rows of ds={key!r}")
+
+    return commit(spark, df_partition, out_dir, publish_hook=only_ds)[0]
 
 
 def resume_run(
@@ -204,106 +285,29 @@ def resume_run(
     out_dir: str,
     fail_after: int | None = None,
 ) -> list[dict]:
-    """Process every ds partition not yet in the manifest.
+    """Commit every ds partition not yet in the manifest.
 
     build_df returns the full pipeline DataFrame (must already carry
-    ds/salt/keep/scrubbed_text). Partition loop is driver-side by
-    design — checkpoint granularity IS the partition; each iteration
-    is one distributed job + one manifest commit, exactly the
+    ds/salt/keep/scrubbed_text). The pending rows go through ONE
+    `commit`, which appends each ds's manifest row right after its
+    publish: checkpoint granularity IS the partition, exactly the
     reference's rerun-failed-shards model (SURVEY.md §1.3).
 
-    fail_after: test hook — raise after N commits (kill simulation).
+    fail_after: test hook — raise after N partitions (kill simulation).
     """
     df = build_df(spark)
     done = committed_partitions(spark, out_dir)
-    pending = sorted(set(list_partitions(df)) - done)
-    rows = []
-    for i, ds in enumerate(pending):
-        if fail_after is not None and i >= fail_after:
-            raise RuntimeError(f"injected failure before partition {ds}")
-        part = df.where(F.col("ds") == F.lit(ds))
-        rows.append(write_partition(spark, part, out_dir, ds))
-    return rows
+    if done:
+        df = df.where(~F.col("ds").isin(sorted(done)))
+    started: list[str] = []
 
+    def kill(phase, ds):
+        if phase == "publishing":
+            if len(started) == fail_after:
+                raise RuntimeError(f"injected failure before partition {ds}")
+            started.append(ds)
 
-def commit_stream_batch(
-    spark: SparkSession,
-    df: DataFrame,
-    out_dir: str,
-    batch_id: int,
-    publish_hook: Callable[[str, int], None] | None = None,
-) -> int:
-    """Append one stream micro-batch to the committed ds=... table.
-
-    `df` carries ds/salt/keep/scrubbed_text (with_partition_cols over
-    the pipeline). Under the foreachBatch batchId contract a crash at
-    ANY point replays to the identical on-disk state:
-
-    1. STAGE — ONE write of `df` (repartition(salt), partitioned on a
-       copy of ds) under out_dir/_stream_stage/batch=N, overwritten on
-       replay; the DAG behind `df` runs once. The per-ds metrics come
-       from a scan of the staged files, with ds read back as a string.
-    2. PUBLISH — each staged file moves to
-       ds=X/stream-b{N:06d}-{i:04d}.parquet. Names are deterministic
-       per (batch, position), and stream-b{N}-* leftovers of a torn
-       earlier attempt are deleted first, so replay converges on the
-       identical file set — no duplicates, no partials.
-    3. MANIFEST — one op='stream_append' row per (ds, batch), all in one
-       append, holding the partition's totals AFTER the batch (the ds's
-       latest manifest row + this batch's counts), so read_manifest /
-       read_output_asof / vacuum_manifest stay right for streamed and
-       mixed partitions. A (ds, batch) already in the manifest (crash
-       between manifest append and checkpoint advance) is skipped.
-
-    `publish_hook(phase, batch_id)` is a crash-injection point, called
-    with phase 'staged', 'published' and 'manifested'. Returns the rows
-    this call committed (0 for a fully replayed batch)."""
-    stage = os.path.join(out_dir, STREAM_STAGE_DIR, f"batch={batch_id}")
-    staged = df.withColumn(_STAGE_KEY, F.col("ds"))
-    staged.repartition(F.col("salt")).write.mode("overwrite").partitionBy(
-        _STAGE_KEY
-    ).parquet(stage)
-    batch = {
-        r.ds: _metric_values(r)
-        for r in spark.read.schema(staged.schema).parquet(stage)
-        .groupBy("ds").agg(*_partition_metrics()).collect()
-    }
-    if publish_hook:
-        publish_hook("staged", batch_id)
-    prefix = f"stream-b{int(batch_id):06d}-"
-    for ds in sorted(batch):
-        tgt = os.path.join(out_dir, f"ds={ds}")
-        os.makedirs(tgt, exist_ok=True)
-        for old in glob.glob(os.path.join(tgt, f"{prefix}*.parquet")):
-            os.remove(old)
-        src = os.path.join(stage, f"{_STAGE_KEY}={ds}")
-        for i, f in enumerate(_data_files(src)):
-            os.replace(
-                os.path.join(src, f), os.path.join(tgt, f"{prefix}{i:04d}.parquet")
-            )
-    if publish_hook:
-        publish_hook("published", batch_id)
-    seen, before = _stream_manifest_state(out_dir, sorted(batch))
-    rows = [
-        {
-            "ds": ds,
-            "sink": "parquet",
-            "op": "stream_append",
-            "batch_id": int(batch_id),
-            **{k: before.get(ds, {}).get(k, 0) + v for k, v in batch[ds].items()},
-            **_commit_stamp(),
-        }
-        for ds in sorted(batch)
-        if (ds, int(batch_id)) not in seen
-    ]
-    if rows:
-        _append_manifest(out_dir, rows)
-    if publish_hook:
-        # crash-injection point for the replay-dedup window: manifest
-        # rows appended, checkpoint NOT yet advanced
-        publish_hook("manifested", batch_id)
-    shutil.rmtree(stage, ignore_errors=True)
-    return sum(batch[r["ds"]]["n_rows"] for r in rows)
+    return commit(spark, df, out_dir, publish_hook=None if fail_after is None else kill)
 
 
 def _stream_manifest_state(
@@ -387,10 +391,10 @@ def _manifest_table(out_dir: str) -> pa.Table | None:
 
 def _latest_per_ds(m: pa.Table | None) -> pa.Table:
     """The manifest row in force for each ds (rewrites supersede older
-    rows); raises when there is no manifest. committed_at has 1-second
-    resolution — commit_seq (time_ns) breaks same-second ties (e.g. a
-    compaction right after its write); rows from pre-upgrade manifests
-    have null seq and lose ties, the correct supersedence order."""
+    rows); raises when there is no manifest. commit_seq (time_ns)
+    breaks committed_at ties (second-granular stamps of older rows);
+    rows from pre-upgrade manifests have null seq and lose ties, the
+    correct supersedence order."""
     if m is None:
         raise FileNotFoundError(f"no {MANIFEST_DIR} to read")
     m = m.sort_by(  # nulls sort last
@@ -453,12 +457,7 @@ def compact_partition(
     metrics = _metric_values(
         spark.read.parquet(tmp).agg(*_partition_metrics()).first()
     )
-    # move-aside-then-delete: a crash mid-swap leaves either the old
-    # dir in place or recoverable at the aside path — never zero copies
-    aside = os.path.join(out_dir, f"_compact_old_{tag}")
-    os.rename(pdir, aside)
-    os.rename(tmp, pdir)
-    shutil.rmtree(aside)
+    _swap_dir(tmp, pdir)
     row = {
         "ds": ds,
         "sink": "parquet",
@@ -484,11 +483,5 @@ def vacuum_manifest(spark: SparkSession, out_dir: str) -> int:
     tmp = mpath + "__vacuum"
     shutil.rmtree(tmp, ignore_errors=True)  # a torn earlier vacuum
     _write_manifest_file(tmp, latest)
-    # move-aside-then-delete (same discipline as compact_partition): a
-    # crash mid-swap leaves the manifest either in place or recoverable
-    # at the aside path — never destroyed
-    aside = mpath + "__vacuum_old"
-    os.rename(mpath, aside)
-    os.rename(tmp, mpath)
-    shutil.rmtree(aside)
+    _swap_dir(tmp, mpath)
     return full.num_rows - latest.num_rows

@@ -6,7 +6,8 @@ thing:
 
 * `stream_commit_pages` — `readStream` over a pages directory + the
   SAME stateless pipeline DAG (plans/pipeline.py) + `foreachBatch`
-  into the committed ds=... table (sinks.commit_stream_batch), with
+  into the committed ds=... table (sinks.commit, the batch sink's
+  write path), with
   `Trigger.AvailableNow` and a checkpoint: each invocation commits
   exactly the files that arrived since the last checkpoint commit —
   exactly-once incremental filtering of a growing crawl, into the
@@ -391,12 +392,13 @@ def stream_commit_pages(
 ) -> int:
     """Streaming ingest through the SAME committed ds=... table as the
     batch sink: readStream → pipeline_df → foreachBatch, where each
-    micro-batch runs the DAG once and goes to
-    sinks.commit_stream_batch (stage → deterministic-rename publish →
-    one manifest append). The batchId idempotence contract makes a
-    crash at ANY point replay to the identical on-disk state, and the
-    checkpoint gives exactly-once over arriving files: an invocation
-    commits only the files that landed since the last one.
+    micro-batch runs the DAG once and goes through the batch sink's
+    own `sinks.commit(..., batch_id=epoch_id)` (one staged write →
+    per-ds deterministic-rename publish, each followed by its manifest
+    row). The batchId idempotence contract makes a crash at ANY point
+    replay to the identical on-disk state, and the checkpoint gives
+    exactly-once over arriving files: an invocation commits only the
+    files that landed since the last one.
 
     The per-ds metrics come from a scan of the staged files, and each
     (ds, batch) manifest row holds the partition's totals after the
@@ -404,9 +406,9 @@ def stream_commit_pages(
     vacuum_manifest work unchanged over streamed and mixed batch+stream
     partitions.
 
-    `publish_hook(phase, epoch_id)` is a test crash-injection point
-    (phase in {'staged', 'published', 'manifested'}). Returns the rows
-    committed by THIS run."""
+    `publish_hook` is `sinks.commit`'s crash-injection point (phases
+    'staged', 'publishing', 'published', 'manifested'). Returns the
+    rows committed by THIS run."""
     from .. import sinks
 
     total = {"n": 0}
@@ -422,9 +424,8 @@ def stream_commit_pages(
             "url", "ds", "salt", "doc_id", "lang_pred", "ppl",
             "keep", "drop_reason", "scrubbed_text",
         )
-        total["n"] += sinks.commit_stream_batch(
-            spark, part, out_dir, epoch_id, publish_hook
-        )
+        rows = sinks.commit(spark, part, out_dir, epoch_id, publish_hook)
+        total["n"] += sum(r["n_rows"] for r in rows)
 
     q = (
         reader.parquet(pages_dir)

@@ -60,8 +60,9 @@ ablate       per-rule filter-ablation waterfall (solo / first-fail
              --output and summarized on stdout. One scan, one
              single-row aggregate at any corpus size.
 
-Prints one JSON metrics line to stdout (docs, keep rate, wall
-seconds) — the cluster-side analog of bench.py's contract.
+Every committing mode (batch, resume, stream-commit, hygiene, crawl)
+writes through the one `sinks.commit` path. Prints one JSON metrics
+line to stdout (docs, keep rate, wall seconds).
 """
 
 from __future__ import annotations
@@ -158,12 +159,7 @@ def main(argv: list[str] | None = None) -> int:
             "url", "ds", "salt", "doc_id", "keep", "drop_reason",
             "n_removed", "scrubbed_text",
         )
-        rows = [
-            sinks.write_partition(
-                spark, df.where(F.col("ds") == F.lit(ds)), args.output, ds
-            )
-            for ds in sinks.list_partitions(df)
-        ]
+        rows = sinks.commit(spark, df, args.output)
         out = {
             "mode": args.mode,
             "partitions_committed": len(rows),
@@ -395,27 +391,14 @@ def main(argv: list[str] | None = None) -> int:
 
         if args.mode == "resume":
             rows = sinks.resume_run(spark, build, args.output)
-            out = {
-                "mode": "resume",
-                "partitions_committed": len(rows),
-                "rows": sum(r["n_rows"] for r in rows),
-                "keep": sum(r["n_keep"] for r in rows),
-            }
         else:
-            df = build(spark)
-            parts = sinks.list_partitions(df)
-            rows = [
-                sinks.write_partition(
-                    spark, df.where(F.col("ds") == F.lit(ds)), args.output, ds
-                )
-                for ds in parts
-            ]
-            out = {
-                "mode": "batch",
-                "partitions_committed": len(rows),
-                "rows": sum(r["n_rows"] for r in rows),
-                "keep": sum(r["n_keep"] for r in rows),
-            }
+            rows = sinks.commit(spark, build(spark), args.output)
+        out = {
+            "mode": args.mode,
+            "partitions_committed": len(rows),
+            "rows": sum(r["n_rows"] for r in rows),
+            "keep": sum(r["n_keep"] for r in rows),
+        }
     out["wall_s"] = round(time.monotonic() - t0, 3)
     print(json.dumps(out))
     return 0

@@ -1,10 +1,12 @@
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# the checkout this file lives in, not whatever copy is installed
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from fineweb_modal_spark.session import get_spark  # noqa: E402
 

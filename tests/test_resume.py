@@ -288,7 +288,7 @@ def test_hidden_files_stay_hidden(spark, tmp_path):
     as manifest rows — the rule Spark and Arrow readers apply."""
     out = str(tmp_path / "out_hidden")
     ds0, ds1 = "2024-01-01-00-00", "2024-01-01-00-01"
-    sinks.write_partition(spark, _tiny_df(spark, [ds0]), out, ds0)
+    sinks.commit(spark, _tiny_df(spark, [ds0]), out)
     junk = b"torn write"
     with open(os.path.join(out, sinks.MANIFEST_DIR, ".part-torn.parquet"), "wb") as f:
         f.write(junk)
@@ -305,13 +305,100 @@ def test_hidden_files_stay_hidden(spark, tmp_path):
                     with open(os.path.join(stage, d, ".part-stray.parquet"), "wb") as f:
                         f.write(junk)
 
-    n = sinks.commit_stream_batch(spark, _tiny_df(spark, [ds1]), out, 0, stray_in_stage)
-    assert n == 3
+    rows = sinks.commit(spark, _tiny_df(spark, [ds1]), out, 0, stray_in_stage)
+    assert [(r["ds"], r["n_rows"]) for r in rows] == [(ds1, 3)]
     assert all(not f.startswith(".") for f in os.listdir(os.path.join(out, f"ds={ds1}")))
     assert {r.ds: r.n_rows for r in sinks.read_manifest(spark, out).collect()} == {
         ds0: 3, ds1: 3,
     }
     assert sinks.read_output(spark, out).count() == 6
+
+
+def _jobs_of(spark, group: str, fn) -> int:
+    """Spark jobs started while fn() runs, counted through a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_commit_jobs_independent_of_ds_count(spark, tmp_path):
+    """One staged write and one metrics scan, then renames: a commit
+    over 6 ds starts no more Spark jobs than one over 2 ds."""
+    ds6 = [f"2024-01-01-00-0{i}" for i in range(6)]
+    jobs = {
+        n: _jobs_of(
+            spark, f"commit-{n}-ds",
+            lambda n=n: sinks.commit(spark, _tiny_df(spark, ds6[:n]), str(tmp_path / f"o{n}")),
+        )
+        for n in (2, 6)
+    }
+    assert jobs[2] == jobs[6] > 0, jobs
+    assert sinks.committed_partitions(spark, str(tmp_path / "o6")) == set(ds6)
+
+
+def test_batch_commit_replaces_stream_files(spark, tmp_path):
+    """A batch commit over a ds that holds stream files replaces them:
+    no duplicate rows, and the manifest row in force has the new
+    totals."""
+    out = str(tmp_path / "out_replace")
+    ds0 = "2024-01-01-00-00"
+    sinks.commit(spark, _tiny_df(spark, [ds0]), out, batch_id=0)
+    assert any(f.startswith("stream-b") for f in sinks.partition_files(out, ds0))
+    new = _tiny_df(spark, [ds0]).where(F.col("salt") != 1)
+    (row,) = sinks.commit(spark, new, out)
+    assert not any(f.startswith("stream-b") for f in sinks.partition_files(out, ds0))
+    got = sinks.read_output(spark, out).select("url", "keep", "scrubbed_text")
+    assert sorted(got.collect()) == sorted(new.select("url", "keep", "scrubbed_text").collect())
+    man = sinks.read_manifest(spark, out).collect()
+    assert [(r.ds, r.n_rows, r.n_keep, r.out_chars) for r in man] == [
+        (ds0, 2, 2, 12)
+    ] == [(row["ds"], row["n_rows"], row["n_keep"], row["out_chars"])]
+
+
+def test_crash_between_partitions_leaves_table_readable(spark, tmp_path):
+    """A publish_hook that raises after the first ds of a 3-ds batch
+    commit: the first ds is committed, the others absent, the table
+    readable; a rerun converges on the straight-through output."""
+    out, straight = str(tmp_path / "out_crash"), str(tmp_path / "out_straight")
+    ds3 = ["2024-01-01-00-00", "2024-01-01-00-01", "2024-01-01-00-02"]
+
+    def boom(phase, key):
+        if phase == "publishing" and key != ds3[0]:
+            raise RuntimeError("injected crash after the first ds")
+
+    with pytest.raises(RuntimeError, match="injected crash"):
+        sinks.commit(spark, _tiny_df(spark, ds3), out, publish_hook=boom)
+    assert sinks.committed_partitions(spark, out) == {ds3[0]}
+    assert sorted(f for f in os.listdir(out) if f.startswith("ds=")) == [f"ds={ds3[0]}"]
+    assert {r.ds for r in sinks.read_output(spark, out).collect()} == {ds3[0]}
+
+    sinks.commit(spark, _tiny_df(spark, ds3), out)
+    sinks.commit(spark, _tiny_df(spark, ds3), straight)
+
+    def table(d):
+        rows = sinks.read_output(spark, d).select("url", "ds", "keep", "scrubbed_text")
+        man = sinks.read_manifest(spark, d).select("ds", "n_rows", "n_keep", "out_chars")
+        return sorted(rows.collect()), sorted(man.collect())
+
+    assert table(out) == table(straight)
+    assert len(table(out)[0]) == 9
+
+
+def test_write_partition_commits_exactly_one_ds(spark, tmp_path):
+    """write_partition returns its ds's row, and refuses a frame that
+    holds another ds before publishing anything."""
+    out = str(tmp_path / "out_one")
+    ds0, ds1 = "2024-01-01-00-00", "2024-01-01-00-01"
+    row = sinks.write_partition(spark, _tiny_df(spark, [ds0]), out, ds0)
+    assert (row["ds"], row["n_rows"], row["sink"]) == (ds0, 3, "parquet")
+    with pytest.raises(ValueError, match="got rows of ds"):
+        sinks.write_partition(spark, _tiny_df(spark, [ds0, ds1]), out, ds1)
+    assert sinks.committed_partitions(spark, out) == {ds0}
 
 
 def test_manifest_path_starts_no_spark_job(spark, tmp_path):

@@ -113,3 +113,38 @@ def test_excise_removes_exact_range(spark):
     # doc 2: 40 copied tokens ([1,40]) removed, the 40 unique remain
     assert (r.doc_id, r.n_before, r.n_after) == (2, 80, 40)
     assert r.clean_text == " ".join(z_toks)
+
+
+def test_heavily_duplicated_corpus_matches_oracle(spark):
+    """A raw-crawl-like fixture where >= 30% of the windows are
+    duplicated (the duplicated-hash set is no longer a vanishing
+    minority): the spans still equal the DuckDB oracle's."""
+    import duckdb
+    import pandas as pd
+
+    from fineweb_modal_spark.spec import hashing as H
+
+    base = {i: [f"d{i}t{j}" for j in range(70)] for i in range(0, 40, 2)}
+    rows = [(i, " ".join(t)) for i, t in base.items()]
+    # every odd doc copies a 50-token run of its even neighbour
+    rows += [(i + 1, " ".join(t[10:60] + [f"u{i}x{j}" for j in range(20)])) for i, t in base.items()]
+    rows += [(i, _doc(f"c{i}w", 70)) for i in range(40, 50)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+
+    got = sorted(
+        tuple(r)
+        for r in spandedup.duplicated_spans(docs)
+        .select("doc_id", "span_start", "span_end", "n_windows")
+        .collect()
+    )
+    n_windows = len(rows) * (70 - W + 1)
+    assert sum(r[3] for r in got) / n_windows >= 0.3
+
+    con = duckdb.connect()
+    con.register("fixture", pd.DataFrame(rows, columns=["doc_id", "text"]))
+    want = sorted(
+        tuple(int(x) for x in r)
+        for r in con.execute(spandedup.duplicated_spans_oracle_sql(H.DUCKDB, "fixture")).fetchall()
+    )
+    assert got == want
+    assert len(got) == 40

@@ -28,6 +28,7 @@ from __future__ import annotations
 import hashlib
 import json
 import math
+import os
 import sys
 
 import duckdb
@@ -49,7 +50,7 @@ def _norm_cell(v):
             # so a DuckDB NULL must hash like Spark's None (no gate
             # legitimately computes NaN as a value)
             return "\0"
-        return f"f{v:.6g}"
+        return f"f{v:.12g}"
     if isinstance(v, (int, np.integer)):
         return str(int(v))
     if isinstance(v, bytes):
@@ -81,7 +82,7 @@ def run(
     json_out: str | None = None,
     session_tz: str | None = None,
 ) -> bool:
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entrymod
     from fineweb_modal_spark.session import get_spark
 

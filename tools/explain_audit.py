@@ -14,13 +14,15 @@ Usage: python tools/explain_audit.py [sf_dir] > /dev/null && see PLANS.md
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
-def audit(sf_dir: str, out_path: str = "/root/repo/PLANS.md") -> None:
+def audit(sf_dir: str, out_path: str = os.path.join(ROOT, "PLANS.md")) -> None:
     import __spark_entry__ as entrymod
     from fineweb_modal_spark.session import get_spark
 
