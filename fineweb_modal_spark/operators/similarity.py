@@ -1,6 +1,6 @@
 """Similarity search over embedding columns (array<float>).
 
-Four paths, per the training-data-toolbox contract:
+Five paths, per the training-data-toolbox contract:
 
 * `cosine_topk` — brute-force cosine top-k: the correctness baseline.
   Self-join (broadcast when one side fits) + window row_number. At
@@ -15,14 +15,19 @@ Four paths, per the training-data-toolbox contract:
   self-join replaces the O(n²) cross join — the scale path for
   embedding near-dup removal.
 * `ivf_topk` — a trained IVF index: sampled k-means (Lloyd) with
-  sqrt(n) centroids, broadcast BLAS assignment, and blocked per-cell
-  matmul scoring with hard caps on block size — so no pandas group
-  ever materializes more than CELL_CAP×QUERY_CAP work regardless of
-  corpus size or cell skew.
+  sqrt(n) centroids and broadcast BLAS assignment.
 * `ivf_pq_topk` — IVF-PQ: the same coarse index plus per-subspace
   product-quantization codebooks; candidates ship M small codes
   instead of d floats through the cell shuffle, scored by per-query
   ADC lookup tables.
+* `semantic_dedup` — SemDeDup over the same coarse index.
+
+All three score through ONE block plan, `_blocked_cogroup`: cells are
+salted into (cell, c_salt, q_salt) groups of about `CELL_CAP`
+candidates × `QUERY_CAP` queries (module constants, read at call
+time), and each group is scored in slices of at most that size, so no
+pandas scoring call ever does more than CELL_CAP×QUERY_CAP work
+regardless of corpus size or cell skew.
 
 The reference's index is the LanceDB IVF-PQ build (lancer.py:203-216,
 SURVEY.md S11) — num_partitions=int(n**0.5), metric=cosine, trained
@@ -109,18 +114,18 @@ def cosine_topk(emb: DataFrame, k: int = 3, force: bool = False) -> DataFrame:
         .where(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id", cos.alias("cosine"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
+    return _ranked_topk(pairs, k, "cosine")
+
+
+def _ranked_topk(pairs: DataFrame, k: int, score: str) -> DataFrame:
+    """(query_id, neighbor_id, round(score, 6), rank): the global top-k
+    window over (query_id, neighbor_id, score) pairs — rank ties broken
+    by neighbor_id."""
+    w = Window.partitionBy("query_id").orderBy(F.desc(score), F.asc("neighbor_id"))
     return (
         pairs.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cosine", 6).alias("cosine"),
-            "rank",
-        )
+        .select("query_id", "neighbor_id", F.round(score, 6).alias(score), "rank")
     )
 
 
@@ -331,6 +336,7 @@ def _assign_cells(
     id_col: str = "vec_id",
     emb_col: str = "embedding",
     emit_ccos: bool = False,
+    per_vector=None,
 ) -> DataFrame:
     """Top-`n_probe` nearest centroids per vector, by cosine (ties →
     lowest centroid_id), via one Arrow-batched BLAS matmul against the
@@ -340,7 +346,9 @@ def _assign_cells(
     crank=1 is the home cell (IVF posting list); crank≤n_probe are the
     probe targets when the same relation is used as the query side.
     With emit_ccos a `ccos` column (cosine to the assigned centroid)
-    is appended — the SemDeDup keep-priority key.
+    is appended — the SemDeDup keep-priority key. `per_vector` =
+    (ddl, fn) appends one more column: fn maps a batch's float64
+    embedding matrix to one value per vector (the PQ codes).
     """
     np = _np()
     cent_mat = np.ascontiguousarray(cent_mat, dtype=np.float64)
@@ -370,11 +378,16 @@ def _assign_cells(
             }
             if emit_ccos:
                 out["ccos"] = np.take_along_axis(cos, order, axis=1).ravel()
+            if per_vector:
+                vals = per_vector[1](E)
+                out[per_vector[0].split()[0]] = [vals[i] for i in ridx]
             yield pd.DataFrame(out)
 
     schema = "vec_id bigint, embedding array<double>, vnorm double, cell bigint, crank int"
     if emit_ccos:
         schema += ", ccos double"
+    if per_vector:
+        schema += ", " + per_vector[0]
     return emb.select(
         F.col(id_col).alias(id_col), F.col(emb_col).alias(emb_col)
     ).mapInPandas(fn, schema)
@@ -465,158 +478,147 @@ def load_ivf_index(spark, path: str):
     return ids, mat
 
 
+def _blocked_cogroup(
+    cand: DataFrame, probes: DataFrame, per_block, schema: str
+) -> DataFrame:
+    """The one capped scoring plan of the IVF families: candidates
+    (cell, vec_id, …) meet probes (cell, query_id, …) in blocks, and
+    `per_block(pq, pa)` scores each block (pandas frames; pa holds the
+    candidates) into rows of `schema` (DDL).
+
+    A cell holding n candidates and m probes gets c = ceil(n/CELL_CAP)
+    candidate salts and q = ceil(m/QUERY_CAP) probe salts (pmod of the
+    id's xxhash64, so the spread holds whatever the id pattern); each
+    candidate is copied to the cell's q probe salts and each probe to
+    its c candidate salts, so every (candidate, probe) pair of a cell
+    meets in exactly one (cell, c_salt, q_salt) group — ~CELL_CAP ×
+    QUERY_CAP rows however skewed the cells. Each group is then fed to
+    `per_block` in slices of at most QUERY_CAP probes × CELL_CAP
+    candidates (a hard bound; empty blocks are skipped), so the
+    per-block outputs must merge losslessly (a top-k re-ranked by the
+    caller, an OR). The caps are read at call time (tests shrink them).
+    The per-cell counts are ≤C rows (index metadata, like the centroid
+    table): one grouped pass over both sides, collected, and baked into
+    the plan as literal arrays indexed by cell id (ids are centroid
+    indices < C) — no join, so ONE shuffle on the block key into
+    cogrouped scoring."""
+    cell_cap, query_cap = CELL_CAP, QUERY_CAP
+    rows = (
+        cand.select("cell", F.lit(1).alias("n_c"), F.lit(0).alias("n_q"))
+        .unionByName(probes.select("cell", F.lit(0).alias("n_c"), F.lit(1).alias("n_q")))
+        .groupBy("cell")
+        .agg(F.sum("n_c").alias("n_c"), F.sum("n_q").alias("n_q"))
+        .collect()
+    )
+    salts = {
+        r.cell: {"c": max(1, -(-r.n_c // cell_cap)), "q": max(1, -(-r.n_q // query_cap))}
+        for r in rows
+    }
+    n_cells = 1 + max(salts, default=0)
+
+    def n_salts(side: str) -> Column:
+        arr = ", ".join(str(salts.get(i, {side: 1})[side]) for i in range(n_cells))
+        return F.expr(f"element_at(array({arr}), CAST(cell AS INT) + 1)")
+
+    # distinct block-key names per side: both sides share the caller's
+    # lineage, and identically-named keys trip the ambiguous-self-join
+    # analyzer check inside the cogroup
+    def keyed(df, side, id_col, own, other):
+        return df.select(
+            F.col("cell").alias(f"{side}_cell"),
+            F.pmod(F.xxhash64(id_col), n_salts(own)).alias(f"{side}_{own}"),
+            F.explode(F.sequence(F.lit(0), n_salts(other) - 1)).alias(f"{side}_{other}"),
+            *[c for c in df.columns if c != "cell"],
+        )
+
+    names = [c.split()[0] for c in schema.split(",")]
+
+    def run(pq, pa):
+        import pandas as pd
+
+        parts = [
+            per_block(pq.iloc[i : i + query_cap], pa.iloc[j : j + cell_cap])
+            for i in range(0, len(pq), query_cap)
+            for j in range(0, len(pa), cell_cap)
+        ]
+        return pd.concat(parts) if parts else pd.DataFrame({c: [] for c in names})
+
+    return (
+        keyed(probes, "g", "query_id", "q", "c")
+        .groupBy("g_cell", "g_c", "g_q")
+        .cogroup(keyed(cand, "b", "vec_id", "c", "q").groupBy("b_cell", "b_c", "b_q"))
+        .applyInPandas(run, schema)
+    )
+
+
+def _block_topk(qids, nids, scores, k: int, score: str):
+    """Per-query top-k of one block's (queries × candidates) score
+    matrix, self-pairs masked, (score desc, id asc) tie-break —
+    vectorized lexsort along the last axis; the global window over the
+    merged blocks (`_ranked_topk`) fixes final ranks."""
+    import pandas as pd
+
+    np = _np()
+    masked = np.where(nids[None, :] == qids[:, None], -np.inf, scores)
+    kk = min(k, masked.shape[1])
+    order = np.lexsort((np.broadcast_to(nids, masked.shape), -masked))[:, :kk]
+    vals = np.take_along_axis(masked, order, axis=1).ravel()
+    keep = np.isfinite(vals)
+    return pd.DataFrame(
+        {
+            "query_id": np.repeat(qids, kk)[keep],
+            "neighbor_id": nids[order.ravel()][keep],
+            score: vals[keep],
+        }
+    )
+
+
 def ivf_topk(
-    emb: DataFrame,
-    k: int = 3,
-    n_probe: int = N_PROBE,
-    centroids=None,
-    cell_cap: int = CELL_CAP,
-    query_cap: int = QUERY_CAP,
-    persist: bool = True,
+    emb: DataFrame, k: int = 3, n_probe: int = N_PROBE, centroids=None
 ) -> DataFrame:
     """Top-k cosine neighbors via the trained IVF index.
 
     Plan: one Python stage assigns every vector its home cell AND its
-    n_probe probe cells (BLAS, zero shuffle) → block keys bound each
-    scoring group (c_salt splits cells above CELL_CAP candidates,
-    q_salt splits above QUERY_CAP queries — block matmul, so no pandas
-    group ever exceeds CAP×CAP work however skewed the cells) → ONE
-    shuffle on the block key into cogrouped BLAS scoring → global
-    window top-k. Recall < 1 by design; tests measure it against
-    cosine_topk.
+    n_probe probe cells (BLAS, zero shuffle) → `_blocked_cogroup`
+    scores each (cell, c_salt, q_salt) block, capped at
+    CELL_CAP×QUERY_CAP however skewed the cells, by one block matmul
+    and a per-block top-k → global window top-k. Recall < 1 by
+    design; tests measure it against cosine_topk.
     """
     if centroids is None:
         centroids = train_ivf_centroids(emb)
     cent_ids, cent_mat = centroids
-    # persist=True materializes the assignment relation ONCE via
-    # localCheckpoint — it feeds the size computation AND both cogroup
-    # sides. localCheckpoint (not .persist()): blocks are auto-released
-    # by the ContextCleaner when the relation is dropped, so repeated
-    # calls in a long session neither pin storage memory per call nor
-    # trip CacheManager "already cached" plan matching.
-    a = _assign_cells(emb, cent_ids, cent_mat, n_probe=n_probe)
-    if persist:
-        a = a.localCheckpoint(eager=False)
-    assign = a.where(F.col("crank") == 1).select(
-        "vec_id", "embedding", "vnorm", "cell"
+    # The assignment relation is materialized ONCE via localCheckpoint
+    # — it feeds the size computation AND both cogroup sides.
+    # localCheckpoint (not .persist()): blocks are auto-released by the
+    # ContextCleaner when the relation is dropped, so repeated calls in
+    # a long session neither pin storage memory per call nor trip
+    # CacheManager "already cached" plan matching.
+    a = _assign_cells(emb, cent_ids, cent_mat, n_probe=n_probe).localCheckpoint(
+        eager=False
     )
-    probes = a.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qvec"),
-        F.col("vnorm").alias("qnorm"),
-        "cell",
-    )
-    # Block-size bookkeeping: C rows per side — broadcast both ways.
-    csizes = assign.groupBy("cell").agg(
-        F.ceil(F.count("*") / cell_cap).cast("int").alias("c_salts")
-    )
-    qsizes = probes.groupBy("cell").agg(
-        F.ceil(F.count("*") / query_cap).cast("int").alias("q_salts")
-    )
-    # The size table is ≤C rows (index metadata, same order as the
-    # centroid table itself) — materialize it driver-side and rebuild
-    # with fresh lineage: avoids self-join ambiguity AND keeps the
-    # block-count computation a skew-immune partial agg.
-    size_rows = csizes.join(qsizes, "cell").collect()
-    salted = any(r.c_salts > 1 or r.q_salts > 1 for r in size_rows)
-    if salted:
-        sizes = emb.sparkSession.createDataFrame(
-            [(int(r.cell), int(r.c_salts), int(r.q_salts)) for r in size_rows],
-            "sz_cell bigint, sz_c_salts int, sz_q_salts int",
-        )
-        # distinct block-key names per side: both branches share `a`'s
-        # lineage, and identically-named keys trip the ambiguous-self-join
-        # analyzer check inside the cogroup
-        cand = (
-            assign.join(F.broadcast(sizes), F.col("cell") == F.col("sz_cell"))
-            .withColumn("c_salt", F.pmod(F.col("vec_id"), F.col("sz_c_salts")))
-            .withColumn("q_salt", F.explode(F.expr("sequence(0, sz_q_salts - 1)")))
-            .select(
-                F.col("cell").alias("b_cell"),
-                F.col("c_salt").alias("b_c_salt"),
-                F.col("q_salt").alias("b_q_salt"),
-                "vec_id", "embedding", "vnorm",
-            )
-        )
-        qry = (
-            probes.join(F.broadcast(sizes), F.col("cell") == F.col("sz_cell"))
-            .withColumn("q_salt", F.pmod(F.col("query_id"), F.col("sz_q_salts")))
-            .withColumn("c_salt", F.explode(F.expr("sequence(0, sz_c_salts - 1)")))
-            .select(
-                F.col("cell").alias("g_cell"),
-                F.col("c_salt").alias("g_c_salt"),
-                F.col("q_salt").alias("g_q_salt"),
-                "query_id", "qvec", "qnorm",
-            )
-        )
-    else:
-        # AQE-style data-dependent plan choice: every cell fits one
-        # block, so skip the salting joins/explodes — one cogroup on
-        # the bare cell id. Same result set (single-block top-k ==
-        # blocked top-k after the global window).
-        cand = assign.select(
-            F.col("cell").alias("b_cell"),
-            F.lit(0).alias("b_c_salt"),
-            F.lit(0).alias("b_q_salt"),
-            "vec_id", "embedding", "vnorm",
-        )
-        qry = probes.select(
-            F.col("cell").alias("g_cell"),
-            F.lit(0).alias("g_c_salt"),
-            F.lit(0).alias("g_q_salt"),
-            "query_id", "qvec", "qnorm",
-        )
     np = _np()
 
     def per_block(pq, pa):
-        import pandas as pd
-
-        if len(pq) == 0 or len(pa) == 0:
-            return pd.DataFrame(
-                {"query_id": [], "neighbor_id": [], "cosine": []}
-            ).astype(
-                {"query_id": "int64", "neighbor_id": "int64", "cosine": "float64"}
-            )
         Q = np.stack(pq["qvec"].to_numpy()).astype(np.float64)
         A = np.stack(pa["embedding"].to_numpy()).astype(np.float64)
-        cos = (Q @ A.T) / np.outer(
-            pq["qnorm"].to_numpy(), pa["vnorm"].to_numpy()
-        )
-        qids = pq["query_id"].to_numpy()
-        nids = pa["vec_id"].to_numpy()
-        # mask self-pairs; per-row top-k with (cosine desc, id asc)
-        # tie-break — vectorized lexsort along the last axis, then the
-        # global window over merged blocks fixes final ranks.
-        cosm = np.where(nids[None, :] == qids[:, None], -np.inf, cos)
-        kk = min(k, cosm.shape[1])
-        order = np.lexsort((np.broadcast_to(nids, cosm.shape), -cosm))[:, :kk]
-        vals = np.take_along_axis(cosm, order, axis=1).ravel()
-        keep = np.isfinite(vals)
-        return pd.DataFrame(
-            {
-                "query_id": np.repeat(qids, kk)[keep],
-                "neighbor_id": nids[order.ravel()][keep],
-                "cosine": vals[keep],
-            }
+        cos = (Q @ A.T) / np.outer(pq["qnorm"].to_numpy(), pa["vnorm"].to_numpy())
+        return _block_topk(
+            pq["query_id"].to_numpy(), pa["vec_id"].to_numpy(), cos, k, "cosine"
         )
 
-    pairs = (
-        qry.groupBy("g_cell", "g_c_salt", "g_q_salt")
-        .cogroup(cand.groupBy("b_cell", "b_c_salt", "b_q_salt"))
-        .applyInPandas(
-            per_block, "query_id bigint, neighbor_id bigint, cosine double"
-        )
+    pairs = _blocked_cogroup(
+        a.where(F.col("crank") == 1).select("cell", "vec_id", "embedding", "vnorm"),
+        a.select(
+            "cell",
+            F.col("vec_id").alias("query_id"),
+            F.col("embedding").alias("qvec"),
+            F.col("vnorm").alias("qnorm"),
+        ),
+        per_block,
+        "query_id bigint, neighbor_id bigint, cosine double",
     )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(wq))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id", "neighbor_id", F.round("cosine", 6).alias("cosine"), "rank"
-        )
-    )
+    return _ranked_topk(pairs, k, "cosine")
 
 
 def _ivf_common_ctes(
@@ -805,51 +807,24 @@ def train_pq_codebooks(
 def encode_and_assign_pq(
     emb: DataFrame, cent_ids, cent_mat, codebooks, n_probe: int
 ) -> DataFrame:
-    """One Python stage: coarse cell assignment (top n_probe, as
-    `_assign_cells`) PLUS the PQ codes per vector — so the index build
-    touches each vector exactly once. Output: (vec_id, embedding,
-    vnorm, cell, crank, codes:array<int>)."""
+    """`_assign_cells` plus the PQ codes per vector (L2-argmin per
+    subspace) in the same Python stage — so the index build touches
+    each vector exactly once. Output: (vec_id, embedding, vnorm, cell,
+    crank, codes:array<bigint>)."""
     np = _np()
-    cent_mat = np.ascontiguousarray(cent_mat, dtype=np.float64)
-    cent_ids = np.asarray(cent_ids, dtype=np.int64)
     books = np.ascontiguousarray(codebooks, dtype=np.float64)
-    m, k, sub = books.shape
-    cnorm = np.sqrt((cent_mat * cent_mat).sum(axis=1))
-    npe = min(n_probe, len(cent_ids))
+    m, _, sub = books.shape
 
-    def fn(batches):
-        import pandas as pd
+    def codes(E):
+        out = np.empty((len(E), m), dtype=np.int64)
+        for mi in range(m):
+            Xs = E[:, mi * sub : (mi + 1) * sub]
+            d2 = ((Xs[:, None, :] - books[mi][None, :, :]) ** 2).sum(axis=2)
+            out[:, mi] = np.argmin(d2, axis=1)
+        return out
 
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            E = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            vn = np.sqrt((E * E).sum(axis=1))
-            cos = (E @ cent_mat.T) / np.outer(vn, cnorm)
-            order = np.lexsort(
-                (np.broadcast_to(cent_ids, cos.shape), -cos)
-            )[:, :npe]
-            codes = np.empty((len(E), m), dtype=np.int64)
-            for mi in range(m):
-                Xs = E[:, mi * sub : (mi + 1) * sub]
-                d2 = ((Xs[:, None, :] - books[mi][None, :, :]) ** 2).sum(axis=2)
-                codes[:, mi] = np.argmin(d2, axis=1)
-            ridx = np.repeat(np.arange(len(pdf)), npe)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].to_numpy()[ridx],
-                    "embedding": [E[i] for i in ridx],
-                    "vnorm": vn[ridx],
-                    "cell": cent_ids[order].ravel(),
-                    "crank": np.tile(np.arange(1, npe + 1), len(pdf)),
-                    "codes": [codes[i] for i in ridx],
-                }
-            )
-
-    return emb.select("vec_id", "embedding").mapInPandas(
-        fn,
-        "vec_id bigint, embedding array<double>, vnorm double, "
-        "cell bigint, crank int, codes array<bigint>",
+    return _assign_cells(
+        emb, cent_ids, cent_mat, n_probe, per_vector=("codes array<bigint>", codes)
     )
 
 
@@ -859,7 +834,6 @@ def ivf_pq_topk(
     n_probe: int = N_PROBE,
     centroids=None,
     codebooks=None,
-    persist: bool = True,
 ) -> DataFrame:
     """Top-k by APPROXIMATE inner product via IVF-PQ: probe the
     n_probe nearest cells, score candidates from their M-byte PQ codes
@@ -867,9 +841,11 @@ def ivf_pq_topk(
     codebook_m[c]); score = Σ_m LUT[m][codes[m]]). The candidate
     relation carries codes only — at 10^12 vectors that is the
     difference between shipping PQ_M=16 uint8 codes and 64 floats per candidate
-    through the cell shuffle. Returns (query_id, neighbor_id, score,
-    rank); score is the approximate dot product (recall measured in
-    tests against exact cosine_topk)."""
+    through the cell shuffle. Scoring runs through `_blocked_cogroup`,
+    so a hot cell's score matrix and LUTs stay within
+    CELL_CAP×QUERY_CAP. Returns (query_id, neighbor_id, score, rank);
+    score is the approximate dot product (recall measured in tests
+    against exact cosine_topk)."""
     if centroids is None:
         centroids = train_ivf_centroids(emb)
     if codebooks is None:
@@ -878,67 +854,32 @@ def ivf_pq_topk(
     np = _np()
     books = np.ascontiguousarray(codebooks, dtype=np.float64)
     m, _, sub = books.shape
-    a = encode_and_assign_pq(emb, cent_ids, cent_mat, books, n_probe)
-    if persist:  # see ivf_topk's persist note
-        a = a.localCheckpoint(eager=False)
-    cand = a.where(F.col("crank") == 1).select(
-        F.col("cell").alias("b_cell"), "vec_id", "codes"
-    )
-    qry = a.select(
-        F.col("cell").alias("g_cell"),
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qvec"),
+    # materialized once, as in ivf_topk
+    a = encode_and_assign_pq(emb, cent_ids, cent_mat, books, n_probe).localCheckpoint(
+        eager=False
     )
 
-    def per_cell(pq, pa):
-        import pandas as pd
-
-        if len(pq) == 0 or len(pa) == 0:
-            return pd.DataFrame(
-                {"query_id": [], "neighbor_id": [], "score": []}
-            ).astype(
-                {"query_id": "int64", "neighbor_id": "int64", "score": "float64"}
-            )
+    def per_block(pq, pa):
         Q = np.stack(pq["qvec"].to_numpy()).astype(np.float64)
         codes = np.stack(pa["codes"].to_numpy()).astype(np.int64)
-        qids = pq["query_id"].to_numpy()
-        nids = pa["vec_id"].to_numpy()
         # LUTs: for each query, per-subspace dot with every codebook
         # entry — (nq, m, k) = einsum over the query's subvectors
-        Qs = Q.reshape(len(Q), m, sub)
-        luts = np.einsum("qms,mks->qmk", Qs, books)
+        luts = np.einsum("qms,mks->qmk", Q.reshape(len(Q), m, sub), books)
         # gather: score[q, c] = sum_m luts[q, m, codes[c, m]]
         scores = luts[:, np.arange(m)[None, :], codes[:, :]].sum(axis=2)
-        cosm = np.where(nids[None, :] == qids[:, None], -np.inf, scores)
-        kk = min(k, cosm.shape[1])
-        order = np.lexsort((np.broadcast_to(nids, cosm.shape), -cosm))[:, :kk]
-        vals = np.take_along_axis(cosm, order, axis=1).ravel()
-        keep = np.isfinite(vals)
-        return pd.DataFrame(
-            {
-                "query_id": np.repeat(qids, kk)[keep],
-                "neighbor_id": nids[order.ravel()][keep],
-                "score": vals[keep],
-            }
+        return _block_topk(
+            pq["query_id"].to_numpy(), pa["vec_id"].to_numpy(), scores, k, "score"
         )
 
-    pairs = (
-        qry.groupBy("g_cell")
-        .cogroup(cand.groupBy("b_cell"))
-        .applyInPandas(
-            per_cell, "query_id bigint, neighbor_id bigint, score double"
-        )
+    pairs = _blocked_cogroup(
+        a.where(F.col("crank") == 1).select("cell", "vec_id", "codes"),
+        a.select(
+            "cell", F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
+        ),
+        per_block,
+        "query_id bigint, neighbor_id bigint, score double",
     )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("neighbor_id")
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(wq))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id", "neighbor_id", F.round("score", 6).alias("score"), "rank"
-        )
-    )
+    return _ranked_topk(pairs, k, "score")
 
 
 def ivf_pq_oracle_sql(
@@ -1102,93 +1043,30 @@ def corpus_with_semdup_vectors_sql(d: str, table: str = "embeddings") -> str:
 
 
 def semantic_dedup(
-    emb: DataFrame,
-    tau: float = SEM_TAU,
-    centroids=None,
-    cell_cap: int = CELL_CAP,
-    query_cap: int = QUERY_CAP,
-    persist: bool = True,
+    emb: DataFrame, tau: float = SEM_TAU, centroids=None
 ) -> DataFrame:
     """(vec_id, cell, centroid_cos, keep) for every input vector.
 
     Plan shape matches `ivf_topk`: one zero-shuffle BLAS assignment
-    stage (home cell + centroid cosine), block keys that salt any
-    cell above the caps (dominance is OR-decomposable across
-    candidate blocks, so salting is lossless), ONE shuffle into the
-    cogrouped pairwise stage, then a distinct on dropped ids and a
-    broadcast-sized left join back. Within a block the cosine matrix
-    is computed in query chunks so peak memory stays O(chunk × cap).
+    stage (home cell + centroid cosine), then `_blocked_cogroup` —
+    blocks capped at CELL_CAP×QUERY_CAP (dominance is OR-decomposable
+    across candidate blocks, so salting is lossless) — then a distinct
+    on dropped ids and a broadcast-sized left join back. Within a block
+    the cosine matrix is computed in query chunks so peak memory stays
+    O(chunk × cap).
     """
     if centroids is None:
         centroids = train_ivf_centroids(emb)
     cent_ids, cent_mat = centroids
-    a = _assign_cells(emb, cent_ids, cent_mat, n_probe=1, emit_ccos=True)
-    if persist:
-        a = a.localCheckpoint(eager=False)
-    assign = a.select("vec_id", "embedding", "vnorm", "cell", "ccos")
-
-    sizes_rows = (
-        assign.groupBy("cell")
-        .agg(
-            F.ceil(F.count("*") / cell_cap).cast("int").alias("c_salts"),
-            F.ceil(F.count("*") / query_cap).cast("int").alias("q_salts"),
-        )
-        .collect()
-    )
-    salted = any(r.c_salts > 1 or r.q_salts > 1 for r in sizes_rows)
-    if salted:
-        sizes = emb.sparkSession.createDataFrame(
-            [(int(r.cell), int(r.c_salts), int(r.q_salts)) for r in sizes_rows],
-            "sz_cell bigint, sz_c_salts int, sz_q_salts int",
-        )
-        cand = (
-            assign.join(F.broadcast(sizes), F.col("cell") == F.col("sz_cell"))
-            .withColumn("c_salt", F.pmod(F.col("vec_id"), F.col("sz_c_salts")))
-            .withColumn("q_salt", F.explode(F.expr("sequence(0, sz_q_salts - 1)")))
-            .select(
-                F.col("cell").alias("b_cell"),
-                F.col("c_salt").alias("b_c_salt"),
-                F.col("q_salt").alias("b_q_salt"),
-                "vec_id", "embedding", "vnorm", "ccos",
-            )
-        )
-        qry = (
-            assign.join(F.broadcast(sizes), F.col("cell") == F.col("sz_cell"))
-            .withColumn("q_salt", F.pmod(F.col("vec_id"), F.col("sz_q_salts")))
-            .withColumn("c_salt", F.explode(F.expr("sequence(0, sz_c_salts - 1)")))
-            .select(
-                F.col("cell").alias("g_cell"),
-                F.col("c_salt").alias("g_c_salt"),
-                F.col("q_salt").alias("g_q_salt"),
-                F.col("vec_id").alias("query_id"),
-                F.col("embedding").alias("qvec"),
-                F.col("vnorm").alias("qnorm"),
-                F.col("ccos").alias("qccos"),
-            )
-        )
-    else:
-        cand = assign.select(
-            F.col("cell").alias("b_cell"),
-            F.lit(0).alias("b_c_salt"),
-            F.lit(0).alias("b_q_salt"),
-            "vec_id", "embedding", "vnorm", "ccos",
-        )
-        qry = assign.select(
-            F.col("cell").alias("g_cell"),
-            F.lit(0).alias("g_c_salt"),
-            F.lit(0).alias("g_q_salt"),
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("qvec"),
-            F.col("vnorm").alias("qnorm"),
-            F.col("ccos").alias("qccos"),
-        )
+    # materialized once, as in ivf_topk
+    assign = _assign_cells(
+        emb, cent_ids, cent_mat, n_probe=1, emit_ccos=True
+    ).localCheckpoint(eager=False)
     np = _np()
 
     def per_block(pq, pa):
         import pandas as pd
 
-        if len(pq) == 0 or len(pa) == 0:
-            return pd.DataFrame({"vec_id": []}).astype({"vec_id": "int64"})
         A = np.stack(pa["embedding"].to_numpy()).astype(np.float64)
         an = pa["vnorm"].to_numpy()
         aids = pa["vec_id"].to_numpy()
@@ -1198,7 +1076,7 @@ def semantic_dedup(
         qpri_all = np.round(pq["qccos"].to_numpy(), 6)
         Q_all = np.stack(pq["qvec"].to_numpy()).astype(np.float64)
         dropped = []
-        chunk = max(1, (1 << 22) // max(1, len(pa)))  # ≤ ~4M cells per matrix
+        chunk = max(1, (1 << 22) // len(pa))  # ≤ ~4M cells per matrix
         for s in range(0, len(pq), chunk):
             e = min(s + chunk, len(pq))
             cos = np.round(
@@ -1214,9 +1092,18 @@ def semantic_dedup(
         return pd.DataFrame({"vec_id": np.concatenate(dropped)})
 
     dropped = (
-        qry.groupBy("g_cell", "g_c_salt", "g_q_salt")
-        .cogroup(cand.groupBy("b_cell", "b_c_salt", "b_q_salt"))
-        .applyInPandas(per_block, "vec_id bigint")
+        _blocked_cogroup(
+            assign.select("cell", "vec_id", "embedding", "vnorm", "ccos"),
+            assign.select(
+                "cell",
+                F.col("vec_id").alias("query_id"),
+                F.col("embedding").alias("qvec"),
+                F.col("vnorm").alias("qnorm"),
+                F.col("ccos").alias("qccos"),
+            ),
+            per_block,
+            "vec_id bigint",
+        )
         .distinct()
         .withColumn("dom", F.lit(True))
     )

@@ -2914,7 +2914,15 @@ from ..operators import hll as hll_op  # noqa: E402
 # property that lets 100-TB shards compute distincts independently and
 # combine without re-shuffling keys. Registers and the fixed-point
 # estimate re-derive bit-identically in DuckDB, so the gate hash-pins
-# the ESTIMATES, not just rows.
+# the ESTIMATES, not just rows. The estimate and its relative error
+# leave as ppm fixed-point BIGINTs, from the same SQL text on both
+# engines, so no large-magnitude DOUBLE reaches the fingerprint (the
+# streaming twin below also renders its week as an ISO string).
+_HLL_PPM_COLS = (
+    "CAST(round(n_est * 1e6) AS BIGINT) AS n_est_ppm",
+    "CAST(round(abs(n_est - n_exact) / n_exact * 1e6) AS BIGINT)"
+    " AS rel_err_ppm",
+)
 _HLL_ORACLE = f"""
 WITH est AS ({hll_op.estimate_oracle_sql(
     "SELECT event_type, event_id FROM events", "event_id", "event_type")}),
@@ -2925,9 +2933,8 @@ exact AS (
   UNION ALL
   SELECT 'ALL', CAST(count(DISTINCT event_id) AS BIGINT) FROM events
 )
-SELECT e.grp, x.n_exact, e.n_est,
-       round(abs(e.n_est - x.n_exact) / x.n_exact, 6) AS rel_err
-FROM est e JOIN exact x ON x.grp = e.grp
+SELECT grp, n_exact, {", ".join(_HLL_PPM_COLS)}
+FROM est e JOIN exact x USING (grp)
 """
 
 
@@ -2946,14 +2953,7 @@ def q_hll_distinct_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("ALL").alias("grp"), "n_exact"
     )
     exact = ex_t.unionByName(ex_all)
-    return est.join(exact, "grp").select(
-        "grp",
-        "n_exact",
-        "n_est",
-        F.round(F.abs(F.col("n_est") - F.col("n_exact")) / F.col("n_exact"), 6).alias(
-            "rel_err"
-        ),
-    )
+    return est.join(exact, "grp").selectExpr("grp", "n_exact", *_HLL_PPM_COLS)
 
 
 # Streaming HLL: the sketch family composed with Structured Streaming.
@@ -2963,13 +2963,6 @@ def q_hll_distinct_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 # windows align to the unix epoch, rendered below as date arithmetic.
 _WEEK_EXPR_DUCK = (
     "(DATE '1970-01-01' + CAST(floor(epoch(ts) / 604800) * 7 AS INT))"
-)
-# Output columns are hash-trivial on both engines: an ISO-string week
-# and ppm fixed-point BIGINTs, from the same SQL text on both sides.
-_HLL_PPM_COLS = (
-    "CAST(round(n_est * 1e6) AS BIGINT) AS n_est_ppm",
-    "CAST(round(abs(n_est - n_exact) / n_exact * 1e6) AS BIGINT)"
-    " AS rel_err_ppm",
 )
 
 

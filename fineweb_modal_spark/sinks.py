@@ -331,24 +331,31 @@ def _stream_manifest_state(
 def read_output(spark: SparkSession, out_dir: str) -> DataFrame:
     """All committed partitions, across sinks.
 
+    The manifest's latest row per ds says which partitions are
+    committed and where each lives: parquet partitions are read from
+    exactly the ds=X directories it names (basePath keeps ds a
+    partition column, so a ds filter still prunes); a published ds
+    with no manifest row yet (a crash between publish and manifest
+    append) is not committed and is not read. Only a table with no
+    manifest at all falls back to every ds=X directory on disk.
     Partitions committed through the Iceberg branch leave no parquet
-    directory under out_dir — reading only the parquet layout would
-    silently drop them. The manifest's sink/iceberg_table columns say
-    where each ds actually lives: parquet partitions come off the
-    directory scan, iceberg partitions are read from their table and
+    directory under out_dir: they are read from their table and
     unioned by name. An iceberg manifest row whose table can no longer
     be resolved raises instead of returning partial data."""
-    def _parquet_scan() -> DataFrame:
+    def _parquet_scan(ds_list) -> DataFrame:
         return spark.read.option("basePath", out_dir).parquet(
-            os.path.join(out_dir, "ds=*")
+            *(os.path.join(out_dir, f"ds={ds}") for ds in ds_list)
         )
 
     m = _manifest_table(out_dir)
-    if m is None or "sink" not in m.column_names:
-        return _parquet_scan()
-    latest = _latest_per_ds(m)
-    ice_rows = latest.filter(pc.equal(latest["sink"], "iceberg")).to_pylist()
-    out = _parquet_scan() if len(ice_rows) < latest.num_rows else None
+    if m is None:
+        return _parquet_scan(
+            sorted(d[3:] for d in os.listdir(out_dir) if d.startswith("ds="))
+        )
+    latest = _latest_per_ds(m).to_pylist()
+    ice_rows = [r for r in latest if r.get("sink") == "iceberg"]
+    parquet_ds = [r["ds"] for r in latest if r.get("sink") != "iceberg"]
+    out = _parquet_scan(parquet_ds) if parquet_ds else None
     by_table: dict[str, list[str]] = {}
     for r in ice_rows:
         tbl = r.get("iceberg_table")

@@ -389,6 +389,24 @@ def test_crash_between_partitions_leaves_table_readable(spark, tmp_path):
     assert len(table(out)[0]) == 9
 
 
+def test_read_output_skips_published_ds_without_manifest_row(spark, tmp_path):
+    """A crash after a ds's rename but before its manifest row leaves a
+    ds=X directory on disk that is not committed: read_output returns
+    only the ds the manifest names."""
+    out = str(tmp_path / "out_torn")
+    ds3 = ["2024-01-01-00-00", "2024-01-01-00-01", "2024-01-01-00-02"]
+
+    def boom(phase, key):
+        if (phase, key) == ("published", ds3[1]):
+            raise RuntimeError("injected crash before the manifest row")
+
+    with pytest.raises(RuntimeError, match="injected crash"):
+        sinks.commit(spark, _tiny_df(spark, ds3), out, publish_hook=boom)
+    assert os.path.isdir(os.path.join(out, f"ds={ds3[1]}"))
+    assert sinks.committed_partitions(spark, out) == {ds3[0]}
+    assert sorted(r.ds for r in sinks.read_output(spark, out).collect()) == [ds3[0]] * 3
+
+
 def test_write_partition_commits_exactly_one_ds(spark, tmp_path):
     """write_partition returns its ds's row, and refuses a frame that
     holds another ds before publishing anything."""

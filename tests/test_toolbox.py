@@ -15,6 +15,8 @@ from fineweb_modal_spark.operators import binpack, dedup, multimodal, similarity
 from fineweb_modal_spark.sources import pages as pages_mod
 from fineweb_modal_spark.sources.tables import load_table
 
+from .conftest import SF_ORACLE
+
 SF = "/root/testdata/sf0.001"
 
 
@@ -294,7 +296,7 @@ def test_cluster_resolution_collapses_near_dups(spark, corpus):
         assert keeper[k] == k  # keepers are fixed points
 
 
-def test_ivf_blocked_scoring_matches_unsalted(spark):
+def test_ivf_blocked_scoring_matches_unsalted(spark, monkeypatch):
     """Force tiny block caps so every cell splits into several
     c_salt×q_salt blocks; blocked BLAS scoring + global window must
     return exactly the single-block result (block top-k merge is
@@ -302,10 +304,100 @@ def test_ivf_blocked_scoring_matches_unsalted(spark):
     emb = load_table(spark, SF, "embeddings")
     cents = similarity.train_ivf_centroids(emb)
     plain = similarity.ivf_topk(emb, k=3, centroids=cents).collect()
-    blocked = similarity.ivf_topk(
-        emb, k=3, centroids=cents, cell_cap=7, query_cap=11
+    monkeypatch.setattr(similarity, "CELL_CAP", 7)
+    monkeypatch.setattr(similarity, "QUERY_CAP", 11)
+    blocked = similarity.ivf_topk(emb, k=3, centroids=cents).collect()
+    assert sorted(map(tuple, blocked)) == sorted(map(tuple, plain))
+
+
+def test_ivf_pq_blocked_scoring_matches_unsalted(spark, monkeypatch):
+    """The IVF-PQ family scores through the same capped blocks: tiny
+    caps split every cell, and the merged result equals the
+    single-block one."""
+    emb = load_table(spark, SF, "embeddings")
+    cents = similarity.train_ivf_centroids(emb)
+    books = similarity.train_pq_codebooks(emb)
+    plain = similarity.ivf_pq_topk(
+        emb, k=3, centroids=cents, codebooks=books
+    ).collect()
+    monkeypatch.setattr(similarity, "CELL_CAP", 7)
+    monkeypatch.setattr(similarity, "QUERY_CAP", 11)
+    blocked = similarity.ivf_pq_topk(
+        emb, k=3, centroids=cents, codebooks=books
     ).collect()
     assert sorted(map(tuple, blocked)) == sorted(map(tuple, plain))
+
+
+@pytest.fixture(scope="module")
+def hot_cell(spark):
+    """The sf0.01 embeddings plus 300 scaled copies of vector 0 (ids
+    100001..100300): a copy has its source's cosine profile, so all
+    301 land in one cell — a hot cell ~14× the mean cell size."""
+    load_table(spark, SF_ORACLE, "embeddings").createOrReplaceTempView("hot_src")
+    return spark.sql(
+        "SELECT vec_id, embedding FROM hot_src UNION ALL "
+        "SELECT 100000 + i AS vec_id, "
+        "transform(embedding, x -> CAST(x * (1 + i / 1000.0) AS FLOAT)) AS embedding "
+        "FROM hot_src LATERAL VIEW explode(sequence(1, 300)) t AS i "
+        "WHERE vec_id = 0"
+    ).localCheckpoint()
+
+
+def test_hot_cell_blocks_stay_within_caps(spark, monkeypatch, hot_cell):
+    """On a hot cell, the shared scoring plan splits the cell over
+    several (cell, c_salt, q_salt) groups, hands the per-block function
+    (here a probe over the IVF-PQ frames, returning len(pq) and
+    len(pa)) at most CELL_CAP candidates × QUERY_CAP queries, and lets
+    every (candidate, probe) pair of a cell meet exactly once.
+    ivf_pq_topk under those caps equals its default-cap result."""
+    import pandas as pd
+
+    cents = similarity.train_ivf_centroids(hot_cell)
+    books = similarity.train_pq_codebooks(hot_cell)
+    a = similarity.encode_and_assign_pq(
+        hot_cell, *cents, books, similarity.N_PROBE
+    ).localCheckpoint()
+    cand = a.where(F.col("crank") == 1).select("cell", "vec_id", "codes")
+    probes = a.select(
+        "cell", F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
+    )
+    n_cand = {r.cell: r["count"] for r in cand.groupBy("cell").count().collect()}
+    n_probe = {r.cell: r["count"] for r in probes.groupBy("cell").count().collect()}
+    hot = max(n_cand, key=n_cand.get)
+    assert n_cand[hot] > 300
+
+    monkeypatch.setattr(similarity, "CELL_CAP", 32)
+    monkeypatch.setattr(similarity, "QUERY_CAP", 32)
+    blocks = similarity._blocked_cogroup(
+        cand,
+        probes,
+        lambda pq, pa: pd.DataFrame(
+            {
+                "cell": [pq["g_cell"].iloc[0]],
+                "salts": [f'{pq["g_c"].iloc[0]}/{pq["g_q"].iloc[0]}'],
+                "nq": [len(pq)],
+                "nc": [len(pa)],
+            }
+        ),
+        "cell bigint, salts string, nq bigint, nc bigint",
+    ).collect()
+    assert all(b.nq <= 32 and b.nc <= 32 for b in blocks)
+    pairs: dict[int, int] = {}
+    for b in blocks:
+        pairs[b.cell] = pairs.get(b.cell, 0) + b.nq * b.nc
+    assert pairs == {c: n_cand[c] * n_probe[c] for c in n_cand}
+    # the split happens in Spark, not only inside the pandas call
+    hot_groups = {b.salts for b in blocks if b.cell == hot}
+    assert len(hot_groups) == -(-n_cand[hot] // 32) * -(-n_probe[hot] // 32)
+
+    capped = similarity.ivf_pq_topk(
+        hot_cell, k=3, centroids=cents, codebooks=books
+    ).collect()
+    monkeypatch.undo()
+    default = similarity.ivf_pq_topk(
+        hot_cell, k=3, centroids=cents, codebooks=books
+    ).collect()
+    assert sorted(map(tuple, capped)) == sorted(map(tuple, default))
 
 
 def test_url_normalize_and_dedup(spark):
@@ -705,7 +797,7 @@ def test_semantic_dedup_drops_planted_pairs(spark):
     assert untouched == []
 
 
-def test_semantic_dedup_blocked_matches_unsalted(spark):
+def test_semantic_dedup_blocked_matches_unsalted(spark, monkeypatch):
     """Forcing tiny caps (every cell salted into many blocks) must
     reproduce the unsalted result exactly — dominance is
     OR-decomposable across candidate blocks."""
@@ -716,11 +808,11 @@ def test_semantic_dedup_blocked_matches_unsalted(spark):
         r.vec_id: (r.cell, r.centroid_cos, r.keep)
         for r in similarity.semantic_dedup(corpus, centroids=cents).collect()
     }
+    monkeypatch.setattr(similarity, "CELL_CAP", 7)
+    monkeypatch.setattr(similarity, "QUERY_CAP", 5)
     blocked = {
         r.vec_id: (r.cell, r.centroid_cos, r.keep)
-        for r in similarity.semantic_dedup(
-            corpus, centroids=cents, cell_cap=7, query_cap=5
-        ).collect()
+        for r in similarity.semantic_dedup(corpus, centroids=cents).collect()
     }
     assert plain == blocked
 
