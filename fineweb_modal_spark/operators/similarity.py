@@ -24,10 +24,10 @@ Five paths, per the training-data-toolbox contract:
 
 All three score through ONE block plan, `_blocked_cogroup`: cells are
 salted into (cell, c_salt, q_salt) groups of about `CELL_CAP`
-candidates × `QUERY_CAP` queries (module constants, read at call
-time), and each group is scored in slices of at most that size, so no
-pandas scoring call ever does more than CELL_CAP×QUERY_CAP work
-regardless of corpus size or cell skew.
+candidates × `QUERY_CAP` queries, and each group is scored in slices
+of at most `SCORE_CELLS` (probe, candidate) pairs (module constants,
+read at call time), so no pandas scoring call ever builds a score
+matrix larger than SCORE_CELLS regardless of corpus size or cell skew.
 
 The reference's index is the LanceDB IVF-PQ build (lancer.py:203-216,
 SURVEY.md S11) — num_partitions=int(n**0.5), metric=cosine, trained
@@ -320,6 +320,7 @@ N_ITERS = 2  # Lloyd refinement passes over the training sample
 SAMPLE_CAP = 1 << 16  # training-sample row bound (hash-sampled above this)
 CELL_CAP = 1 << 16  # max candidate rows per scoring block (salt above)
 QUERY_CAP = 1 << 16  # max query rows per scoring block
+SCORE_CELLS = 1 << 22  # max probes × candidates per per_block call
 
 
 def _np():
@@ -493,16 +494,18 @@ def _blocked_cogroup(
     its c candidate salts, so every (candidate, probe) pair of a cell
     meets in exactly one (cell, c_salt, q_salt) group — ~CELL_CAP ×
     QUERY_CAP rows however skewed the cells. Each group is then fed to
-    `per_block` in slices of at most QUERY_CAP probes × CELL_CAP
-    candidates (a hard bound; empty blocks are skipped), so the
-    per-block outputs must merge losslessly (a top-k re-ranked by the
-    caller, an OR). The caps are read at call time (tests shrink them).
+    `per_block` in slices of at most SCORE_CELLS probes × candidates
+    (candidate slices of ≤ min(CELL_CAP, SCORE_CELLS), probe slices
+    filling the rest; a hard bound on every score matrix; empty blocks
+    are skipped), so the per-block outputs must merge losslessly (a
+    top-k re-ranked by the caller, an OR). The caps are read at call
+    time (tests shrink them).
     The per-cell counts are ≤C rows (index metadata, like the centroid
     table): one grouped pass over both sides, collected, and baked into
     the plan as literal arrays indexed by cell id (ids are centroid
     indices < C) — no join, so ONE shuffle on the block key into
     cogrouped scoring."""
-    cell_cap, query_cap = CELL_CAP, QUERY_CAP
+    cell_cap, query_cap, score_cells = CELL_CAP, QUERY_CAP, SCORE_CELLS
     rows = (
         cand.select("cell", F.lit(1).alias("n_c"), F.lit(0).alias("n_q"))
         .unionByName(probes.select("cell", F.lit(0).alias("n_c"), F.lit(1).alias("n_q")))
@@ -536,11 +539,12 @@ def _blocked_cogroup(
     def run(pq, pa):
         import pandas as pd
 
-        parts = [
-            per_block(pq.iloc[i : i + query_cap], pa.iloc[j : j + cell_cap])
-            for i in range(0, len(pq), query_cap)
-            for j in range(0, len(pa), cell_cap)
-        ]
+        c_step = min(cell_cap, score_cells)
+        parts = []
+        for j in range(0, len(pa), c_step):
+            block = pa.iloc[j : j + c_step]
+            q_step = min(query_cap, score_cells // len(block))
+            parts += [per_block(pq.iloc[i : i + q_step], block) for i in range(0, len(pq), q_step)]
         return pd.concat(parts) if parts else pd.DataFrame({c: [] for c in names})
 
     return (
@@ -581,9 +585,9 @@ def ivf_topk(
     Plan: one Python stage assigns every vector its home cell AND its
     n_probe probe cells (BLAS, zero shuffle) → `_blocked_cogroup`
     scores each (cell, c_salt, q_salt) block, capped at
-    CELL_CAP×QUERY_CAP however skewed the cells, by one block matmul
-    and a per-block top-k → global window top-k. Recall < 1 by
-    design; tests measure it against cosine_topk.
+    CELL_CAP×QUERY_CAP however skewed the cells, by block matmuls of
+    at most SCORE_CELLS entries and a per-block top-k → global window
+    top-k. Recall < 1 by design; tests measure it against cosine_topk.
     """
     if centroids is None:
         centroids = train_ivf_centroids(emb)
@@ -842,10 +846,10 @@ def ivf_pq_topk(
     relation carries codes only — at 10^12 vectors that is the
     difference between shipping PQ_M=16 uint8 codes and 64 floats per candidate
     through the cell shuffle. Scoring runs through `_blocked_cogroup`,
-    so a hot cell's score matrix and LUTs stay within
-    CELL_CAP×QUERY_CAP. Returns (query_id, neighbor_id, score, rank);
-    score is the approximate dot product (recall measured in tests
-    against exact cosine_topk)."""
+    so a hot cell's score matrix stays within SCORE_CELLS entries and
+    its LUTs within QUERY_CAP rows. Returns (query_id, neighbor_id,
+    score, rank); score is the approximate dot product (recall
+    measured in tests against exact cosine_topk)."""
     if centroids is None:
         centroids = train_ivf_centroids(emb)
     if codebooks is None:
@@ -1050,10 +1054,9 @@ def semantic_dedup(
     Plan shape matches `ivf_topk`: one zero-shuffle BLAS assignment
     stage (home cell + centroid cosine), then `_blocked_cogroup` —
     blocks capped at CELL_CAP×QUERY_CAP (dominance is OR-decomposable
-    across candidate blocks, so salting is lossless) — then a distinct
-    on dropped ids and a broadcast-sized left join back. Within a block
-    the cosine matrix is computed in query chunks so peak memory stays
-    O(chunk × cap).
+    across candidate blocks, so salting is lossless, and each block's
+    cosine matrix holds at most SCORE_CELLS entries) — then a distinct
+    on dropped ids and a broadcast-sized left join back.
     """
     if centroids is None:
         centroids = train_ivf_centroids(emb)
@@ -1068,28 +1071,19 @@ def semantic_dedup(
         import pandas as pd
 
         A = np.stack(pa["embedding"].to_numpy()).astype(np.float64)
-        an = pa["vnorm"].to_numpy()
         aids = pa["vec_id"].to_numpy()
         apri = np.round(pa["ccos"].to_numpy(), 6)
-        qids_all = pq["query_id"].to_numpy()
-        qn_all = pq["qnorm"].to_numpy()
-        qpri_all = np.round(pq["qccos"].to_numpy(), 6)
-        Q_all = np.stack(pq["qvec"].to_numpy()).astype(np.float64)
-        dropped = []
-        chunk = max(1, (1 << 22) // len(pa))  # ≤ ~4M cells per matrix
-        for s in range(0, len(pq), chunk):
-            e = min(s + chunk, len(pq))
-            cos = np.round(
-                (Q_all[s:e] @ A.T) / np.outer(qn_all[s:e], an), 6
-            )
-            qids = qids_all[s:e]
-            qpri = qpri_all[s:e]
-            pri_less = (apri[None, :] < qpri[:, None]) | (
-                (apri[None, :] == qpri[:, None]) & (aids[None, :] < qids[:, None])
-            )
-            dom = ((cos > tau) & pri_less & (aids[None, :] != qids[:, None])).any(axis=1)
-            dropped.append(qids[dom])
-        return pd.DataFrame({"vec_id": np.concatenate(dropped)})
+        qids = pq["query_id"].to_numpy()
+        qpri = np.round(pq["qccos"].to_numpy(), 6)
+        Q = np.stack(pq["qvec"].to_numpy()).astype(np.float64)
+        cos = np.round(
+            (Q @ A.T) / np.outer(pq["qnorm"].to_numpy(), pa["vnorm"].to_numpy()), 6
+        )
+        pri_less = (apri[None, :] < qpri[:, None]) | (
+            (apri[None, :] == qpri[:, None]) & (aids[None, :] < qids[:, None])
+        )
+        dom = ((cos > tau) & pri_less & (aids[None, :] != qids[:, None])).any(axis=1)
+        return pd.DataFrame({"vec_id": qids[dom]})
 
     dropped = (
         _blocked_cogroup(

@@ -14,7 +14,7 @@ collision noise, and the exact form admits full C-level
 vectorization — token explode + dict map for words, compiled
 overlapping-count regexes for char grams — ~50× faster per core than
 a per-feature Python loop, which matters because this UDF dominates
-pipeline wall-clock (bench.py). The feature COUNT normalizer still
+pipeline wall-clock (perfbench's `scoring` layer). The feature COUNT normalizer still
 counts every fastText-shape feature (1 word + all 2/3-grams of
 '<word>' per token + 1 per CJK char), computed in closed form.
 

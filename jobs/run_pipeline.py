@@ -15,9 +15,14 @@ Ship it exactly as the north rule prescribes::
 Modes
 -----
 batch        one straight-through run, partitioned committed writes.
+             Replaces every ds its input holds.
 resume       partition-by-partition with manifest checkpointing —
              re-invoking after a failure completes only the missing
-             partitions (sinks.resume_run).
+             partitions (sinks.resume_run). Skips every ds already in
+             the manifest.
+             Both re-run the same input; neither takes a daily slice.
+             Daily arrivals, late pages for an earlier ds included,
+             belong in stream-commit, which adds files to a ds.
 stream-commit  Structured Streaming AvailableNow over a growing pages
              directory (--input: pages parquet, url/warc_ts/text/lang);
              each invocation commits exactly the files that arrived
@@ -90,7 +95,7 @@ def main(argv: list[str] | None = None) -> int:
     )
     ap.add_argument(
         "--model", default=None,
-        help="model directory: written by train-lm, read by score-lm",
+        help="model directory: written by train-*, required by score-*",
     )
     ap.add_argument("--granularity", default="day", choices=["day", "minute"])
     ap.add_argument(
@@ -110,6 +115,8 @@ def main(argv: list[str] | None = None) -> int:
              "becomes quality AND gopher, first battery's reason wins",
     )
     args = ap.parse_args(argv)
+    if args.mode.startswith("score-") and not args.model:
+        ap.error(f"--mode {args.mode} needs --model (the directory train-{args.mode[6:]} wrote)")
 
     # Import AFTER spark-submit has placed the --py-files zip on the path.
     from pyspark.sql import SparkSession

@@ -64,6 +64,17 @@ def test_spark_submit_pipeline(tmp_path):
     assert len(ds_dirs) == metrics["partitions_committed"]
 
 
+@pytest.mark.parametrize("mode", ["score-lm", "score-clf", "score-dsir"])
+def test_score_modes_require_model(mode, tmp_path):
+    """A score mode without --model is a usage error before any Spark
+    session starts, not an AttributeError after it."""
+    import jobs.run_pipeline as job
+
+    with pytest.raises(SystemExit) as exc:
+        job.main(["--input", str(tmp_path), "--output", str(tmp_path / "out"), "--mode", mode])
+    assert exc.value.code == 2
+
+
 def test_job_gopher_flag(spark, tmp_path):
     """--gopher composes the second battery into the shipped job:
     output schema unchanged, keep implies quality-keep (combined rule

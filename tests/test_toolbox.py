@@ -400,6 +400,40 @@ def test_hot_cell_blocks_stay_within_caps(spark, monkeypatch, hot_cell):
     assert sorted(map(tuple, capped)) == sorted(map(tuple, default))
 
 
+def test_blocked_cogroup_calls_stay_within_score_cells(spark, monkeypatch):
+    """Every per_block call gets at most SCORE_CELLS probes ×
+    candidates, even when one cell's candidates alone exceed it, and
+    the slices still pair every probe of a cell with every candidate of
+    it exactly once."""
+    import pandas as pd
+
+    cand = spark.createDataFrame(
+        [(0, v) for v in range(50)] + [(1, 100 + v) for v in range(7)], "cell int, vec_id bigint"
+    )
+    probes = spark.createDataFrame(
+        [(0, 1000 + q) for q in range(30)] + [(1, 2000 + q) for q in range(3)],
+        "cell int, query_id bigint",
+    )
+    monkeypatch.setattr(similarity, "SCORE_CELLS", 16)
+    calls = similarity._blocked_cogroup(
+        cand,
+        probes,
+        lambda pq, pa: pd.DataFrame(
+            {
+                "cells": [len(pq) * len(pa)],
+                "qids": [pq["query_id"].tolist()],
+                "vids": [pa["vec_id"].tolist()],
+            }
+        ),
+        "cells bigint, qids array<bigint>, vids array<bigint>",
+    ).collect()
+    assert max(c.cells for c in calls) <= 16
+    met = [(q, v) for c in calls for q in c.qids for v in c.vids]
+    want = [(1000 + q, v) for q in range(30) for v in range(50)]
+    want += [(2000 + q, 100 + v) for q in range(3) for v in range(7)]
+    assert sorted(met) == sorted(want)
+
+
 def test_url_normalize_and_dedup(spark):
     from fineweb_modal_spark.operators import urldedup
 
