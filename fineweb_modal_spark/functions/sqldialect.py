@@ -87,11 +87,33 @@ def token_len_sum(toks: str, d: str) -> str:
     return f"list_sum(list_transform({toks}, t -> length(t)))"
 
 
-def n_words_sql(col: str, d: str) -> str:
+def n_words_sql(col: str, d: str, toks: str | None = None) -> str:
+    """Whitespace word count; `toks` names an already-split token
+    array of `col` so the text is not split twice."""
     return (
         f"CASE WHEN length({ws_trim(col, d)}) = 0 THEN 0 "
-        f"ELSE {arr_len(ws_tokens(col, d), d)} END"
+        f"ELSE {arr_len(toks or ws_tokens(col, d), d)} END"
     )
+
+
+def nested_selects(key_cols: str, stages: list[list[str]], table: str) -> str:
+    """Staged select lists as nested SELECTs over `table`, each stage
+    carrying `key_cols` and reading only the previous stage's columns
+    (the DataFrame form is one selectExpr per stage)."""
+    src = table
+    for items in stages:
+        sql = f"SELECT {key_cols}, {', '.join(items)} FROM {src}"
+        src = f"({sql})"
+    return sql
+
+
+def keep_exprs(rules: list[tuple[str, str]]) -> tuple[str, str]:
+    """(keep, drop_reason) of an ordered rule battery given as
+    (drop_reason, fail predicate) pairs: drop_reason names the first
+    rule that fails, keep holds when none does."""
+    whens = " ".join(f"WHEN {fail} THEN '{name}'" for name, fail in rules)
+    reason = f"CASE {whens} ELSE NULL END"
+    return f"({reason}) IS NULL", reason
 
 
 def occ_count(col: str, needle_sql: str, needle_len: int, d: str) -> str:

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from ..functions import sqldialect as sd
 from ..spec import gopher_rules as gr
 
-S, D = sd.SPARK, sd.DUCKDB
+S = sd.SPARK
 
 
 def _tf(e: str, lam: str, d: str) -> str:
@@ -113,8 +113,7 @@ def run_starts_expr(bg: str, d: str) -> str:
     keeps the i=1 probe in bounds (Spark element_at throws on 0).
 
     IMPORTANT staging contract: this and `max_run_expr` MUST be
-    evaluated as separate projected COLUMNS (see signals_sql /
-    with_gopher_signals). Inlining them into one expression makes
+    evaluated as separate projected COLUMNS (see _stages). Inlining them into one expression makes
     Catalyst re-evaluate the captured array subexpression for every
     lambda element — O(m²) per row (measured 18.6 s → 1.6 s on the
     sf0.1 filter pipeline when staged)."""
@@ -230,6 +229,38 @@ def _signal_exprs(round_out: bool) -> list[tuple[str, str]]:
     ]
 
 
+# (drop_reason, fail predicate over the signal columns), in spec order
+RULES: list[tuple[str, str]] = [
+    ("low_alpha_word_ratio", f"alpha_word_ratio < {gr.MIN_ALPHA_WORD_RATIO}"),
+    ("high_bullet_line_ratio", f"bullet_line_ratio > {gr.MAX_BULLET_LINE_RATIO}"),
+    ("high_ellipsis_line_ratio", f"ellipsis_line_ratio > {gr.MAX_ELLIPSIS_LINE_RATIO}"),
+    ("high_dup_line_ratio", f"dup_line_ratio > {gr.MAX_DUP_LINE_RATIO}"),
+    ("high_top_bigram_frac", f"top_bigram_frac > {gr.MAX_TOP_BIGRAM_FRAC}"),
+    ("high_symbol_word_ratio", f"symbol_word_ratio > {gr.MAX_SYMBOL_WORD_RATIO}"),
+    (
+        "high_boilerplate_line_ratio",
+        f"boilerplate_line_ratio > {gr.MAX_BOILERPLATE_LINE_RATIO}",
+    ),
+]
+
+
+def _stages(text_col: str, d: str, round_out: bool) -> list[list[str]]:
+    """The signal plan as staged select lists (after the key columns),
+    each stage reading only the previous stage's columns. The
+    run-length columns get stages of their own — see run_starts_expr's
+    O(m²) warning."""
+    t = f"coalesce({text_col}, '')"
+    carry = ["__t", "__toks", "__lines"]
+    return [
+        [f"{t} AS __t", f"{toks_expr(t, d)} AS __toks", f"{lines_expr(t, d)} AS __lines"],
+        [*carry, f"{bigrams_expr('__toks', d)} AS __bg"],
+        [*carry, f"{_ln('__bg', d)} AS __m", f"{run_starts_expr('__bg', d)} AS __starts"],
+        [*carry, "__m", "__starts", f"{sentinel_ends_expr('__starts', '__m', d)} AS __se"],
+        _count_stage_exprs(d),
+        [f"{e} AS {name}" for name, e in _signal_exprs(round_out)],
+    ]
+
+
 def signals_sql(
     d: str,
     table: str = "documents",
@@ -238,28 +269,7 @@ def signals_sql(
     round_out: bool = True,
 ) -> str:
     """Full SELECT of key + gopher signals, either dialect."""
-    t = f"coalesce({text_col}, '')"
-    s1 = (
-        f"SELECT {key_cols}, {t} AS __t, {toks_expr(t, d)} AS __toks, "
-        f"{lines_expr(t, d)} AS __lines FROM {table}"
-    )
-    s1b = (
-        f"SELECT {key_cols}, __t, __toks, __lines, "
-        f"{bigrams_expr('__toks', d)} AS __bg FROM ({s1})"
-    )
-    # staged run-length columns — see run_starts_expr's O(m²) warning
-    s1c = (
-        f"SELECT {key_cols}, __t, __toks, __lines, "
-        f"{_ln('__bg', d)} AS __m, {run_starts_expr('__bg', d)} AS __starts "
-        f"FROM ({s1b})"
-    )
-    s1d = (
-        f"SELECT {key_cols}, __t, __toks, __lines, __m, __starts, "
-        f"{sentinel_ends_expr('__starts', '__m', d)} AS __se FROM ({s1c})"
-    )
-    s2 = f"SELECT {key_cols}, {', '.join(_count_stage_exprs(d))} FROM ({s1d})"
-    outs = ", ".join(f"{e} AS {name}" for name, e in _signal_exprs(round_out))
-    return f"SELECT {key_cols}, {outs} FROM ({s2})"
+    return sd.nested_selects(key_cols, _stages(text_col, d, round_out), table)
 
 
 def keep_sql(
@@ -269,67 +279,23 @@ def keep_sql(
     key_cols: str = "doc_id",
 ) -> str:
     sig = signals_sql(d, table=table, text_col=text_col, key_cols=key_cols, round_out=False)
-    reason = f"""CASE
-  WHEN alpha_word_ratio < {gr.MIN_ALPHA_WORD_RATIO} THEN 'low_alpha_word_ratio'
-  WHEN bullet_line_ratio > {gr.MAX_BULLET_LINE_RATIO} THEN 'high_bullet_line_ratio'
-  WHEN ellipsis_line_ratio > {gr.MAX_ELLIPSIS_LINE_RATIO} THEN 'high_ellipsis_line_ratio'
-  WHEN dup_line_ratio > {gr.MAX_DUP_LINE_RATIO} THEN 'high_dup_line_ratio'
-  WHEN top_bigram_frac > {gr.MAX_TOP_BIGRAM_FRAC} THEN 'high_top_bigram_frac'
-  WHEN symbol_word_ratio > {gr.MAX_SYMBOL_WORD_RATIO} THEN 'high_symbol_word_ratio'
-  WHEN boilerplate_line_ratio > {gr.MAX_BOILERPLATE_LINE_RATIO} THEN 'high_boilerplate_line_ratio'
-  ELSE NULL END"""
-    return (
-        f"SELECT {key_cols}, ({reason}) IS NULL AS keep, {reason} AS drop_reason "
-        f"FROM ({sig})"
-    )
+    keep, reason = sd.keep_exprs(RULES)
+    return f"SELECT {key_cols}, {keep} AS keep, {reason} AS drop_reason FROM ({sig})"
 
 
 def with_gopher_signals(
     df: DataFrame, text_col: str = "text", key_cols: tuple[str, ...] = ("doc_id",)
 ) -> DataFrame:
-    """DataFrame form: same SPARK-dialect fragments via selectExpr —
-    Catalyst collapses the staged projects into one codegen span."""
-    t = f"coalesce({text_col}, '')"
-    keys = list(key_cols)
-    s1 = df.selectExpr(
-        *keys,
-        f"{t} AS __t",
-        f"{toks_expr(t, S)} AS __toks",
-        f"{lines_expr(t, S)} AS __lines",
-    )
-    s1b = s1.selectExpr(
-        *keys, "__t", "__toks", "__lines", f"{bigrams_expr('__toks', S)} AS __bg"
-    )
-    # staged run-length columns — see run_starts_expr's O(m²) warning
-    s1c = s1b.selectExpr(
-        *keys, "__t", "__toks", "__lines",
-        f"{_ln('__bg', S)} AS __m",
-        f"{run_starts_expr('__bg', S)} AS __starts",
-    )
-    s1d = s1c.selectExpr(
-        *keys, "__t", "__toks", "__lines", "__m", "__starts",
-        f"{sentinel_ends_expr('__starts', '__m', S)} AS __se",
-    )
-    s2 = s1d.selectExpr(*keys, *_count_stage_exprs(S))
-    return s2.selectExpr(
-        *keys,
-        *[f"{e} AS {name}" for name, e in _signal_exprs(round_out=False)],
-    )
+    """DataFrame form: the same SPARK-dialect stages, one selectExpr
+    each — Catalyst collapses them into one codegen span."""
+    for items in _stages(text_col, S, round_out=False):
+        df = df.selectExpr(*key_cols, *items)
+    return df
 
 
 def with_gopher_keep(sig: DataFrame) -> DataFrame:
-    reason = f"""CASE
-  WHEN alpha_word_ratio < {gr.MIN_ALPHA_WORD_RATIO} THEN 'low_alpha_word_ratio'
-  WHEN bullet_line_ratio > {gr.MAX_BULLET_LINE_RATIO} THEN 'high_bullet_line_ratio'
-  WHEN ellipsis_line_ratio > {gr.MAX_ELLIPSIS_LINE_RATIO} THEN 'high_ellipsis_line_ratio'
-  WHEN dup_line_ratio > {gr.MAX_DUP_LINE_RATIO} THEN 'high_dup_line_ratio'
-  WHEN top_bigram_frac > {gr.MAX_TOP_BIGRAM_FRAC} THEN 'high_top_bigram_frac'
-  WHEN symbol_word_ratio > {gr.MAX_SYMBOL_WORD_RATIO} THEN 'high_symbol_word_ratio'
-  WHEN boilerplate_line_ratio > {gr.MAX_BOILERPLATE_LINE_RATIO} THEN 'high_boilerplate_line_ratio'
-  ELSE NULL END"""
-    return sig.selectExpr(
-        "*", f"({reason}) IS NULL AS keep", f"{reason} AS drop_reason"
-    )
+    keep, reason = sd.keep_exprs(RULES)
+    return sig.selectExpr("*", f"{keep} AS keep", f"{reason} AS drop_reason")
 
 
 def compose_keep(

@@ -90,10 +90,7 @@ def run_hygiene(feed: DataFrame, materialize: bool = True) -> DataFrame:
         "keep",
         "drop_reason",
         "n_removed",
-        F.when(
-            F.col("keep"),
-            scrub.scrub_expr(F.coalesce("text", F.lit(""))),
-        ).alias("scrubbed_text"),
+        F.when(F.col("keep"), scrub.scrub_expr("text")).alias("scrubbed_text"),
     )
 
 

@@ -1,13 +1,13 @@
 """Heuristic quality signals + keep/drop — pure built-in columns.
 
-Spark rendering of spec/quality_rules.py (gopher/FineWeb-style rules
+One rendering of spec/quality_rules.py (gopher/FineWeb-style rules
 generalizing the reference's threshold filters, filter.py:50 and
-summary.py:53-55). Everything here is JVM-side whole-stage-codegen
-column expressions — zero Python in the hot path (north rule); the
+summary.py:53-55): the signal expressions and the ordered rule list
+below are SQL rendered through functions/sqldialect, so the Spark
+operators run the SPARK rendering (`F.expr`) of the same plan the
+DuckDB oracles run in the DUCKDB dialect. Everything is JVM-side
+whole-stage-codegen — zero Python in the hot path (north rule); the
 perplexity stage (Python numpy) lives in operators/scoring.py.
-
-`signals_sql` renders the byte-equivalent DuckDB oracle for the
-driver gate.
 """
 
 from __future__ import annotations
@@ -21,117 +21,86 @@ from ..spec import quality_rules as qr
 
 _TOKS = "__toks"
 
+# (drop_reason, fail predicate over the signal columns), in spec
+# DROP_REASONS order; thresholds compare unrounded signals.
+RULES: list[tuple[str, str]] = [
+    ("too_few_words", f"n_words < {qr.MIN_WORDS}"),
+    ("too_many_words", f"n_words > {qr.MAX_WORDS}"),
+    (
+        "mean_word_len_out_of_range",
+        f"(mean_word_len < {qr.MIN_MEAN_WORD_LEN}"
+        f" OR mean_word_len > {qr.MAX_MEAN_WORD_LEN})",
+    ),
+    ("low_stopword_ratio", f"stopword_ratio < {qr.MIN_STOPWORD_RATIO}"),
+    ("high_digit_ratio", f"digit_ratio > {qr.MAX_DIGIT_RATIO}"),
+    ("low_distinct_ratio", f"distinct_ratio < {qr.MIN_DISTINCT_RATIO}"),
+]
 
-def _tokens(text: Column) -> Column:
-    # ws-strip, not trim(): SQL trim strips SPACES only, so tab/CR/LF
-    # edges (CRLF crawls) would grow a phantom empty edge token vs the
-    # Python spec's str.strip(). btrim (char-set, non-regex) — a regex
-    # trim here degraded work conservation at high core counts.
-    return F.split(F.btrim(text, F.lit(sd.WS_EDGE_CHARS)), r"\s+")
+
+def _rules(stop_gate: str | None) -> list[tuple[str, str]]:
+    """RULES with the stopword rule restricted to rows where the SQL
+    boolean `stop_gate` holds (spec keep_py's lang_pred semantics)."""
+    if stop_gate is None:
+        return RULES
+    return [
+        (name, f"({stop_gate}) AND {fail}" if name == "low_stopword_ratio" else fail)
+        for name, fail in RULES
+    ]
 
 
-def with_signals(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Append the per-document quality-signal columns.
+def _signal_stages(text: str, d: str) -> list[list[tuple[str, str]]]:
+    """The signal columns as (name, SQL) over the NULL-as-empty `text`
+    expression, in stages: each reads only earlier stages' columns.
 
-    One split() materialized once per row; all ratios float64 to match
-    the SQL oracle exactly. NULL text is treated as empty (spec
-    signals_py semantics) so null rows drop with 'too_few_words', not
-    an accidental downstream reason.
-    """
-    text = F.coalesce(F.col(text_col), F.lit(""))
-    toks = F.col(_TOKS)
-    stripped = F.btrim(text, F.lit(sd.WS_EDGE_CHARS))
-    n_words = F.when(F.length(stripped) == 0, F.lit(0)).otherwise(F.size(toks))
-    stop_arr = [F.lit(s) for s in qr.STOPWORDS]
-    out = (
-        df.withColumn(_TOKS, _tokens(text))
-        .withColumn("n_words", n_words)
-        .withColumn(
-            "mean_word_len",
+    One split() materialized once per row (__toks; n_words counts it);
+    all ratios float64. NULL text is treated as empty (spec signals_py
+    semantics) so null rows drop with 'too_few_words'."""
+    stop = ", ".join(f"'{w}'" for w in qr.STOPWORDS)
+
+    def per_word(n: str) -> str:
+        return f"CASE WHEN n_words > 0 THEN CAST({n} AS DOUBLE) / n_words ELSE 0.0 END"
+
+    # translate is a char-map delete — far cheaper than regex
+    digits = f"length({text}) - length(translate({text}, '0123456789', ''))"
+    return [
+        [(_TOKS, sd.ws_tokens(text, d))],
+        [("n_words", sd.n_words_sql(text, d, toks=_TOKS))],
+        [
             # token-length sum == non-ws char count, without a second
             # regex pass (java regex dominates this stage's CPU and
             # thrashes shared caches at high core counts — PLANS.md)
-            F.when(
-                F.col("n_words") > 0,
-                F.aggregate(
-                    F.transform(toks, lambda t: F.length(t)),
-                    F.lit(0),
-                    lambda acc, x: acc + x,
-                ).cast("double")
-                / F.col("n_words"),
-            ).otherwise(F.lit(0.0)),
-        )
-        .withColumn(
-            "stopword_ratio",
-            F.when(
-                F.col("n_words") > 0,
-                F.size(
-                    F.filter(toks, lambda t: F.lower(t).isin(qr.STOPWORDS))
-                ).cast("double")
-                / F.col("n_words"),
-            ).otherwise(F.lit(0.0)),
-        )
-        .withColumn(
-            "digit_ratio",
-            # translate is a char-map delete — far cheaper than regex
-            F.when(
-                F.length(text) > 0,
-                (
-                    F.length(text) - F.length(F.translate(text, "0123456789", ""))
-                ).cast("double")
-                / F.length(text),
-            ).otherwise(F.lit(0.0)),
-        )
-        .withColumn(
-            "distinct_ratio",
-            F.when(
-                F.col("n_words") > 0,
-                F.size(F.array_distinct(toks)).cast("double") / F.col("n_words"),
-            ).otherwise(F.lit(0.0)),
-        )
-        .drop(_TOKS)
-    )
-    return out
+            ("mean_word_len", per_word(sd.token_len_sum(_TOKS, d))),
+            (
+                "stopword_ratio",
+                per_word(sd.arr_len(sd.arr_filter(_TOKS, f"t -> lower(t) IN ({stop})", d), d)),
+            ),
+            (
+                "digit_ratio",
+                f"CASE WHEN length({text}) > 0 THEN CAST({digits} AS DOUBLE)"
+                f" / length({text}) ELSE 0.0 END",
+            ),
+            ("distinct_ratio", per_word(sd.arr_len(sd.arr_distinct(_TOKS, d), d))),
+        ],
+    ]
 
 
-def keep_expr(lang_col: str | None = None) -> tuple[Column, Column]:
+def with_signals(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """Append the per-document quality-signal columns (a colliding
+    name is replaced; input columns are unchanged)."""
+    for stage in _signal_stages(f"coalesce({text_col}, '')", sd.SPARK):
+        df = df.withColumns({name: F.expr(e) for name, e in stage})
+    return df.drop(_TOKS)
+
+
+def with_keep(df: DataFrame, lang_col: str | None = None) -> DataFrame:
     """(keep:boolean, drop_reason:string) from the signal columns.
 
     lang_col: when given, the stopword rule applies only to rows whose
     predicted language is 'en' (spec keep_py semantics)."""
-    stop_applies = (
-        F.lit(True) if lang_col is None else (F.col(lang_col) == "en")
+    keep, reason = sd.keep_exprs(
+        _rules(None if lang_col is None else f"{lang_col} = 'en'")
     )
-    reason = (
-        F.when(F.col("n_words") < qr.MIN_WORDS, F.lit("too_few_words"))
-        .when(F.col("n_words") > qr.MAX_WORDS, F.lit("too_many_words"))
-        .when(
-            ~F.col("mean_word_len").between(
-                qr.MIN_MEAN_WORD_LEN, qr.MAX_MEAN_WORD_LEN
-            ),
-            F.lit("mean_word_len_out_of_range"),
-        )
-        .when(
-            stop_applies & (F.col("stopword_ratio") < qr.MIN_STOPWORD_RATIO),
-            F.lit("low_stopword_ratio"),
-        )
-        .when(F.col("digit_ratio") > qr.MAX_DIGIT_RATIO, F.lit("high_digit_ratio"))
-        .when(
-            F.col("distinct_ratio") < qr.MIN_DISTINCT_RATIO,
-            F.lit("low_distinct_ratio"),
-        )
-    )
-    return reason.isNull(), reason
-
-
-def with_keep(df: DataFrame, lang_col: str | None = None) -> DataFrame:
-    keep, reason = keep_expr(lang_col)
-    return df.withColumn("keep", keep).withColumn("drop_reason", reason)
-
-
-# ---------------------------------------------------------------------------
-# DuckDB oracle rendering (identical spec, DuckDB dialect)
-# ---------------------------------------------------------------------------
+    return df.withColumns({"keep": F.expr(keep), "drop_reason": F.expr(reason)})
 
 
 def signals_sql(
@@ -141,41 +110,21 @@ def signals_sql(
     key_cols: str = "doc_id",
     round_out: bool = True,
 ) -> str:
-    """SELECT of key + signal columns, renderable for either dialect.
+    """SELECT of key + signal columns, either dialect.
 
     round_out=True rounds the double outputs to 6 dp for the driver's
     value-hash compare; keep_sql uses the raw values so threshold
     comparisons are never flipped by rounding."""
-    toks = sd.ws_tokens(text_col, d)
-    n_words = sd.n_words_sql(text_col, d)
-    in_list = ", ".join(f"'{s}'" for s in qr.STOPWORDS)
-    stop_hits = sd.arr_len(
-        sd.arr_filter("__toks", f"t -> lower(t) IN ({in_list})", d), d
-    )
-    distinct = sd.arr_len(sd.arr_distinct("__toks", d), d)
-    no_ws = sd.token_len_sum("__toks", d)
-    digits = f"(length({text_col}) - length(translate({text_col}, '0123456789', '')))"
-    # NULL text must behave like '' (as the Spark operator's coalesce and
-    # the Python spec do) — otherwise every signal and drop-rule WHEN is
-    # NULL and keep flips to TRUE, the opposite of Spark's 'too_few_words'.
-    inner = (
-        f"SELECT {key_cols}, coalesce({text_col}, '') AS {text_col}, "
-        f"{toks} AS __toks, {n_words} AS n_words "
-        f"FROM (SELECT {key_cols}, coalesce({text_col}, '') AS {text_col} FROM {table})"
-    )
-
-    def rnd(e: str) -> str:
-        return f"round({e}, 6)" if round_out else e
-
-    return f"""
-SELECT {key_cols},
-       n_words,
-       {rnd(f"CASE WHEN n_words > 0 THEN CAST({no_ws} AS DOUBLE) / n_words ELSE 0.0 END")} AS mean_word_len,
-       {rnd(f"CASE WHEN n_words > 0 THEN CAST({stop_hits} AS DOUBLE) / n_words ELSE 0.0 END")} AS stopword_ratio,
-       {rnd(f"CASE WHEN length({text_col}) > 0 THEN CAST({digits} AS DOUBLE) / length({text_col}) ELSE 0.0 END")} AS digit_ratio,
-       {rnd(f"CASE WHEN n_words > 0 THEN CAST({distinct} AS DOUBLE) / n_words ELSE 0.0 END")} AS distinct_ratio
-FROM ({inner})
-""".strip()
+    carry, stages = [text_col], []
+    for stage in _signal_stages(f"coalesce({text_col}, '')", d):
+        stages.append(carry + [f"{e} AS {name}" for name, e in stage])
+        carry = carry + [name for name, _ in stage]
+    outs = [
+        f"round({c}, 6) AS {c}" if round_out and c != "n_words" else c
+        for c in carry
+        if c not in (text_col, _TOKS)
+    ]
+    return sd.nested_selects(key_cols, [*stages, outs], table)
 
 
 def keep_sql(
@@ -188,24 +137,11 @@ def keep_sql(
     """keep/drop decision rendered over the signal subquery.
 
     stop_gate: optional SQL boolean restricting the stopword rule
-    (keep_expr's lang_col analog — e.g. "lang_pred = 'en'"; the
+    (with_keep's lang_col analog — e.g. "lang_pred = 'en'"; the
     referenced column must be carried through key_cols)."""
     sig = signals_sql(d, table=table, text_col=text_col, key_cols=key_cols, round_out=False)
-    stop_when = f"stopword_ratio < {qr.MIN_STOPWORD_RATIO}"
-    if stop_gate is not None:
-        stop_when = f"({stop_gate}) AND {stop_when}"
-    reason = f"""CASE
-  WHEN n_words < {qr.MIN_WORDS} THEN 'too_few_words'
-  WHEN n_words > {qr.MAX_WORDS} THEN 'too_many_words'
-  WHEN mean_word_len < {qr.MIN_MEAN_WORD_LEN} OR mean_word_len > {qr.MAX_MEAN_WORD_LEN} THEN 'mean_word_len_out_of_range'
-  WHEN {stop_when} THEN 'low_stopword_ratio'
-  WHEN digit_ratio > {qr.MAX_DIGIT_RATIO} THEN 'high_digit_ratio'
-  WHEN distinct_ratio < {qr.MIN_DISTINCT_RATIO} THEN 'low_distinct_ratio'
-  ELSE NULL END"""
-    return (
-        f"SELECT {key_cols}, ({reason}) IS NULL AS keep, {reason} AS drop_reason "
-        f"FROM ({sig})"
-    )
+    keep, reason = sd.keep_exprs(_rules(stop_gate))
+    return f"SELECT {key_cols}, {keep} AS keep, {reason} AS drop_reason FROM ({sig})"
 
 
 # ---------------------------------------------------------------------------
@@ -213,52 +149,25 @@ def keep_sql(
 # ---------------------------------------------------------------------------
 
 
-def _rule_fail_exprs() -> list[tuple[str, Column]]:
-    """(rule_name, fail_bit) per battery rule, in spec DROP_REASONS
-    order, over the signal columns. The unconditional-stopword form
-    (keep_expr with lang_col=None), matching keep_sql's default."""
-    return [
-        ("too_few_words", F.col("n_words") < qr.MIN_WORDS),
-        ("too_many_words", F.col("n_words") > qr.MAX_WORDS),
-        (
-            "mean_word_len_out_of_range",
-            ~F.col("mean_word_len").between(
-                qr.MIN_MEAN_WORD_LEN, qr.MAX_MEAN_WORD_LEN
-            ),
-        ),
-        (
-            "low_stopword_ratio",
-            F.col("stopword_ratio") < qr.MIN_STOPWORD_RATIO,
-        ),
-        ("high_digit_ratio", F.col("digit_ratio") > qr.MAX_DIGIT_RATIO),
-        (
-            "low_distinct_ratio",
-            F.col("distinct_ratio") < qr.MIN_DISTINCT_RATIO,
-        ),
-    ]
-
-
-def _rule_fail_sql() -> list[tuple[str, str]]:
-    """DuckDB/ANSI rendering of the same fail bits (over signals_sql
-    columns, round_out=False so thresholds are never rounding-flipped)."""
-    return [
-        ("too_few_words", f"n_words < {qr.MIN_WORDS}"),
-        ("too_many_words", f"n_words > {qr.MAX_WORDS}"),
-        (
-            "mean_word_len_out_of_range",
-            f"(mean_word_len < {qr.MIN_MEAN_WORD_LEN}"
-            f" OR mean_word_len > {qr.MAX_MEAN_WORD_LEN})",
-        ),
-        (
-            "low_stopword_ratio",
-            f"stopword_ratio < {qr.MIN_STOPWORD_RATIO}",
-        ),
-        ("high_digit_ratio", f"digit_ratio > {qr.MAX_DIGIT_RATIO}"),
-        (
-            "low_distinct_ratio",
-            f"distinct_ratio < {qr.MIN_DISTINCT_RATIO}",
-        ),
-    ]
+def _ablation_aggs() -> tuple[list[str], list[str]]:
+    """(fail bits f_i, the 19 integer sums over them) for the
+    unconditional-stopword battery, keep_sql's default: n_total, then
+    per rule solo_i (fails rule i), marg_i (rule i is the first
+    failure) and cum_i (passes rules 0..i)."""
+    bits = [f"({fail}) AS f{i}" for i, (_n, fail) in enumerate(RULES)]
+    sums = ["CAST(count(*) AS BIGINT) AS n_total"]
+    for i in range(len(RULES)):
+        earlier = " OR ".join(f"f{j}" for j in range(i))
+        conds = {
+            "solo": f"f{i}",
+            "marg": f"f{i} AND NOT ({earlier})" if i else f"f{i}",
+            "cum": " AND ".join(f"NOT f{j}" for j in range(i + 1)),
+        }
+        sums += [
+            f"CAST(sum(CASE WHEN {c} THEN 1 ELSE 0 END) AS BIGINT) AS {k}_{i}"
+            for k, c in conds.items()
+        ]
+    return bits, sums
 
 
 def rule_ablation(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -277,28 +186,16 @@ def rule_ablation(df: DataFrame, text_col: str = "text") -> DataFrame:
     crosses the shuffle), then stack() unpivots the one row into six —
     at 10^12 docs this costs exactly one scan and a 19-column
     single-row reduce, the same as any global rollup."""
-    rules = _rule_fail_exprs()
-    sig = with_signals(df, text_col=text_col)
-    aggs = [F.count("*").alias("n_total")]
-    first_free = F.lit(True)  # no earlier rule has fired
-    cum_pass = F.lit(True)
-    for i, (_name, fail) in enumerate(rules):
-        aggs.append(F.sum(fail.cast("long")).alias(f"solo_{i}"))
-        aggs.append(
-            F.sum((first_free & fail).cast("long")).alias(f"marg_{i}")
-        )
-        first_free = first_free & ~fail
-        cum_pass = cum_pass & ~fail
-        aggs.append(F.sum(cum_pass.cast("long")).alias(f"cum_{i}"))
-    one = sig.agg(*aggs)
+    bits, sums = _ablation_aggs()
+    one = with_signals(df, text_col=text_col).selectExpr(*bits).selectExpr(*sums)
     stack_args = ", ".join(
         f"CAST({i} AS BIGINT), '{name}', solo_{i}, marg_{i}, cum_{i}"
-        for i, (name, _f) in enumerate(rules)
+        for i, (name, _f) in enumerate(RULES)
     )
     return (
         one.selectExpr(
             "n_total",
-            f"stack({len(rules)}, {stack_args}) AS "
+            f"stack({len(RULES)}, {stack_args}) AS "
             "(stage, rule, solo_drops, marginal_drops, cumulative_survivors)",
         )
         .select(
@@ -323,43 +220,19 @@ def rule_ablation_sql(
 ) -> str:
     """DuckDB oracle of rule_ablation: same bits, same 19 sums, the
     unpivot written as a 6-row UNION ALL over the one aggregate row."""
-    rules = _rule_fail_sql()
+    bits, sums = _ablation_aggs()
     sig = signals_sql(d, table=table, text_col=text_col, round_out=False)
-    bit_cols = ", ".join(
-        f"({cond}) AS f{i}" for i, (_n, cond) in enumerate(rules)
-    )
-    sums = ["CAST(count(*) AS BIGINT) AS n_total"]
-    earlier: list[str] = []
-    cum: list[str] = []
-    for i in range(len(rules)):
-        fi = f"f{i}"
-        first = (
-            fi
-            if not earlier
-            else f"({fi} AND NOT ({' OR '.join(earlier)}))"
-        )
-        cum.append(f"NOT f{i}" if not cum else f"{cum[-1]} AND NOT f{i}")
-        sums.append(
-            f"CAST(sum(CASE WHEN {fi} THEN 1 ELSE 0 END) AS BIGINT) AS solo_{i}"
-        )
-        sums.append(
-            f"CAST(sum(CASE WHEN {first} THEN 1 ELSE 0 END) AS BIGINT) AS marg_{i}"
-        )
-        sums.append(
-            f"CAST(sum(CASE WHEN {cum[-1]} THEN 1 ELSE 0 END) AS BIGINT) AS cum_{i}"
-        )
-        earlier.append(fi)
     row_selects = "\nUNION ALL\n".join(
         f"SELECT CAST({i} AS BIGINT) AS stage, '{name}' AS rule, "
         f"solo_{i} AS solo_drops, marg_{i} AS marginal_drops, "
         f"cum_{i} AS cumulative_survivors, n_total, "
         f"round(CAST(cum_{i} AS DOUBLE) / CAST(n_total AS DOUBLE), 6) "
         f"AS survivor_rate FROM agg"
-        for i, (name, _c) in enumerate(rules)
+        for i, (name, _c) in enumerate(RULES)
     )
     return f"""
 WITH sig AS ({sig}),
-bits AS (SELECT {bit_cols} FROM sig),
+bits AS (SELECT {', '.join(bits)} FROM sig),
 agg AS (SELECT {', '.join(sums)} FROM bits)
 SELECT * FROM (
 {row_selects}

@@ -2,7 +2,8 @@
 
 Pure JVM-side column expressions (north rule: zero per-row Python);
 spec/scrub_spec.RULES is the single pattern source shared with the
-DuckDB oracle and the pytest pure-Python oracle. Reference analog:
+DuckDB oracle and the pytest pure-Python oracle, folded once
+(`scrub_sql`) and run by Spark as the SPARK rendering. Reference analog:
 there is no scrub in fineweb-modal — this is the north-rule extension
 — but the mechanism mirrors its filter stage shape (filter.py:50).
 """
@@ -17,26 +18,21 @@ from ..functions import sqldialect as sd
 from ..spec import scrub_spec
 
 
-def scrub_expr(col: Column) -> Column:
-    out = col
-    for _, pattern, repl in scrub_spec.RULES:
-        out = F.regexp_replace(out, pattern, repl)
-    return out
-
-
-def with_scrubbed(df: DataFrame, text_col: str = "text", out_col: str = "scrubbed_text") -> DataFrame:
-    # NULL text → '' (spec scrub_py(None) semantics)
-    return df.withColumn(
-        out_col, scrub_expr(F.coalesce(F.col(text_col), F.lit("")))
-    )
-
-
 def scrub_sql(col: str, d: str) -> str:
-    """Render the same chain for either SQL dialect."""
+    """The RULES chain as nested regexp_replace calls, either dialect."""
     out = col
     for _, pattern, repl in scrub_spec.RULES:
         out = sd.regexp_replace_all(out, pattern, repl, d)
     return out
+
+
+def scrub_expr(text_col: str) -> Column:
+    """Scrubbed `text_col`, NULL text as '' (spec scrub_py(None))."""
+    return F.expr(scrub_sql(f"coalesce({text_col}, '')", sd.SPARK))
+
+
+def with_scrubbed(df: DataFrame, text_col: str = "text", out_col: str = "scrubbed_text") -> DataFrame:
+    return df.withColumn(out_col, scrub_expr(text_col))
 
 
 # ---------------------------------------------------------------------------

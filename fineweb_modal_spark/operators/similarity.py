@@ -869,8 +869,11 @@ def ivf_pq_topk(
         # LUTs: for each query, per-subspace dot with every codebook
         # entry — (nq, m, k) = einsum over the query's subvectors
         luts = np.einsum("qms,mks->qmk", Q.reshape(len(Q), m, sub), books)
-        # gather: score[q, c] = sum_m luts[q, m, codes[c, m]]
-        scores = luts[:, np.arange(m)[None, :], codes[:, :]].sum(axis=2)
+        # gather: score[q, c] = sum_m luts[q, m, codes[c, m]], one
+        # subspace at a time so the peak stays one (q, c) matrix
+        scores = np.zeros((len(Q), len(codes)))
+        for j in range(m):
+            scores += luts[:, j, codes[:, j]]
         return _block_topk(
             pq["query_id"].to_numpy(), pa["vec_id"].to_numpy(), scores, k, "score"
         )

@@ -79,14 +79,6 @@ def _staged(df: DataFrame) -> str:
     return path
 
 
-def _file_stream(spark: SparkSession, df: DataFrame) -> DataFrame:
-    """A readStream over `df` staged as parquet files."""
-    path = _staged(df)
-    return spark.readStream.schema(spark.read.parquet(path).schema).parquet(
-        path
-    )
-
-
 # Fixed gate order. The sf0.01 correctness check samples only the
 # FIRST 50 registry entries, so the gates it has never validated lead,
 # in this committed order; every other gate follows in registration
@@ -895,12 +887,7 @@ def q_webtext_filter_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "keep",
         "drop_reason",
-        F.when(
-            F.col("keep"),
-            scrub_mod.scrub_expr(F.coalesce("text", F.lit(""))),
-        )
-        .otherwise(F.lit(None))
-        .alias("scrubbed_text"),
+        F.when(F.col("keep"), scrub_mod.scrub_expr("text")).alias("scrubbed_text"),
     )
 
 
@@ -1243,12 +1230,10 @@ def q_url_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermarked variant is exercised in tests/test_streaming.py.)"""
     p = pages_mod.load_pages(spark, sf_dir, with_html=False)
     p.createOrReplaceTempView("pages_urls")
-    stream = _file_stream(
-        spark,
-        spark.sql(
-            urldedup.corpus_with_url_variants_sql(sd.SPARK, pages="pages_urls")
-        ),
+    variants = spark.sql(
+        urldedup.corpus_with_url_variants_sql(sd.SPARK, pages="pages_urls")
     )
+    stream = streaming_inc.file_stream(spark, _staged(variants))
     out = (
         urldedup.with_norm_url(stream)
         .select("norm_url")
@@ -1287,7 +1272,9 @@ def q_quality_keep_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     filtering of a growing crawl shares the batch operators verbatim."""
     from ..operators import gopher as gopher_mod
 
-    stream = _file_stream(spark, load_table(spark, sf_dir, "documents"))
+    stream = streaming_inc.file_stream(
+        spark, _staged(load_table(spark, sf_dir, "documents"))
+    )
     qk = quality.with_keep(quality.with_signals(stream))
     out = gopher_mod.compose_keep(qk, carry=("doc_id",)).select(
         "doc_id", "keep", "drop_reason"
@@ -2671,6 +2658,22 @@ GROUP BY 1
 """
 
 
+def _commit_corpus(spark: SparkSession, sf_dir: str) -> tuple[str, list[dict]]:
+    """Commit the scored corpus, minute partitions, into a fresh
+    scratch table through resume_run; returns (table dir, the
+    committed manifest rows)."""
+    from .. import sinks
+    from . import pipeline as pl
+
+    out = f"{_scratch_dir()}/out"
+    rows = sinks.resume_run(
+        spark,
+        lambda s: sinks.committed_rows(pl.run_pipeline(s, sf_dir), granularity="minute"),
+        out,
+    )
+    return out, rows
+
+
 @register("committed_write_roundtrip", _WRITE_ROUNDTRIP_ORACLE)
 def q_committed_write_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Write the scored corpus through the committed partitioned sink
@@ -2680,18 +2683,8 @@ def q_committed_write_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     (covers S6/S9/A5: the manifest metrics ARE the one aggregate
     `sinks.commit` runs over its staged files)."""
     from .. import sinks
-    from . import pipeline as pl
 
-    out = f"{_scratch_dir()}/out"
-
-    def build(s):
-        return sinks.with_partition_cols(
-            pl.run_pipeline(s, sf_dir), granularity="minute"
-        ).select(
-            "url", "ds", "salt", "doc_id", "keep", "drop_reason", "scrubbed_text"
-        )
-
-    sinks.resume_run(spark, build, out)
+    out, _ = _commit_corpus(spark, sf_dir)
     return sinks.read_manifest(spark, out).select(
         "ds", "n_rows", "n_keep", "out_chars"
     )
@@ -2706,29 +2699,18 @@ def q_timetravel_read_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     The later partition must be invisible, so the result equals the
     same relational derivation the plain write gate uses."""
     from .. import sinks
-    from . import pipeline as pl
 
-    out = f"{_scratch_dir()}/out"
-
-    def build(s):
-        return sinks.with_partition_cols(
-            pl.run_pipeline(s, sf_dir), granularity="minute"
-        ).select(
-            "url", "ds", "salt", "doc_id", "keep", "drop_reason",
-            "scrubbed_text",
-        )
-
-    sinks.resume_run(spark, build, out)
+    out, _ = _commit_corpus(spark, sf_dir)
     cutoff = str(
         sinks.read_manifest(spark, out)
         .agg(F.max("committed_at"))
         .first()[0]
     )
     late = spark.createDataFrame(
-        [("http://late.example/p", "2099-12-31-00-00", 0, 10**9, True,
-          None, "late row")],
-        "url string, ds string, salt long, doc_id long, keep boolean, "
-        "drop_reason string, scrubbed_text string",
+        [("http://late.example/p", "2099-12-31-00-00", 0, 10**9, "en", 1.0,
+          True, None, "late row")],
+        "url string, ds string, salt long, doc_id long, lang_pred string, "
+        "ppl double, keep boolean, drop_reason string, scrubbed_text string",
     )
     sinks.commit(spark, late, out)
     return (
@@ -2751,19 +2733,8 @@ def q_maintenance_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     original write derivation. Promotes compact_partition +
     vacuum_manifest from test-only to oracle-gated."""
     from .. import sinks
-    from . import pipeline as pl
 
-    out = f"{_scratch_dir()}/out"
-
-    def build(s):
-        return sinks.with_partition_cols(
-            pl.run_pipeline(s, sf_dir), granularity="minute"
-        ).select(
-            "url", "ds", "salt", "doc_id", "keep", "drop_reason",
-            "scrubbed_text",
-        )
-
-    rows = sinks.resume_run(spark, build, out)
+    out, rows = _commit_corpus(spark, sf_dir)
     for r in rows:
         sinks.compact_partition(spark, out, r["ds"], target_files=1)
     sinks.vacuum_manifest(spark, out)
@@ -4862,7 +4833,7 @@ def q_url_dedup_within_wm_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM pages_wmdd WHERE doc_id % 4 = 0
         """
     )
-    stream = _file_stream(spark, feed)
+    stream = streaming_inc.file_stream(spark, _staged(feed))
     out = (
         urldedup.with_norm_url(stream.withWatermark("warc_ts", "1 day"))
         .select("norm_url", "warc_ts")

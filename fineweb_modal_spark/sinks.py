@@ -25,8 +25,9 @@ engine generalizes that to *partition-granular snapshot commits*:
   contract.
 
 This module is the only one that knows the committed-table format:
-the partition directory and stage file names, the three partition
-metrics (n_rows / n_keep / out_chars) and the manifest row shape.
+the committed row shape (COMMITTED_COLS), the partition directory and
+stage file names, the three partition metrics (n_rows / n_keep /
+out_chars) and the manifest row shape.
 
 The salt column spreads a skewed host across `n_salts` write tasks
 (host-level skew, north rule) while `partitionBy` on ds keeps the
@@ -56,6 +57,12 @@ STREAM_STAGE_DIR = "_stream_stage"
 # published) files keep their in-file ds column
 _STAGE_KEY = "stage_ds"
 _METRICS = ("n_rows", "n_keep", "out_chars")
+# the pipeline's committed row, in file column order — batch, resume
+# and stream commits into one table all write this shape
+COMMITTED_COLS = (
+    "url", "ds", "salt", "doc_id", "lang_pred", "ppl",
+    "keep", "drop_reason", "scrubbed_text",
+)
 
 # When set (e.g. spark.conf.set(ICEBERG_TABLE_CONF, "cat.db.docs")), a
 # batch commit goes through Iceberg's `writeTo(...).overwritePartitions()`
@@ -84,6 +91,12 @@ def with_partition_cols(
     return df.withColumn(
         "ds", F.date_format(F.date_trunc(granularity, F.col(ts_col)), fmt)
     ).withColumn("salt", F.pmod(F.xxhash64(key_col), F.lit(n_salts)))
+
+
+def committed_rows(df: DataFrame, granularity: str = "day") -> DataFrame:
+    """The pipeline frame `df` in the committed row shape: partition
+    columns added, COMMITTED_COLS selected."""
+    return with_partition_cols(df, granularity=granularity).select(*COMMITTED_COLS)
 
 
 def list_partitions(df: DataFrame) -> list[str]:

@@ -17,7 +17,9 @@ thing:
   canonical streaming agg; the other stateful and train-batch /
   score-stream operators below share its shape.
 
-The memory-sink operators all drain through `run_to_memory`. All
+Every file-source stream comes from `file_stream` (schema from the
+directory's parquet footers, optional maxFilesPerTrigger); the
+memory-sink operators all drain through `run_to_memory`. All
 run on AvailableNow so batch tests and cron-style incremental
 jobs share one code path; a `processingTime` trigger turns the same
 plan into a live stream untouched.
@@ -50,20 +52,29 @@ def run_to_memory(df: DataFrame, output_mode: str, checkpoint: str) -> DataFrame
     return df.sparkSession.table(name)
 
 
+def file_stream(
+    spark: SparkSession, d: str, max_files_per_trigger: int | None = None
+) -> DataFrame:
+    """A readStream over the parquet files in `d`, schema from their
+    footers. `max_files_per_trigger` caps the files per micro-batch
+    (files process in modification-time order); tests pass 1 to force
+    multi-batch runs."""
+    reader = spark.readStream.schema(spark.read.parquet(d).schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.parquet(d)
+
+
 def events_stream(
     spark: SparkSession,
     events_dir: str,
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """A file stream over an events directory, `ts` as TIMESTAMP."""
-    schema = spark.read.parquet(events_dir).schema  # schema from footer
     # fixture ts is TIMESTAMP_NTZ; watermarks require TIMESTAMP (LTZ) —
     # gate dispatch pins the session TZ to UTC (plans/queries.py
     # _tz_pinned) so the cast is value-preserving in any environment
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(events_dir).withColumn(
+    return file_stream(spark, events_dir, max_files_per_trigger).withColumn(
         "ts", F.col("ts").cast("timestamp")
     )
 
@@ -108,11 +119,8 @@ def dedup_stream(
     exactly-once across micro-batches (state = seen keys inside the
     watermark window — bounded, unlike an unwatermarked distinct).
     Writes the deduplicated rows to out_dir; returns None."""
-    schema = spark.read.parquet(pages_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .parquet(pages_dir)
-        .withColumn("warc_ts", F.col("warc_ts").cast("timestamp"))
+    stream = file_stream(spark, pages_dir).withColumn(
+        "warc_ts", F.col("warc_ts").cast("timestamp")
     )
     deduped = stream.withWatermark("warc_ts", "1 day").dropDuplicates(
         ["url", "warc_ts"]
@@ -268,11 +276,7 @@ def windowed_token_histogram(
     from ..functions import sqldialect as sd
     from ..spec import hashing as H
 
-    schema = spark.read.parquet(pages_dir).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(pages_dir).withColumn(
+    stream = file_stream(spark, pages_dir, max_files_per_trigger).withColumn(
         "warc_ts", F.col("warc_ts").cast("timestamp")
     )
     toks = H.tokens_lower("text", sd.SPARK)
@@ -305,7 +309,7 @@ def lm_score_stream(
 
     batch = spark.read.parquet(docs_dir)
     model, uni, n_total = ngramlm.train_model(batch)
-    stream = spark.readStream.schema(batch.schema).parquet(docs_dir)
+    stream = file_stream(spark, docs_dir)
     scored = ngramlm.score_against_model(stream, model, uni, n_total)
     return run_to_memory(scored, "complete", checkpoint)
 
@@ -328,7 +332,7 @@ def dsir_score_stream(
 
     batch = spark.read.parquet(docs_dir)
     ratio_rows = reweight.train_dsir_ratio(batch).collect()
-    stream = spark.readStream.schema(batch.schema).parquet(docs_dir)
+    stream = file_stream(spark, docs_dir)
     tok_count, lw = reweight.dsir_literal_score_exprs(ratio_rows)
     scored = stream.select(
         "doc_id", tok_count.alias("tok_count"), lw.alias("lw_micro")
@@ -352,7 +356,7 @@ def edu_score_stream(
 
     batch = spark.read.parquet(emb_dir)
     cent = similarity.train_edu_centroid(batch)
-    stream = spark.readStream.schema(batch.schema).parquet(emb_dir)
+    stream = file_stream(spark, emb_dir)
     scored = similarity.edu_scores(stream, cent)
     return run_to_memory(scored, "append", checkpoint)
 
@@ -369,13 +373,8 @@ def scrub_stats_stream(
     ⇒ hash-equals the batch scrub_stats oracle."""
     from ..operators import scrub
 
-    batch = spark.read.parquet(pages_dir)
-    stream = (
-        spark.readStream.schema(batch.schema)
-        .parquet(pages_dir)
-        .withColumn(
-            "host", F.regexp_extract("url", r"https://([^./]+)", 1)
-        )
+    stream = file_stream(spark, pages_dir).withColumn(
+        "host", F.regexp_extract("url", r"https://([^./]+)", 1)
     )
     agg = scrub.scrub_stats(stream, by="host")
     return run_to_memory(agg, "complete", checkpoint)
@@ -412,23 +411,14 @@ def stream_commit_pages(
     from .. import sinks
 
     total = {"n": 0}
-    schema = spark.read.parquet(pages_dir).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
 
     def _commit(bdf: DataFrame, epoch_id: int) -> None:
-        part = sinks.with_partition_cols(
-            pl.pipeline_df(bdf), granularity=granularity
-        ).select(
-            "url", "ds", "salt", "doc_id", "lang_pred", "ppl",
-            "keep", "drop_reason", "scrubbed_text",
-        )
+        part = sinks.committed_rows(pl.pipeline_df(bdf), granularity=granularity)
         rows = sinks.commit(spark, part, out_dir, epoch_id, publish_hook)
         total["n"] += sum(r["n_rows"] for r in rows)
 
     q = (
-        reader.parquet(pages_dir)
+        file_stream(spark, pages_dir, max_files_per_trigger)
         .writeStream.foreachBatch(_commit)
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
@@ -517,13 +507,9 @@ def pack_layout_stream(
             }
         )
 
-    batch_schema = spark.read.parquet(docs_dir).schema
-    reader = spark.readStream.schema(batch_schema)
-    if max_files_per_trigger is not None:
-        # test hook: force multi-batch execution (files process in
-        # modification-time order) to prove state continuation
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(docs_dir).select("doc_id", "source", "n_chars")
+    stream = file_stream(spark, docs_dir, max_files_per_trigger).select(
+        "doc_id", "source", "n_chars"
+    )
     packed = stream.groupBy("source").applyInPandasWithState(
         _pack_fn,
         out_schema,

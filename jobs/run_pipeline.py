@@ -111,12 +111,15 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--checkpoint", default=None)
     ap.add_argument(
         "--gopher", action="store_true",
-        help="also apply the gopher repetition/structure battery: keep "
-             "becomes quality AND gopher, first battery's reason wins",
+        help="batch/resume: also apply the gopher repetition/structure "
+             "battery: keep becomes quality AND gopher, first battery's "
+             "reason wins",
     )
     args = ap.parse_args(argv)
     if args.mode.startswith("score-") and not args.model:
         ap.error(f"--mode {args.mode} needs --model (the directory train-{args.mode[6:]} wrote)")
+    if args.gopher and args.mode not in ("batch", "resume"):
+        ap.error(f"--gopher applies to --mode batch|resume only, not {args.mode}")
 
     # Import AFTER spark-submit has placed the --py-files zip on the path.
     from pyspark.sql import SparkSession
@@ -252,14 +255,7 @@ def main(argv: list[str] | None = None) -> int:
         rec = registry.curation_record(spark, args.input)
         docs = spark.read.parquet(f"{args.input.rstrip('/')}/documents.parquet")
         admitted = rec.where(F2.col("final_keep")).select("doc_id")
-        curated = (
-            docs.join(admitted, "doc_id")
-            .withColumn(
-                "scrubbed_text",
-                scrub_mod.scrub_expr(F2.coalesce("text", F2.lit(""))),
-            )
-            .drop("text")
-        )
+        curated = scrub_mod.with_scrubbed(docs.join(admitted, "doc_id")).drop("text")
         curated.write.mode("overwrite").parquet(args.output)
         back = spark.read.parquet(args.output)
         funnel = rec.agg(
@@ -385,16 +381,11 @@ def main(argv: list[str] | None = None) -> int:
                 df = gopher.compose_keep(
                     df,
                     carry=(
-                        "url", "warc_ts", "doc_id", "lang_pred",
+                        "url", "warc_ts", "doc_id", "lang_pred", "ppl",
                         "scrubbed_text",
                     ),
                 )
-            return sinks.with_partition_cols(
-                df, granularity=args.granularity
-            ).select(
-                "url", "ds", "salt", "doc_id", "lang_pred", "keep",
-                "drop_reason", "scrubbed_text",
-            )
+            return sinks.committed_rows(df, granularity=args.granularity)
 
         if args.mode == "resume":
             rows = sinks.resume_run(spark, build, args.output)

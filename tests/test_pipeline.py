@@ -62,15 +62,19 @@ def test_pages_python_mirror(spark):
 
 def test_pipeline_f1_vs_reference_labels(spark):
     """north rule: keep/drop F1 ≥ 0.99 and byte-identical scrubbed text
-    vs the reference labels (pure-Python implementation of the spec)."""
+    vs the reference labels (pure-Python implementation of the spec).
+    Every row's (keep, drop_reason) also equals the spec's, so the
+    language-gated stopword rule is checked row by row."""
     out = pipeline.run_pipeline(spark, SF_ORACLE).select(
-        "url", "text", "lang_pred", "keep", "scrubbed_text"
+        "url", "text", "lang_pred", "keep", "drop_reason", "scrubbed_text"
     ).collect()
     tp = fp = fn = tn = 0
     for r in out:
         lang, _ = langid_model.predict_one(r.text)
         assert lang == r.lang_pred
-        want_keep, _ = quality_rules.keep_py(r.text, lang_pred=lang)
+        want = quality_rules.keep_py(r.text, lang_pred=lang)
+        assert (r.keep, r.drop_reason) == want, (r.url, want)
+        want_keep = want[0]
         if r.keep and want_keep:
             tp += 1
         elif r.keep and not want_keep:

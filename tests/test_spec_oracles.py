@@ -187,7 +187,7 @@ def test_quality_sql_renderings_null_text(spark):
         ).fetchall()
     }
 
-    # Spark-dialect SQL rendering (the third rendering)
+    # the SPARK rendering as SQL text (the operator runs it as F.expr)
     df.createOrReplaceTempView("t_nulltext")
     got_spark_sql = {
         r.doc_id: (r.keep, r.drop_reason)
@@ -204,7 +204,7 @@ def test_quality_sql_renderings_null_text(spark):
     assert got_spark[0] == (False, "too_few_words")
 
     # n_words parity on whitespace-EDGED text (SQL trim() strips spaces
-    # only — the ws_trim fix keeps all three renderings on str.strip())
+    # only — the ws_trim fix keeps both dialects on str.strip())
     nw_spark = {
         r.doc_id: r.n_words
         for r in quality.with_signals(df).select("doc_id", "n_words").collect()
@@ -240,9 +240,10 @@ GOPHER_TEXTS = [
 
 
 def test_gopher_three_renderings_match_python_spec(spark):
-    """Spark operator, Spark-SQL rendering, and DuckDB rendering of the
-    gopher signals + keep must all equal the pure-Python spec on texts
-    that exercise every rule (incl. NULL text)."""
+    """The gopher signals + keep, run three ways — the Spark operator
+    (chained selectExpr) and spark.sql over the SPARK rendering, and
+    DuckDB over the DUCKDB rendering — must all equal the pure-Python
+    spec on texts that exercise every rule (incl. NULL text)."""
     import duckdb
 
     from fineweb_modal_spark.functions import sqldialect as sd
@@ -272,7 +273,7 @@ def test_gopher_three_renderings_match_python_spec(spark):
         {r.doc_id: (r.keep, r.drop_reason) for r in op.collect()},
     )
 
-    # 2. Spark-SQL rendering
+    # 2. the same SPARK rendering as nested SQL
     df.createOrReplaceTempView("t_gopher")
     ssig = spark.sql(gopher.signals_sql(sd.SPARK, table="t_gopher", round_out=False))
     skeep = spark.sql(gopher.keep_sql(sd.SPARK, table="t_gopher"))

@@ -75,6 +75,18 @@ def test_score_modes_require_model(mode, tmp_path):
     assert exc.value.code == 2
 
 
+def test_gopher_rejected_in_stream_commit(tmp_path):
+    """--gopher with --mode stream-commit is a usage error before any
+    Spark session starts: only batch and resume compose the gopher
+    battery, so the flag would be silently ignored."""
+    import jobs.run_pipeline as job
+
+    with pytest.raises(SystemExit) as exc:
+        job.main(["--input", str(tmp_path), "--output", str(tmp_path / "out"),
+                  "--mode", "stream-commit", "--gopher"])
+    assert exc.value.code == 2
+
+
 def test_job_gopher_flag(spark, tmp_path):
     """--gopher composes the second battery into the shipped job:
     output schema unchanged, keep implies quality-keep (combined rule
