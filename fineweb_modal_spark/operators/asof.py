@@ -75,39 +75,3 @@ def asof_join(
         out = out.drop(c).withColumnRenamed(f"__asof_{c}", c)
     return out
 
-
-def asof_join_broadcast(
-    facts: DataFrame,
-    dim: DataFrame,
-    key: str,
-    facts_ts: str = "ts",
-    dim_ts: str = "rate_ts",
-    value_cols: tuple[str, ...] = ("rate",),
-) -> DataFrame:
-    """As-of via a broadcast version-array — the plan for SMALL dims.
-
-    The union-window plan shuffles facts by the join key; with a
-    low-cardinality key (10 rate symbols, say) that is a hot-partition
-    hazard at 100 TB. When the dim fits a broadcast (the common case
-    for rates/config tables), collapse it to ONE row per key holding
-    the ts-sorted version array, broadcast-join it to facts (no
-    shuffle of facts at all), and pick the latest at-or-before version
-    with a row-local array filter — O(versions-per-key) per fact, all
-    codegen.
-    """
-    varr = dim.groupBy(key).agg(
-        F.array_sort(
-            F.collect_list(F.struct(F.col(dim_ts).alias("ts"), *value_cols))
-        ).alias("__versions")
-    )
-    out = facts.join(F.broadcast(varr), on=key, how="left")
-    # try_element_at: under ANSI mode (Spark 4 default) element_at(-1)
-    # on an EMPTY filtered array throws instead of returning NULL — a
-    # fact before any version must yield NULL like the window plan
-    pick = F.expr(
-        f"try_element_at(filter(__versions, v -> v.ts <= {facts_ts}), -1)"
-    )
-    out = out.withColumn("__pick", pick).drop("__versions")
-    for c in value_cols:
-        out = out.withColumn(c, F.col(f"__pick.{c}"))
-    return out.drop("__pick")

@@ -54,7 +54,7 @@ def chunk_output_schema(
     return StructType(fields)
 
 
-def chunk_udtf(use_arrow: bool = True):
+def chunk_udtf():
     """The chunker as a real Python UDTF (`pyspark.sql.functions.udtf`,
     Arrow-optimized) for SQL LATERAL-join consumption:
 
@@ -75,7 +75,7 @@ def chunk_udtf(use_arrow: bool = True):
     return udtf(
         ChunkWindows,
         returnType="chunk_index: int, chunk_token_count: int",
-        useArrow=use_arrow,
+        useArrow=True,
     )
 
 

@@ -31,13 +31,6 @@ from pyspark.sql.types import (
 from ..spec import embed_model
 
 
-@pandas_udf(ArrayType(FloatType()))
-def embed_udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    for texts in batches:
-        mat = embed_model.embed_batch(texts.fillna("").tolist())
-        yield pd.Series(list(mat))
-
-
 _FULL_TYPE = StructType(
     [
         StructField("embedding", ArrayType(FloatType())),
@@ -60,12 +53,6 @@ def embed_full_udf(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
         yield pd.DataFrame(
             {"embedding": list(vecs), "norm_sq": ns, "sig": sigs}
         )
-
-
-def with_embedding(
-    df: DataFrame, text_col: str = "text", out_col: str = "embedding"
-) -> DataFrame:
-    return df.withColumn(out_col, embed_udf(F.col(text_col)))
 
 
 def with_embedding_sig(df: DataFrame, text_col: str = "text") -> DataFrame:

@@ -7,11 +7,11 @@ connector re-expresses that fan-out Spark-side:
 
 * the DRIVER touches only file NAMES (os.listdir) and ONE schema
   (first shard's header) — metadata-sized, never row data;
-* the file list becomes a one-path-per-row DataFrame, repartitioned so
-  each task owns ~one shard — the Spark analog of the reference's
+* the file list becomes one task per shard (`shards.scan`, shared
+  with the WARC/CDX readers) — the Spark analog of the reference's
   one-file-per-container map;
-* `mapInPandas` opens its shard(s) with pyarrow and yields ONE pandas
-  frame PER RECORD BATCH, so peak task memory is a batch, not a file.
+* each task opens its shard with pyarrow and yields ONE pandas frame
+  PER RECORD BATCH, so peak task memory is a batch, not a file.
 
 Scale notes: parallelism is file-granular (an IPC *file*-format shard
 is random-accessible per record batch, but a *stream*-format shard —
@@ -27,15 +27,9 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from . import shards
 
-def list_shards(shard_dir: str, suffix: str = ".arrow") -> list[str]:
-    if not os.path.isdir(shard_dir):
-        return []
-    return sorted(
-        os.path.join(shard_dir, f)
-        for f in os.listdir(shard_dir)
-        if f.endswith(suffix)
-    )
+ARROW_EXT = (".arrow",)
 
 
 def _open_reader(path: str):
@@ -50,44 +44,43 @@ def _open_reader(path: str):
     return pa.ipc.open_stream(pa.input_stream(path))
 
 
+def iter_batches(path: str, columns: list[str] | None = None):
+    """Every record batch of one shard, in order, pruned to `columns`."""
+    r = _open_reader(path)
+    batches = (
+        (r.get_batch(i) for i in range(r.num_record_batches))
+        if hasattr(r, "num_record_batches")
+        else iter(r)
+    )
+    for batch in batches:
+        yield batch if columns is None else batch.select(columns)
+
+
+def _spark_schema(path: str, columns: list[str] | None = None):
+    """Spark schema from one shard's header (metadata-sized)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    schema = _open_reader(path).schema
+    if columns is not None:
+        schema = pa.schema([schema.field(c) for c in columns])
+    return from_arrow_schema(schema)
+
+
 def read_arrow_ipc(
     spark: SparkSession,
     shard_dir: str,
     columns: list[str] | None = None,
 ) -> DataFrame:
-    """Distributed scan over every `.arrow` shard in `shard_dir`."""
-    from pyspark.sql.pandas.types import from_arrow_schema
-
-    paths = list_shards(shard_dir)
-    if not paths:
-        raise FileNotFoundError(f"no .arrow shards under {shard_dir}")
-
-    reader = _open_reader(paths[0])
-    arrow_schema = reader.schema
-    if columns is not None:
-        import pyarrow as pa
-
-        arrow_schema = pa.schema([arrow_schema.field(c) for c in columns])
-    spark_schema = from_arrow_schema(arrow_schema)
-
-    def scan(frames):
-        for pdf in frames:
-            for path in pdf["path"]:
-                r = _open_reader(path)
-                batches = (
-                    (r.get_batch(i) for i in range(r.num_record_batches))
-                    if hasattr(r, "num_record_batches")
-                    else iter(r)
-                )
-                for batch in batches:
-                    if columns is not None:
-                        batch = batch.select(columns)
-                    yield batch.to_pandas()
-
-    files = spark.createDataFrame(
-        [(p,) for p in paths], "path string"
-    ).repartition(len(paths))
-    return files.mapInPandas(scan, schema=spark_schema)
+    """Distributed scan over every `.arrow` shard in `shard_dir`: one
+    pandas frame per record batch."""
+    return shards.scan(
+        spark,
+        shard_dir,
+        ARROW_EXT,
+        lambda path: (b.to_pandas() for b in iter_batches(path, columns)),
+        lambda first: _spark_schema(first, columns),
+    )
 
 
 def make_arrow_ipc_datasource():
@@ -117,12 +110,7 @@ def make_arrow_ipc_datasource():
             return [InputPartition(p) for p in self._paths]
 
         def read(self, partition):
-            r = _open_reader(partition.value)
-            if hasattr(r, "num_record_batches"):
-                for i in range(r.num_record_batches):
-                    yield r.get_batch(i)
-            else:
-                yield from r
+            yield from iter_batches(partition.value)
 
     from pyspark.sql.datasource import (
         DataSourceArrowWriter,
@@ -136,31 +124,27 @@ def make_arrow_ipc_datasource():
 
     class _Writer(DataSourceArrowWriter):
         """Task-local stream-format shard + driver-side commit rename:
-        each task streams its RecordBatches into `_tmp-<uuid>.arrow.tmp`
+        each task streams its RecordBatches into a `.tmp` shard
         (batch-at-a-time memory, no row materialization), returns the
         tmp path + row count as its commit message, and the driver's
-        commit() renames the survivors to HF-style
-        `data-{i:05d}-of-{n:05d}.arrow` — torn runs leave only `.arrow.tmp`
-        files that list_shards() ignores, so readers never observe a
-        partial write (the same publish-by-rename discipline as
-        sinks.write_committed)."""
+        commit() publishes the survivors as HF-style
+        `data-{i:05d}-of-{n:05d}.arrow` (`shards.publish`: overwrite
+        replaces the shard set, append renumbers it) — torn runs leave
+        only `.tmp` files that no listing matches, so readers never
+        observe a partial write (the same discipline as sinks.commit)."""
 
         def __init__(self, out_dir: str, overwrite: bool):
             self._out = out_dir
             self._overwrite = overwrite
 
         def write(self, batches):
-            import uuid
-
             import pyarrow as pa
 
             os.makedirs(self._out, exist_ok=True)
             tmp, writer, n = None, None, 0
             for batch in batches:
                 if writer is None:
-                    tmp = os.path.join(
-                        self._out, f"_tmp-{uuid.uuid4().hex}.arrow.tmp"
-                    )
+                    tmp = shards.tmp_path(self._out, "data")
                     writer = pa.ipc.new_stream(tmp, batch.schema)
                 writer.write_batch(batch)
                 n += batch.num_rows
@@ -174,32 +158,10 @@ def make_arrow_ipc_datasource():
                 for m in messages
                 if m is not None and m.tmp_path
             ]
-            existing: list[str] = []
-            if self._overwrite:
-                for f in list_shards(self._out):
-                    os.remove(f)
-            else:
-                # append mode: new shards slot AFTER the existing ones
-                # and every shard (old + new) is renamed to the new
-                # of-N suffix so the directory's naming contract
-                # (data-{i}-of-{total}) stays true. total grows, so
-                # the new suffix never collides with an old name.
-                existing = sorted(list_shards(self._out))
-            total = len(existing) + len(tmps)
-            for i, old in enumerate(existing):
-                dst = os.path.join(
-                    self._out, f"data-{i:05d}-of-{total:05d}.arrow"
-                )
-                if old != dst:
-                    os.rename(old, dst)
-            for j, tmp in enumerate(sorted(tmps)):
-                i = len(existing) + j
-                os.rename(
-                    tmp,
-                    os.path.join(
-                        self._out, f"data-{i:05d}-of-{total:05d}.arrow"
-                    ),
-                )
+            shards.publish(
+                tmps, self._out, "data", ".arrow", ARROW_EXT,
+                append=not self._overwrite,
+            )
 
         def abort(self, messages):
             for m in messages:
@@ -215,20 +177,14 @@ def make_arrow_ipc_datasource():
             return "arrow_ipc"
 
         def schema(self):
-            from pyspark.sql.pandas.types import from_arrow_schema
-
             path = self.options.get("path")
             if not path:
                 raise ValueError("arrow_ipc requires .load(<shard_dir>)")
-            shards = list_shards(path)
-            if not shards:
-                raise ValueError(
-                    f"arrow_ipc: no .arrow shards under {path}"
-                )
-            return from_arrow_schema(_open_reader(shards[0]).schema)
+            return _spark_schema(shards.require_shards(path, ARROW_EXT)[0])
 
         def reader(self, schema):
-            return _Reader(list_shards(self.options["path"]))
+            path = self.options["path"]
+            return _Reader(shards.require_shards(path, ARROW_EXT))
 
         def writer(self, schema, overwrite: bool):
             path = self.options.get("path")

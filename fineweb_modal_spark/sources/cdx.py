@@ -6,10 +6,10 @@ member byte length) precisely so a consumer can pull ONE page out of a
 per-record-gzip-member layout exists to make those spans addressable.
 This module reproduces that contract Spark-side:
 
-* `build_cdx` — distributed (one task per shard, same file-granular
-  parallelism as warc.read_warc): walks each shard's members ONCE with
-  a streaming per-member `zlib.decompressobj` (peak task memory is a
-  chunk plus one record, never the file) and emits
+* `build_cdx` — distributed (one task per shard, the same
+  `shards.scan_rows` as warc.read_warc): walks each shard's members
+  ONCE with a streaming per-member `zlib.decompressobj` (peak task
+  memory is a chunk plus one record, never the file) and emits
   (url, warc_ts, shard, offset, length) for every response record.
   Plain `.warc` shards index the record's byte span the same way.
 * `fetch_records` — the read side of the contract: takes any subset of
@@ -28,12 +28,12 @@ from __future__ import annotations
 
 import gzip
 import io
-import os
 import zlib
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import shards
 from . import warc as warc_mod
 
 _CHUNK = 1 << 20
@@ -119,51 +119,27 @@ def _parse_record(rec: bytes):
     return next(warc_mod.iter_warc_records(io.BytesIO(rec)))
 
 
+def _index_rows(path: str):
+    """One streaming pass over a shard's members → an index row per
+    response record (warcinfo/request members stay addressable but
+    nobody looks pages up by them)."""
+    for off, length, rec in iter_member_spans(path):
+        headers, _ = _parse_record(rec)
+        if headers.get("warc-type") == "response":
+            yield (
+                headers["warc-target-uri"],
+                warc_mod._parse_warc_date(headers["warc-date"]),
+                path,
+                off,
+                length,
+            )
+
+
 def build_cdx(spark: SparkSession, warc_dir: str) -> DataFrame:
-    """Distributed index build: one task per shard, one streaming pass
-    per shard; only response records are indexed (warcinfo/request
-    members stay addressable but nobody looks pages up by them)."""
-    import pandas as pd
-
-    paths = warc_mod.list_warc_shards(warc_dir)
-    if not paths:
-        raise FileNotFoundError(f"no .warc[.gz] shards under {warc_dir}")
-
-    def scan(frames):
-        for pdf in frames:
-            for path in pdf["path"]:
-                rows: list[tuple] = []
-                for off, length, rec in iter_member_spans(path):
-                    headers, _ = _parse_record(rec)
-                    if headers.get("warc-type") != "response":
-                        continue
-                    rows.append(
-                        (
-                            headers["warc-target-uri"],
-                            warc_mod._parse_warc_date(headers["warc-date"]),
-                            path,
-                            off,
-                            length,
-                        )
-                    )
-                    if len(rows) >= warc_mod._BATCH_ROWS:
-                        yield pd.DataFrame(
-                            rows,
-                            columns=[
-                                "url", "warc_ts", "shard", "offset", "length",
-                            ],
-                        )
-                        rows = []
-                if rows:
-                    yield pd.DataFrame(
-                        rows,
-                        columns=["url", "warc_ts", "shard", "offset", "length"],
-                    )
-
-    files = spark.createDataFrame(
-        [(p,) for p in paths], "path string"
-    ).repartition(len(paths))
-    return files.mapInPandas(scan, schema=CDX_SCHEMA)
+    """Distributed index build: one task per shard."""
+    return shards.scan_rows(
+        spark, warc_dir, warc_mod.WARC_EXT, _index_rows, CDX_SCHEMA
+    )
 
 
 def fetch_one(shard: str, offset: int, length: int):
@@ -185,16 +161,11 @@ def fetch_records(index: DataFrame) -> DataFrame:
     sweep its shard forward (sequential-ish I/O on spinning object
     stores); total bytes read is sum(length) — point lookups, not a
     scan."""
-    import pandas as pd
+    n_shards = max(1, int(index.select("shard").distinct().count()))
+    n = shards.BATCH_ROWS  # read here, on the driver: the closure carries it
 
-    spark = index.sparkSession
-    n_shards = max(
-        1, int(index.select("shard").distinct().count())
-    )
-
-    def fetch(frames):
+    def fetched(frames):
         for pdf in frames:
-            rows: list[tuple] = []
             for url, shard, off, length in zip(
                 pdf["url"], pdf["shard"], pdf["offset"], pdf["length"]
             ):
@@ -204,30 +175,15 @@ def fetch_records(index: DataFrame) -> DataFrame:
                         f"index/record mismatch at {shard}:{off} "
                         f"({headers.get('warc-target-uri')} != {url})"
                     )
-                status, payload = warc_mod._parse_http_response(body)
-                rows.append(
-                    (
-                        url,
-                        warc_mod._parse_warc_date(headers["warc-date"]),
-                        status,
-                        payload,
-                    )
-                )
-                if len(rows) >= warc_mod._BATCH_ROWS:
-                    yield pd.DataFrame(
-                        rows,
-                        columns=["url", "warc_ts", "http_status", "html"],
-                    )
-                    rows = []
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=["url", "warc_ts", "http_status", "html"]
-                )
+                yield warc_mod.response_row(headers, body)
 
     co = index.repartition(n_shards, "shard").sortWithinPartitions(
         "shard", "offset"
     )
-    return co.mapInPandas(fetch, schema=warc_mod.WARC_SCHEMA)
+    return co.mapInPandas(
+        lambda frames: shards.batched(fetched(frames), n),
+        schema=warc_mod.WARC_SCHEMA,
+    )
 
 
 def surt_sql(col: str, dialect: str) -> str:

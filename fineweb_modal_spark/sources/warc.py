@@ -7,25 +7,22 @@ WARC headers + an HTTP response whose body is the html), and the
 extracted-text product ships as `.warc.wet.gz` (conversion records).
 This module closes that loop Spark-side:
 
-* `read_warc` / `read_wet` — distributed scans: the DRIVER touches
-  only file NAMES; the file list becomes a one-path-per-row DataFrame
-  repartitioned one-shard-per-task (gzip members are not splittable,
-  so file-granular parallelism is the honest contract — exactly how
-  Common Crawl shards are consumed in practice: throughput scales
-  with shard count, and CC publishes ~72k shards per crawl).
-  Records stream through a Content-Length-driven parser (payloads may
-  contain `\\r\\n\\r\\n`; only the length field delimits), batched into
-  pandas frames of `_BATCH_ROWS` so peak task memory is a batch, not
-  a file.
+* `read_warc` / `read_wet` / `read_wat` — distributed scans, one
+  task per shard (`shards.scan_rows`; gzip members are not
+  splittable — exactly how Common Crawl shards are consumed in
+  practice: throughput scales with shard count, and CC publishes ~72k
+  shards per crawl). Records stream through a Content-Length-driven
+  parser (payloads may contain `\\r\\n\\r\\n`; only the length field
+  delimits); each reader is a per-record row function.
 * `write_wet_shards` / `write_wat_shards` — DISTRIBUTED export
   sinks (WET = extracted text as conversion records; WAT = per-page
   JSON metadata envelopes carrying the outlinks extracted Spark-side
   by linkgraph.with_links): each task streams
   its partition into a `.tmp` shard and returns (tmp_path, n_rows);
   the driver's commit renames survivors to
-  `wet-{i:05d}-of-{n:05d}.warc.wet[.gz]` — the same publish-by-rename
-  discipline as sinks.write_committed and the arrow_ipc writer, so a
-  torn run leaves only `.tmp` files that readers ignore.
+  `wet-{i:05d}-of-{n:05d}.warc.wet[.gz]` (`shards.publish`, shared
+  with the arrow_ipc writer; the same discipline as sinks.commit), so
+  a torn run leaves only `.tmp` files that readers ignore.
 * `write_warc_shards` — driver-side FIXTURE generator (at scale the
   WARCs already exist; nobody writes Common Crawl). It derives the
   deterministic pages corpus (sources/pages.derive_page_py) from the
@@ -43,14 +40,22 @@ from __future__ import annotations
 import gzip
 import hashlib
 import io
+import json
 import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from . import shards
+
 WARC_DATE_FMT = "%Y-%m-%dT%H:%M:%SZ"
-_BATCH_ROWS = 512
 _CRLF = b"\r\n"
+
+# product suffixes, plain then gzip: a suffix match alone keeps the
+# three CC products apart in one directory
+WARC_EXT = (".warc", ".warc.gz")
+WET_EXT = (".warc.wet", ".warc.wet.gz")
+WAT_EXT = (".warc.wat", ".warc.wat.gz")
 
 WARC_SCHEMA = "url string, warc_ts timestamp, http_status int, html binary"
 WET_SCHEMA = "url string, warc_ts timestamp, text string"
@@ -58,30 +63,6 @@ WAT_SCHEMA = (
     "url string, warc_ts timestamp, "
     "links array<struct<url: string, text: string>>"
 )
-
-
-def list_warc_shards(
-    shard_dir: str, wet: bool = False, wat: bool = False
-) -> list[str]:
-    """Published shards only — `.tmp` partials are never visible."""
-    if not os.path.isdir(shard_dir):
-        return []
-    if wet:
-        want = (".warc.wet", ".warc.wet.gz")
-    elif wat:
-        want = (".warc.wat", ".warc.wat.gz")
-    else:
-        want = (".warc", ".warc.gz")
-    out = []
-    for f in os.listdir(shard_dir):
-        if f.endswith(want) and not f.endswith(".tmp"):
-            # a plain-warc listing must not pick up wet/wat shards
-            if not wet and not wat and (
-                ".warc.wet" in f or ".warc.wat" in f
-            ):
-                continue
-            out.append(os.path.join(shard_dir, f))
-    return sorted(out)
 
 
 def _record_id(url: str) -> str:
@@ -263,87 +244,72 @@ def _parse_warc_date(s: str):
     return datetime.datetime.strptime(s, WARC_DATE_FMT)
 
 
+def response_row(headers: dict[str, str], body: bytes) -> tuple:
+    """One response record → (url, warc_ts, http_status, html)."""
+    status, payload = _parse_http_response(body)
+    return (
+        headers["warc-target-uri"],
+        _parse_warc_date(headers["warc-date"]),
+        status,
+        payload,
+    )
+
+
+def _wet_row(headers: dict[str, str], body: bytes) -> tuple:
+    return (
+        headers["warc-target-uri"],
+        _parse_warc_date(headers["warc-date"]),
+        body.decode("utf-8"),
+    )
+
+
+def _wat_row(headers: dict[str, str], body: bytes) -> tuple:
+    env = json.loads(body)["Envelope"]
+    links = env["Payload-Metadata"]["HTTP-Response-Metadata"][
+        "HTML-Metadata"
+    ]["Links"]
+    return (
+        headers["warc-target-uri"],
+        _parse_warc_date(headers["warc-date"]),
+        [{"url": l["url"], "text": l["text"]} for l in links],
+    )
+
+
+def _rows(warc_type: str, row):
+    """path → `row(headers, body)` for each `warc_type` record of that
+    shard; every other record type (warcinfo, request, ...) is skipped."""
+
+    def shard_rows(path: str):
+        with _open_stream(path) as f:
+            for headers, body in iter_warc_records(f):
+                if headers.get("warc-type") == warc_type:
+                    yield row(headers, body)
+
+    return shard_rows
+
+
+_response_rows = _rows("response", response_row)
+
+
 def read_warc(spark: SparkSession, warc_dir: str) -> DataFrame:
-    """Distributed response-record scan over every WARC shard.
-
-    One task per shard (gzip members aren't splittable mid-file);
-    non-response records (warcinfo, request, metadata) are skipped.
-    """
-    import pandas as pd
-
-    paths = list_warc_shards(warc_dir)
-    if not paths:
-        raise FileNotFoundError(f"no .warc[.gz] shards under {warc_dir}")
-
-    def scan(frames):
-        for pdf in frames:
-            for path in pdf["path"]:
-                rows: list[tuple] = []
-                with _open_stream(path) as f:
-                    for headers, body in iter_warc_records(f):
-                        if headers.get("warc-type") != "response":
-                            continue
-                        status, payload = _parse_http_response(body)
-                        rows.append(
-                            (
-                                headers["warc-target-uri"],
-                                _parse_warc_date(headers["warc-date"]),
-                                status,
-                                payload,
-                            )
-                        )
-                        if len(rows) >= _BATCH_ROWS:
-                            yield pd.DataFrame(
-                                rows,
-                                columns=["url", "warc_ts", "http_status", "html"],
-                            )
-                            rows = []
-                if rows:
-                    yield pd.DataFrame(
-                        rows, columns=["url", "warc_ts", "http_status", "html"]
-                    )
-
-    files = spark.createDataFrame(
-        [(p,) for p in paths], "path string"
-    ).repartition(len(paths))
-    return files.mapInPandas(scan, schema=WARC_SCHEMA)
+    """Distributed response-record scan over every WARC shard."""
+    return shards.scan_rows(
+        spark, warc_dir, WARC_EXT, _response_rows, WARC_SCHEMA
+    )
 
 
 def read_wet(spark: SparkSession, wet_dir: str) -> DataFrame:
     """Distributed conversion-record scan (extracted-text product)."""
-    import pandas as pd
+    return shards.scan_rows(
+        spark, wet_dir, WET_EXT, _rows("conversion", _wet_row), WET_SCHEMA
+    )
 
-    paths = list_warc_shards(wet_dir, wet=True)
-    if not paths:
-        raise FileNotFoundError(f"no .warc.wet[.gz] shards under {wet_dir}")
 
-    def scan(frames):
-        for pdf in frames:
-            for path in pdf["path"]:
-                rows: list[tuple] = []
-                with _open_stream(path) as f:
-                    for headers, body in iter_warc_records(f):
-                        if headers.get("warc-type") != "conversion":
-                            continue
-                        rows.append(
-                            (
-                                headers["warc-target-uri"],
-                                _parse_warc_date(headers["warc-date"]),
-                                body.decode("utf-8"),
-                            )
-                        )
-                        if len(rows) >= _BATCH_ROWS:
-                            yield pd.DataFrame(
-                                rows, columns=["url", "warc_ts", "text"]
-                            )
-                            rows = []
-                if rows:
-                    yield pd.DataFrame(rows, columns=["url", "warc_ts", "text"])
-
-    files = spark.createDataFrame(
-        [(p,) for p in paths], "path string"
-    ).repartition(len(paths))
-    return files.mapInPandas(scan, schema=WET_SCHEMA)
+def read_wat(spark: SparkSession, wat_dir: str) -> DataFrame:
+    """Distributed metadata-record scan → (url, warc_ts, links)."""
+    return shards.scan_rows(
+        spark, wat_dir, WAT_EXT, _rows("metadata", _wat_row), WAT_SCHEMA
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -372,14 +338,14 @@ def _export_shards(
     make_record,
     out_dir: str,
     prefix: str,
-    plain_ext: str,
+    suffixes: tuple[str, str],
     compress: bool,
 ) -> list[str]:
     """Distributed record-container export: each task streams its
-    partition to `{prefix}-<uuid>.tmp` and reports (tmp_path, n_rows);
-    the driver's commit (one bounded row per PARTITION, never row
-    data) renames survivors into the `{prefix}-{i:05d}-of-{n:05d}`
-    contract. Torn runs leave only `.tmp`, which readers ignore."""
+    partition to a `.tmp` shard and reports (tmp_path, n_rows); the
+    driver's commit (one bounded row per PARTITION, never row data)
+    publishes the survivors (`shards.publish`, overwrite). Torn runs
+    leave only `.tmp`, which readers ignore."""
     import pandas as pd
 
     os.makedirs(out_dir, exist_ok=True)
@@ -388,9 +354,7 @@ def _export_shards(
         tmp, f, n = None, None, 0
         for pdf in frames:
             if len(pdf) and f is None:
-                tmp = os.path.join(
-                    out_dir, f"{prefix}-{uuid.uuid4().hex}.tmp"
-                )
+                tmp = shards.tmp_path(out_dir, prefix)
                 f = open(tmp, "wb")
             for vals in zip(*(pdf[c] for c in cols)):
                 rec = make_record(*vals)
@@ -405,28 +369,10 @@ def _export_shards(
         .mapInPandas(dump, schema="tmp string, n long")
         .collect()  # bounded: one row per non-empty partition
     )
-    ext = plain_ext + (".gz" if compress else "")
-    tmps = sorted(r["tmp"] for r in commits)
-    # overwrite semantics: drop the previously published shard set
-    # BEFORE renaming the new one — a rerun with fewer partitions must
-    # not leave stale `-of-N` shards that readers would double-count
-    # (same discipline as the arrow_ipc writer's overwrite commit)
-    stale = list_warc_shards(
-        out_dir,
-        wet=plain_ext.startswith(".warc.wet"),
-        wat=plain_ext.startswith(".warc.wat"),
+    ext = suffixes[1] if compress else suffixes[0]
+    return shards.publish(
+        [r["tmp"] for r in commits], out_dir, prefix, ext, suffixes
     )
-    for old in stale:
-        if os.path.basename(old).startswith(prefix + "-"):
-            os.remove(old)
-    out = []
-    for i, tmp in enumerate(tmps):
-        dst = os.path.join(
-            out_dir, f"{prefix}-{i:05d}-of-{len(tmps):05d}{ext}"
-        )
-        os.rename(tmp, dst)
-        out.append(dst)
-    return out
 
 
 def write_wet_shards(
@@ -442,7 +388,7 @@ def write_wet_shards(
 
     return _export_shards(
         df, ["url", "warc_ts", "text"], rec, out_dir,
-        "wet", ".warc.wet", compress,
+        "wet", WET_EXT, compress,
     )
 
 
@@ -456,8 +402,6 @@ def _metadata_record(url: str, date_s: str, links) -> bytes:
     HTML-Metadata carries the extracted outlinks in document order.
     Canonical json.dumps (sorted keys, no whitespace) makes the bytes
     a pure function of the row."""
-    import json
-
     env = {
         "Envelope": {
             "WARC-Header-Metadata": {
@@ -510,7 +454,7 @@ def write_wat_shards(
 
     return _export_shards(
         df, ["url", "warc_ts", "links"], rec, out_dir,
-        "wat", ".warc.wat", compress,
+        "wat", WAT_EXT, compress,
     )
 
 
@@ -539,19 +483,6 @@ def make_warc_datasource():
         InputPartition,
     )
 
-    def _rows(path: str):
-        with _open_stream(path) as f:
-            for headers, body in iter_warc_records(f):
-                if headers.get("warc-type") != "response":
-                    continue
-                status, payload = _parse_http_response(body)
-                yield (
-                    headers["warc-target-uri"],
-                    _parse_warc_date(headers["warc-date"]),
-                    status,
-                    payload,
-                )
-
     class _BatchReader(DataSourceReader):
         def __init__(self, paths: list[str]):
             self._paths = paths
@@ -560,7 +491,7 @@ def make_warc_datasource():
             return [InputPartition(p) for p in self._paths]
 
         def read(self, partition):
-            yield from _rows(partition.value)
+            yield from _response_rows(partition.value)
 
     class _StreamReader(DataSourceStreamReader):
         def __init__(self, warc_dir: str):
@@ -570,10 +501,10 @@ def make_warc_datasource():
             return {"n": 0}
 
         def latestOffset(self):
-            return {"n": len(list_warc_shards(self._dir))}
+            return {"n": len(shards.list_shards(self._dir, WARC_EXT))}
 
         def partitions(self, start, end):
-            paths = list_warc_shards(self._dir)
+            paths = shards.list_shards(self._dir, WARC_EXT)
             if len(paths) < end["n"]:
                 raise ValueError(
                     "warc stream: shard listing shrank below the "
@@ -583,7 +514,7 @@ def make_warc_datasource():
             return [InputPartition(p) for p in paths[start["n"]:end["n"]]]
 
         def read(self, partition):
-            yield from _rows(partition.value)
+            yield from _response_rows(partition.value)
 
         def commit(self, end):
             pass
@@ -600,10 +531,7 @@ def make_warc_datasource():
             path = self.options.get("path")
             if not path:
                 raise ValueError("warc requires .load(<shard_dir>)")
-            paths = list_warc_shards(path)
-            if not paths:
-                raise FileNotFoundError(f"no .warc[.gz] shards under {path}")
-            return _BatchReader(paths)
+            return _BatchReader(shards.require_shards(path, WARC_EXT))
 
         def streamReader(self, schema):
             path = self.options.get("path")
@@ -617,51 +545,3 @@ def make_warc_datasource():
 def register_warc_datasource(spark: SparkSession) -> str:
     spark.dataSource.register(make_warc_datasource())
     return "warc"
-
-
-def read_wat(spark: SparkSession, wat_dir: str) -> DataFrame:
-    """Distributed metadata-record scan → (url, warc_ts, links)."""
-    import json
-
-    import pandas as pd
-
-    paths = list_warc_shards(wat_dir, wat=True)
-    if not paths:
-        raise FileNotFoundError(f"no .warc.wat[.gz] shards under {wat_dir}")
-
-    def scan(frames):
-        for pdf in frames:
-            for path in pdf["path"]:
-                rows: list[tuple] = []
-                with _open_stream(path) as f:
-                    for headers, body in iter_warc_records(f):
-                        if headers.get("warc-type") != "metadata":
-                            continue
-                        env = json.loads(body)["Envelope"]
-                        links = env["Payload-Metadata"][
-                            "HTTP-Response-Metadata"
-                        ]["HTML-Metadata"]["Links"]
-                        rows.append(
-                            (
-                                headers["warc-target-uri"],
-                                _parse_warc_date(headers["warc-date"]),
-                                [
-                                    {"url": l["url"], "text": l["text"]}
-                                    for l in links
-                                ],
-                            )
-                        )
-                        if len(rows) >= _BATCH_ROWS:
-                            yield pd.DataFrame(
-                                rows, columns=["url", "warc_ts", "links"]
-                            )
-                            rows = []
-                if rows:
-                    yield pd.DataFrame(
-                        rows, columns=["url", "warc_ts", "links"]
-                    )
-
-    files = spark.createDataFrame(
-        [(p,) for p in paths], "path string"
-    ).repartition(len(paths))
-    return files.mapInPandas(scan, schema=WAT_SCHEMA)

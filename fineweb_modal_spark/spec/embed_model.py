@@ -21,10 +21,11 @@ the float vector (v = c/√norm_sq) while hashing EXACTLY across
 engines, with no float-parity risk. `counts_sql`/`signature_sql`
 render the same spec for either dialect.
 
-Both the Spark operator (operators/embed.py) and the pytest oracle
-call `embed_batch`, so the two sides cannot diverge (the reference's
-own validation strategy — independent re-embed + dot-product compare,
-validate.ipynb cells 41-50).
+The Spark operators (operators/embed.py, operators/chunk_embed.py)
+call `embed_batch_with_sig` and the pytest oracle calls `embed_one`;
+both normalize through `_unit`, so the two sides cannot diverge (the
+reference's own validation strategy — independent re-embed +
+dot-product compare, validate.ipynb cells 41-50).
 """
 
 from __future__ import annotations
@@ -78,8 +79,8 @@ def counts_one(text: str) -> np.ndarray:
     return c
 
 
-def embed_one(text: str) -> np.ndarray:
-    c = counts_one(text)
+def _unit(c: np.ndarray) -> np.ndarray:
+    """Counts → float32 vector, L2-normalized (or zero)."""
     v = c.astype(np.float32)
     n = np.float32(np.sqrt(np.float32((v * v).sum())))
     if n > 0:
@@ -87,12 +88,8 @@ def embed_one(text: str) -> np.ndarray:
     return v
 
 
-def embed_batch(texts: list[str]) -> np.ndarray:
-    """(len(texts), DIM) float32, rows L2-normalized (or zero)."""
-    out = np.zeros((len(texts), DIM), dtype=np.float32)
-    for i, t in enumerate(texts):
-        out[i] = embed_one(t)
-    return out
+def embed_one(text: str) -> np.ndarray:
+    return _unit(counts_one(text))
 
 
 def signature_one(text: str) -> tuple[int, str]:
@@ -116,11 +113,7 @@ def embed_batch_with_sig(
     sigs: list[str] = []
     for i, t in enumerate(texts):
         c = counts_one(t)
-        v = c.astype(np.float32)
-        n32 = np.float32(np.sqrt(np.float32((v * v).sum())))
-        if n32 > 0:
-            v = (v / n32).astype(np.float32)
-        vecs[i] = v
+        vecs[i] = _unit(c)
         ns.append(int((c * c).sum()))
         parts = ",".join(f"{j}:{int(c[j])}" for j in range(DIM) if c[j] != 0)
         sigs.append(hashlib.md5(parts.encode("utf-8")).hexdigest())

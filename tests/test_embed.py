@@ -16,7 +16,7 @@ SF = "/root/testdata/sf0.001"
 
 def test_embed_matches_python_spec(spark):
     docs = load_table(spark, SF, "documents").select("doc_id", "text").limit(50)
-    rows = embed_op.with_embedding(docs).collect()
+    rows = embed_op.with_embedding_sig(docs).collect()
     texts = {r.doc_id: r.text for r in docs.collect()}
     for r in rows:
         want = embed_model.embed_one(texts[r.doc_id])
@@ -27,7 +27,7 @@ def test_embed_matches_python_spec(spark):
 
 def test_embed_unit_norm_and_similarity_sanity(spark):
     docs = load_table(spark, SF, "documents").select("doc_id", "text").limit(100)
-    rows = embed_op.with_embedding(docs).collect()
+    rows = embed_op.with_embedding_sig(docs).collect()
     for r in rows:
         v = np.asarray(r.embedding, dtype=np.float32)
         assert np.linalg.norm(v) == pytest.approx(1.0, abs=1e-5)
@@ -70,7 +70,9 @@ def test_fused_chunk_embed_equals_unfused(spark):
     chunks = chunk_documents(docs, id_col="doc_id", keep_cols=())
     unfused = {
         (r.doc_id, r.chunk_index): (r.chunk_text, r.chunk_token_count, tuple(r.embedding))
-        for r in embed_op.with_embedding(chunks, text_col="chunk_text").collect()
+        for r in embed_op.with_embedding_sig(
+            chunks, text_col="chunk_text"
+        ).collect()
     }
     assert fused.keys() == unfused.keys()
     for k in fused:

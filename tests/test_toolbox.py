@@ -492,27 +492,6 @@ def test_asof_join_semantics(spark):
     assert got == {1: 5.0, 2: 5.0, 3: None, 4: None}
 
 
-def test_asof_broadcast_equals_window_plan(spark):
-    """The broadcast version-array as-of (small-dim plan) must return
-    exactly what the union-window as-of returns on the events/rates
-    pair, including <=-ties and NULL for facts before any version."""
-    from fineweb_modal_spark.operators import asof as asof_op
-
-    ev = load_table(spark, SF, "events").select("event_id", "event_type", "ts")
-    rates = (
-        load_table(spark, SF, "events")
-        .groupBy("event_type", F.date_trunc("hour", "ts").alias("rate_ts"))
-        .agg(F.round(F.avg("value"), 6).alias("rate"))
-    )
-    a = asof_op.asof_join(ev, rates, key="event_type").select(
-        "event_id", "rate"
-    )
-    b = asof_op.asof_join_broadcast(ev, rates, key="event_type").select(
-        "event_id", "rate"
-    )
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
-
-
 def test_cluster_resolution_on_long_chain(spark):
     """A 200-node path graph is the adversarial case for label
     propagation (diameter 199): pointer jumping must still converge
@@ -555,22 +534,6 @@ def test_ivf_pq_recall_vs_brute_force(spark):
     assert planted
     hits = sum(1 for q in planted if top1[q] == q - 100000)
     assert hits / len(planted) >= 0.9, hits / len(planted)
-
-
-def test_asof_broadcast_null_before_any_version(spark):
-    """A fact earlier than every dim version must yield NULL, not an
-    ANSI element_at crash (regression: try_element_at on the empty
-    filtered version array)."""
-    from fineweb_modal_spark.operators import asof as asof_op
-
-    facts = spark.createDataFrame(
-        [(1, 1, "2020-01-01 00:00:00")], "event_id long, k long, ts string"
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-    dim = spark.createDataFrame(
-        [(1, "2024-01-01 00:00:00", 5.0)], "k long, rate_ts string, rate double"
-    ).withColumn("rate_ts", F.col("rate_ts").cast("timestamp"))
-    got = asof_op.asof_join_broadcast(facts, dim, key="k").collect()
-    assert len(got) == 1 and got[0].rate is None
 
 
 def test_cluster_resolution_raises_on_iteration_exhaustion(spark):

@@ -10,6 +10,7 @@ import os
 
 import pytest
 
+from fineweb_modal_spark.sources import shards
 from fineweb_modal_spark.sources import warc as W
 
 from .conftest import SF_ORACLE
@@ -76,11 +77,11 @@ def test_listing_ignores_tmp_and_separates_wet(tmp_path):
     (tmp_path / "a-00000-of-00001.warc").write_bytes(b"")
     (tmp_path / "wet-00000-of-00001.warc.wet.gz").write_bytes(b"")
     (tmp_path / "wet-deadbeef.tmp").write_bytes(b"")
-    assert [os.path.basename(p) for p in W.list_warc_shards(str(tmp_path))] == [
-        "a-00000-of-00001.warc"
-    ]
     assert [
-        os.path.basename(p) for p in W.list_warc_shards(str(tmp_path), wet=True)
+        os.path.basename(p) for p in shards.list_shards(str(tmp_path), W.WARC_EXT)
+    ] == ["a-00000-of-00001.warc"]
+    assert [
+        os.path.basename(p) for p in shards.list_shards(str(tmp_path), W.WET_EXT)
     ] == ["wet-00000-of-00001.warc.wet.gz"]
 
 
@@ -211,9 +212,9 @@ def test_wet_rerun_with_fewer_partitions_leaves_no_stale_shards(
 
     out = str(tmp_path)
     W.write_wet_shards(df(4), out)
-    assert len(W.list_warc_shards(out, wet=True)) == 4
+    assert len(shards.list_shards(out, W.WET_EXT)) == 4
     W.write_wet_shards(df(2), out)
-    names = [os.path.basename(p) for p in W.list_warc_shards(out, wet=True)]
+    names = [os.path.basename(p) for p in shards.list_shards(out, W.WET_EXT)]
     assert names == [
         "wet-00000-of-00002.warc.wet.gz", "wet-00001-of-00002.warc.wet.gz"
     ]
@@ -224,11 +225,11 @@ def test_wat_listing_separate_from_warc(tmp_path):
     (tmp_path / "a-00000-of-00001.warc.gz").write_bytes(b"")
     (tmp_path / "wat-00000-of-00001.warc.wat.gz").write_bytes(b"")
     (tmp_path / "wat-cafebabe.tmp").write_bytes(b"")
-    assert [os.path.basename(p) for p in W.list_warc_shards(str(tmp_path))] == [
-        "a-00000-of-00001.warc.gz"
-    ]
     assert [
-        os.path.basename(p) for p in W.list_warc_shards(str(tmp_path), wat=True)
+        os.path.basename(p) for p in shards.list_shards(str(tmp_path), W.WARC_EXT)
+    ] == ["a-00000-of-00001.warc.gz"]
+    assert [
+        os.path.basename(p) for p in shards.list_shards(str(tmp_path), W.WAT_EXT)
     ] == ["wat-00000-of-00001.warc.wat.gz"]
 
 
@@ -291,3 +292,54 @@ def test_wet_shard_contract_and_counts(spark, tmp_path):
         f"wet-{i:05d}-of-{len(out):05d}.warc.wet.gz" for i in range(len(out))
     ]
     assert W.read_wet(spark, str(tmp_path / "wet")).count() == crawl.count()
+
+
+def test_batch_boundary_loses_no_row(spark, tmp_path, monkeypatch):
+    """A 2-row batch forces flushes mid-shard and 1-row tails (4 shards
+    of 125 records; 3 WET/WAT shards of 166-167): every scan and the
+    CDX fetch must still return exactly the fixture's records."""
+    import pyarrow.parquet as pq
+
+    from fineweb_modal_spark.sources import cdx as C
+    from fineweb_modal_spark.sources import pages as pages_mod
+
+    rows = [(i,) for i in range(5)]
+    assert [len(f) for f in shards.batched(rows, 2)] == [2, 2, 1]
+    monkeypatch.setattr(shards, "BATCH_ROWS", 2)
+
+    cols = ["doc_id", "text", "lang", "n_chars"]
+    pages = [
+        pages_mod.derive_page_py(r["doc_id"], r["text"], r["lang"], r["n_chars"])
+        for r in pq.read_table(DOCS, columns=cols).to_pylist()
+    ]
+    want = sorted((p["url"], p["warc_ts"], 200, p["html"]) for p in pages)
+
+    warc_dir = str(tmp_path / "warc")
+    W.write_warc_shards(DOCS, warc_dir, n_shards=4, compress=True)
+    assert sorted(map(tuple, W.read_warc(spark, warc_dir).collect())) == want
+    index = C.build_cdx(spark, warc_dir)
+    idx = index.collect()
+    assert sorted((r.url, r.warc_ts) for r in idx) == [w[:2] for w in want]
+    assert len({(r.shard, r.offset) for r in idx}) == len(want)
+    assert sorted(map(tuple, C.fetch_records(index).collect())) == want
+
+    wet = sorted((p["url"], p["warc_ts"], p["text"]) for p in pages)
+    wet_dir = str(tmp_path / "wet")
+    W.write_wet_shards(
+        spark.createDataFrame(wet, W.WET_SCHEMA).repartition(3), wet_dir
+    )
+    assert sorted(map(tuple, W.read_wet(spark, wet_dir).collect())) == wet
+
+    wat = sorted(
+        (p["url"], p["warc_ts"], [(p["url"] + "/a", p["lang"])] * (i % 3))
+        for i, p in enumerate(pages)
+    )
+    wat_dir = str(tmp_path / "wat")
+    W.write_wat_shards(
+        spark.createDataFrame(wat, W.WAT_SCHEMA).repartition(3), wat_dir
+    )
+    got = sorted(
+        (r.url, r.warc_ts, [(l.url, l.text) for l in r.links])
+        for r in W.read_wat(spark, wat_dir).collect()
+    )
+    assert got == wat
