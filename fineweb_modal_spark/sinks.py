@@ -27,7 +27,13 @@ engine generalizes that to *partition-granular snapshot commits*:
 This module is the only one that knows the committed-table format:
 the committed row shape (COMMITTED_COLS), the partition directory and
 stage file names, the three partition metrics (n_rows / n_keep /
-out_chars) and the manifest row shape.
+out_chars), the manifest row shape and the parquet codec (CODEC, zstd
+as in Iceberg's default): the staged write that batch, resume and
+stream commits publish, the compaction rewrite and every manifest file
+use it. `read_output` declares the row schema Spark recorded in a
+committed file's footer instead of inferring it, so building the
+reader starts no Spark job and ds reads back as the STRING the files
+and the manifest hold.
 
 The salt column spreads a skewed host across `n_salts` write tasks
 (host-level skew, north rule) while `partitionBy` on ds keeps the
@@ -37,6 +43,7 @@ table layout query-prunable.
 from __future__ import annotations
 
 import glob
+import json
 import os
 import shutil
 import time
@@ -49,8 +56,14 @@ import pyarrow.parquet as pq
 from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 N_SALTS = 16
+# parquet codec of every file the sink writes (staged/published data,
+# compacted data, manifest), at the codec library's default level
+CODEC = "zstd"
+# footer key under which Spark records a parquet file's row schema
+_SPARK_ROW_SCHEMA = b"org.apache.spark.sql.parquet.row.metadata"
 MANIFEST_DIR = "_manifest"
 STREAM_STAGE_DIR = "_stream_stage"
 # the stage is partitioned on a COPY of ds, so the staged (and then
@@ -145,7 +158,7 @@ def _write_manifest_file(mpath: str, table: pa.Table) -> None:
     name = f"part-{time.time_ns():020d}-{uuid.uuid4().hex[:8]}.parquet"
     tmp = os.path.join(mpath, "." + name)
     table = table.select(sorted(table.column_names)).replace_schema_metadata()
-    pq.write_table(table, tmp)
+    pq.write_table(table, tmp, compression=CODEC)
     os.replace(tmp, os.path.join(mpath, name))
 
 
@@ -217,9 +230,9 @@ def commit(
         out_dir, STREAM_STAGE_DIR, f"batch={batch_id}" if stream else "batch=replace"
     )
     staged = df.withColumn(_STAGE_KEY, F.col("ds"))
-    staged.repartition(F.col("salt")).write.mode("overwrite").partitionBy(
-        _STAGE_KEY
-    ).parquet(stage)
+    staged.repartition(F.col("salt")).write.mode("overwrite").option(
+        "compression", CODEC
+    ).partitionBy(_STAGE_KEY).parquet(stage)
     back = spark.read.schema(staged.schema).parquet(stage)
     added = {
         r.ds: _metric_values(r)
@@ -354,11 +367,25 @@ def read_output(spark: SparkSession, out_dir: str) -> DataFrame:
     Partitions committed through the Iceberg branch leave no parquet
     directory under out_dir: they are read from their table and
     unioned by name. An iceberg manifest row whose table can no longer
-    be resolved raises instead of returning partial data."""
+    be resolved raises instead of returning partial data.
+
+    The parquet scan declares the row schema Spark recorded in the
+    footer of the first committed file (read with pyarrow) instead of
+    inferring it: building the reader starts no Spark job, and ds
+    stays the STRING the files and the manifest hold at every
+    granularity (partition inference makes a day-granular ds a DATE).
+    Columns keep the files' order."""
     def _parquet_scan(ds_list) -> DataFrame:
-        return spark.read.option("basePath", out_dir).parquet(
-            *(os.path.join(out_dir, f"ds={ds}") for ds in ds_list)
+        dirs = [os.path.join(out_dir, f"ds={ds}") for ds in ds_list]
+        reader = spark.read.option("basePath", out_dir)
+        first = next((os.path.join(d, f) for d in dirs for f in _data_files(d)), None)
+        if first is None:  # no committed file: Spark reports the paths
+            return reader.parquet(*dirs)
+        schema = StructType.fromJson(
+            json.loads(pq.read_schema(first).metadata[_SPARK_ROW_SCHEMA])
         )
+        # Spark appends a declared partition column; re-select file order
+        return reader.schema(schema).parquet(*dirs).select(*schema.names)
 
     m = _manifest_table(out_dir)
     if m is None:
@@ -473,7 +500,7 @@ def compact_partition(
     # so the swap below is two cheap renames, never a cross-fs copy)
     tag = uuid.uuid4().hex[:8]
     tmp = os.path.join(out_dir, f"_compact_{tag}")
-    df.coalesce(target_files).write.mode("overwrite").parquet(tmp)
+    df.coalesce(target_files).write.mode("overwrite").option("compression", CODEC).parquet(tmp)
     metrics = _metric_values(
         spark.read.parquet(tmp).agg(*_partition_metrics()).first()
     )

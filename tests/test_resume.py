@@ -341,6 +341,58 @@ def test_commit_jobs_independent_of_ds_count(spark, tmp_path):
     assert sinks.committed_partitions(spark, str(tmp_path / "o6")) == set(ds6)
 
 
+def test_read_output_declares_committed_schema(spark, tmp_path):
+    """read_output takes its schema from a committed file's footer:
+    building it starts no Spark job, the columns keep the files'
+    order, and a day-granular ds reads back as the string it was
+    written as (partition inference would make it a DATE)."""
+    out = str(tmp_path / "out_schema")
+    ds2 = ["2024-01-01", "2024-01-02"]
+    rows = _tiny_df(spark, ds2)
+    sinks.commit(spark, rows, out)
+    built = []
+    assert _jobs_of(spark, "read-output", lambda: built.append(sinks.read_output(spark, out))) == 0
+    got = built[0]
+    assert got.columns == rows.columns
+    assert got.schema["ds"].dataType.simpleString() == "string"
+    committed = got.collect()
+    assert sorted(committed) == sorted(rows.collect())
+    assert {type(r.ds) for r in committed} == {str}
+    assert got.where(F.col("ds") == ds2[1]).count() == 3
+
+
+def test_every_written_file_is_zstd(spark, tmp_path):
+    """Batch commit, stream commit, compaction and their manifest
+    appends all write zstd column chunks, and read_output returns the
+    committed rows unchanged."""
+    import pyarrow.parquet as pq
+
+    out = str(tmp_path / "out_codec")
+    ds0, ds1 = "2024-01-01-00-00", "2024-01-01-00-01"
+    batch, stream = _tiny_df(spark, [ds0]), _tiny_df(spark, [ds1])
+    sinks.commit(spark, batch, out)
+    sinks.commit(spark, stream, out, batch_id=0)
+    assert sinks.compact_partition(spark, out, ds0)["op"] == "compact"
+    files = [
+        os.path.join(out, d, f)
+        for d in (f"ds={ds0}", f"ds={ds1}", sinks.MANIFEST_DIR)
+        for f in os.listdir(os.path.join(out, d))
+        if f.endswith(".parquet") and not f.startswith(".")
+    ]
+    assert len(os.listdir(os.path.join(out, sinks.MANIFEST_DIR))) == 3
+    codecs = set()
+    for path in files:
+        meta = pq.ParquetFile(path).metadata
+        codecs |= {
+            meta.row_group(g).column(c).compression
+            for g in range(meta.num_row_groups)
+            for c in range(meta.num_columns)
+        }
+    assert codecs == {"ZSTD"}, codecs
+    want = sorted(batch.union(stream).collect())
+    assert sorted(sinks.read_output(spark, out).collect()) == want
+
+
 def test_batch_commit_replaces_stream_files(spark, tmp_path):
     """A batch commit over a ds that holds stream files replaces them:
     no duplicate rows, and the manifest row in force has the new

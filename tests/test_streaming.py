@@ -533,9 +533,9 @@ def test_stream_triggers_into_new_ds_keep_manifest_right(spark, tmp_path):
             "append"
         ).parquet(pages_dir)
         incremental.stream_commit_pages(spark, pages_dir, out, ckpt, granularity="day")
-    # partition discovery reads a day-granular ds back as a DATE
+    # read_output declares ds as the STRING the manifest holds
     want = {
-        str(r.ds): (r.n_rows, r.n_keep, r.out_chars)
+        r.ds: (r.n_rows, r.n_keep, r.out_chars)
         for r in sinks.read_output(spark, out)
         .groupBy("ds")
         .agg(
