@@ -35,8 +35,6 @@ cross-engine float noise.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -175,10 +173,6 @@ def train_report(docs: DataFrame, text_col: str = "text") -> DataFrame:
         return row.select(*_W, "n_train", "n_agree")
     finally:
         feat.unpersist()
-
-
-def sigmoid(x: float) -> float:
-    return 1.0 / (1.0 + math.exp(-x))
 
 
 # ---------------------------------------------------------------------------

@@ -7,8 +7,8 @@ scatters results into an .npy memmap by original_position, here the
 embedding is emitted as an `array<float>` COLUMN next to its key —
 the positional join (J1) and the sidecar file disappear. Batch
 homogeneity (the reason for the reference's packing) is optional
-physical tuning: `sorted_for_batching` applies
-sortWithinPartitions(length) ahead of the UDF.
+physical tuning: a caller can sortWithinPartitions(length) ahead of
+the UDF.
 """
 
 from __future__ import annotations
@@ -64,9 +64,3 @@ def with_embedding_sig(df: DataFrame, text_col: str = "text") -> DataFrame:
         .withColumn("sig", F.col("__e.sig"))
         .drop("__e")
     )
-
-
-def sorted_for_batching(df: DataFrame, length_col: str) -> DataFrame:
-    """Length-homogeneous Arrow batches (reference O1, embed-tei.py:215):
-    no global sort — order matters only within a partition."""
-    return df.sortWithinPartitions(length_col)

@@ -5,8 +5,7 @@ beside them. The Spark-side plumbing is real and tested — schema,
 Arrow batch shape, mapInPandas signature, partition behavior; the
 actual media decode is a STUB (image/audio libraries are not in this
 container): `decode_stub_udf` derives deterministic fake
-width/height/checksum values from the bytes, and `decode_real` raises
-NotImplementedError with the intended production signature.
+width/height/checksum values from the bytes.
 
 The metadata path (byte length, magic prefix) is pure built-ins and
 fully oracle-checked; the stub decode is ALSO oracle-checked because
@@ -98,14 +97,6 @@ SELECT doc_id,
        (CAST({blen} AS BIGINT) * 2654435761) % 1000000007 AS checksum
 FROM documents
 """.strip()
-
-
-def decode_real(pages: DataFrame) -> DataFrame:  # pragma: no cover
-    """Production decode (PIL/ffmpeg mapInPandas) — unavailable offline."""
-    raise NotImplementedError(
-        "media decode requires PIL/av which are not installed; "
-        "use decode_stub for plumbing tests"
-    )
 
 
 RESIZE_SCHEMA = StructType(

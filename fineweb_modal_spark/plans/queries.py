@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import sqldialect as sd
-from ..operators import quality, reweight, scrub, topk
+from ..operators import fts, quality, reweight, scrub, topk
 from ..sources import pages as pages_mod
 from ..sources.tables import load_table, table_path
 from ..spec import quality_rules as qr
@@ -145,7 +145,6 @@ def oracles() -> dict[str, str]:
 
 
 D = sd.DUCKDB
-_R6 = sd.round6
 
 
 # ---------------------------------------------------------------------------
@@ -462,11 +461,7 @@ FROM documents GROUP BY md5(text)
 @register("dedup_exact", _DEDUP_ORACLE)
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup: md5 hash-groupBy, min-id representative."""
-    docs = load_table(spark, sf_dir, "documents")
-    return docs.groupBy(F.md5("text").alias("text_hash")).agg(
-        F.min("doc_id").alias("keeper_doc_id"),
-        F.count("*").alias("n_copies"),
-    )
+    return dedup.exact_dedup(load_table(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -1779,48 +1774,30 @@ def q_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
 # averages, distinct counts
 # ---------------------------------------------------------------------------
 
-_POSTINGS_ORACLE = """
+_FTS_TOKS = fts.tokens_sql("text", D)
+
+_POSTINGS_ORACLE = f"""
 SELECT tok, count(DISTINCT doc_id) AS df,
        array_to_string(list_sort(list(DISTINCT doc_id)), ',') AS postings
-FROM (SELECT doc_id, unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS tok
+FROM (SELECT doc_id, unnest({_FTS_TOKS}) AS tok
       FROM documents WHERE length(trim(text)) > 0)
-GROUP BY tok HAVING count(DISTINCT doc_id) >= 50
+GROUP BY tok HAVING count(DISTINCT doc_id) >= {fts.MIN_DF}
 """
 
 
 @register("fts_postings", _POSTINGS_ORACLE)
 def q_fts_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S10 (lancer.py:197-201 FTS index) as a relational inverted
-    index: explode tokens → posting lists; HAVING keeps common terms
-    so the result is compact at any scale."""
-    docs = load_table(spark, sf_dir, "documents").where(
-        F.length(F.trim("text")) > 0
-    )
-    toks = docs.select(
-        "doc_id",
-        F.explode(F.split(F.trim(F.lower("text")), r"\s+")).alias("tok"),
-    )
-    return (
-        toks.groupBy("tok")
-        .agg(
-            F.countDistinct("doc_id").alias("df"),
-            # csv projection: posting lists stay hashable for the gate's
-            # cell-level value hash (arrays crash a pandas sort_values).
-            F.array_join(F.sort_array(F.collect_set("doc_id")), ",").alias(
-                "postings"
-            ),
-        )
-        .where(F.col("df") >= 50)
-    )
+    """S10 inverted index; only common terms, compact at any scale."""
+    return fts.postings(load_table(spark, sf_dir, "documents"))
 
 
-_POSTINGS_SHARDED_ORACLE = """
+_POSTINGS_SHARDED_ORACLE = f"""
 WITH toks AS (
-  SELECT doc_id, unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS tok
+  SELECT doc_id, unnest({_FTS_TOKS}) AS tok
   FROM documents WHERE length(trim(text)) > 0
 ),
 hot AS (
-  SELECT tok FROM toks GROUP BY tok HAVING count(DISTINCT doc_id) >= 50
+  SELECT tok FROM toks GROUP BY tok HAVING count(DISTINCT doc_id) >= {fts.MIN_DF}
 )
 SELECT t.tok, CAST(t.doc_id % 4 AS BIGINT) AS shard,
        count(DISTINCT t.doc_id) AS df_shard,
@@ -1832,71 +1809,23 @@ GROUP BY t.tok, t.doc_id % 4
 
 @register("fts_postings_sharded", _POSTINGS_SHARDED_ORACLE)
 def q_fts_postings_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sharded inverted index — the 100-TB form of fts_postings. A hot
-    token ('the') appears in nearly every document; an unsharded
-    collect_set funnels that whole posting list through ONE reducer.
-    Sharding the groupBy key to (tok, doc_id % S) bounds every
-    reducer's list to ~1/S of the worst posting list (readers merge
-    shards, which stay sorted). Same two-shuffle shape, no hot key."""
-    docs = load_table(spark, sf_dir, "documents").where(
-        F.length(F.trim("text")) > 0
-    )
-    toks = docs.select(
-        "doc_id",
-        F.explode(F.split(F.trim(F.lower("text")), r"\s+")).alias("tok"),
-    )
-    hot = (
-        toks.groupBy("tok")
-        .agg(F.countDistinct("doc_id").alias("df"))
-        .where(F.col("df") >= 50)
-        .select("tok")
-    )
-    return (
-        toks.join(F.broadcast(hot), "tok")
-        .groupBy("tok", F.pmod("doc_id", F.lit(4)).alias("shard"))
-        .agg(
-            F.countDistinct("doc_id").alias("df_shard"),
-            F.array_join(F.sort_array(F.collect_set("doc_id")), ",").alias(
-                "postings"
-            ),
-        )
-    )
+    """The 100-TB form of fts_postings: no hot-token reducer."""
+    return fts.postings(load_table(spark, sf_dir, "documents"), shards=4)
 
-
-# Scored keyword search over the inverted index — the reference's
-# "search the indexed table" capability (lancer.py:197-201 builds the
-# FTS index; this is the query side). Scoring is BM25-SHAPED with a
-# RATIONAL idf (n_docs/df) instead of the ln() form: every input is an
-# exact integer (tf, dl, df, N, total token count), every op is a
-# correctly-rounded IEEE +,·,/ written as the SAME expression text in
-# both engines — so scores are bit-identical doubles and the gate can
-# hash them rounded. (ln is libm-dependent across JVM/C and would
-# reintroduce float-parity risk for zero ranking benefit here.)
-_BM25_K1 = 1.2
-_BM25_B = 0.75
-# (1 - b + b·dl/avgdl) with avgdl = total_len/n_docs, pre-folded:
-_BM25_SCORE_SQL = (
-    f"(CAST(tf AS DOUBLE) * {_BM25_K1 + 1.0}) / "
-    f"(CAST(tf AS DOUBLE) + {_BM25_K1} * ({1.0 - _BM25_B} + {_BM25_B} * "
-    "(CAST(dl AS DOUBLE) * CAST(n_docs AS DOUBLE) / CAST(total_len AS DOUBLE)))) * "
-    "(CAST(n_docs AS DOUBLE) / CAST(df AS DOUBLE))"
-)
-_FTS_TOPK = 10
-_FTS_NTERMS = 5
 
 _FTS_SEARCH_ORACLE = f"""
 WITH toks AS (
-  SELECT doc_id, unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS tok
+  SELECT doc_id, unnest({_FTS_TOKS}) AS tok
   FROM documents WHERE length(trim(text)) > 0
 ),
 tf_tbl AS (SELECT doc_id, tok, count(*) AS tf FROM toks GROUP BY doc_id, tok),
 dl_tbl AS (SELECT doc_id, count(*) AS dl FROM toks GROUP BY doc_id),
 df_tbl AS (SELECT tok, count(*) AS df FROM tf_tbl GROUP BY tok),
 stats AS (SELECT count(*) AS n_docs, CAST(sum(dl) AS BIGINT) AS total_len FROM dl_tbl),
-terms AS (SELECT tok, df FROM df_tbl ORDER BY df DESC, tok LIMIT {_FTS_NTERMS}),
+terms AS (SELECT tok, df FROM df_tbl ORDER BY df DESC, tok LIMIT {fts.N_TERMS}),
 scored AS (
   SELECT t.tok, f.doc_id, f.tf, d.dl, t.df,
-         {_BM25_SCORE_SQL} AS score
+         {fts.BM25_SCORE_SQL} AS score
   FROM tf_tbl f
   JOIN terms t ON f.tok = t.tok
   JOIN dl_tbl d ON f.doc_id = d.doc_id
@@ -1908,62 +1837,21 @@ ranked AS (
   FROM scored
 )
 SELECT tok, doc_id, tf, dl, df, round(score, 6) AS score, rank
-FROM ranked WHERE rank <= {_FTS_TOPK}
+FROM ranked WHERE rank <= {fts.TOPK}
 """
 
 
 @register("fts_search_topk", _FTS_SEARCH_ORACLE)
 def q_fts_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Keyword search over the FTS index: top-10 docs per query term
-    under BM25-shaped scoring. Query terms are the corpus's 5
-    highest-df tokens (deterministic, tie-broken by token), so the
-    gate is self-contained.
+    """BM25-shaped top-10 docs for each of the 5 highest-df tokens."""
+    return fts.search_topk(load_table(spark, sf_dir, "documents"))
 
-    Scale shape: tf/df/dl are partial-agg counts (no posting-list
-    collect anywhere); terms and the 1-row corpus stats broadcast; the
-    per-term ranking is ONE window that Spark executes as
-    WindowGroupLimit (partial top-k per map partition BEFORE the
-    shuffle), so a hot term never funnels its full posting list
-    through one reducer."""
-    docs = load_table(spark, sf_dir, "documents").where(
-        F.length(F.trim("text")) > 0
-    )
-    toks = docs.select(
-        "doc_id",
-        F.explode(F.split(F.trim(F.lower("text")), r"\s+")).alias("tok"),
-    )
-    tf = toks.groupBy("doc_id", "tok").agg(F.count("*").alias("tf"))
-    dl = toks.groupBy("doc_id").agg(F.count("*").alias("dl"))
-    df_tbl = tf.groupBy("tok").agg(F.count("*").alias("df"))
-    stats = dl.agg(
-        F.count("*").alias("n_docs"),
-        F.sum("dl").cast("long").alias("total_len"),
-    )
-    terms = df_tbl.orderBy(F.desc("df"), F.asc("tok")).limit(_FTS_NTERMS)
-    scored = (
-        tf.join(F.broadcast(terms), "tok")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .withColumn("score", F.expr(_BM25_SCORE_SQL))
-    )
-    w = Window.partitionBy("tok").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= _FTS_TOPK)
-        .select(
-            "tok", "doc_id", "tf", "dl", "df",
-            F.round("score", 6).alias("score"), "rank",
-        )
-    )
-
-
-_FTS_NPHRASES = 3
 
 _FTS_PHRASE_ORACLE = f"""
 WITH toks AS (
   SELECT doc_id,
-         unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS tok,
-         generate_subscripts(regexp_split_to_array(trim(lower(text)), '\\s+'), 1) AS pos
+         unnest({_FTS_TOKS}) AS tok,
+         generate_subscripts({_FTS_TOKS}, 1) AS pos
   FROM documents WHERE length(trim(text)) > 0
 ),
 big AS (
@@ -1974,7 +1862,7 @@ big AS (
 big2 AS (SELECT doc_id, w1, w2 FROM big WHERE w2 IS NOT NULL),
 phrases AS (
   SELECT w1, w2, count(*) AS n_total FROM big2 GROUP BY w1, w2
-  ORDER BY n_total DESC, w1, w2 LIMIT {_FTS_NPHRASES}
+  ORDER BY n_total DESC, w1, w2 LIMIT {fts.N_PHRASES}
 ),
 m AS (
   SELECT b.w1, b.w2, b.doc_id, count(*) AS n_occ
@@ -1989,75 +1877,26 @@ ranked AS (
 )
 SELECT w1, w2, doc_id, CAST(n_occ AS BIGINT) AS n_occ,
        CAST(rank AS BIGINT) AS rank
-FROM ranked WHERE rank <= {_FTS_TOPK}
+FROM ranked WHERE rank <= {fts.TOPK}
 """
 
 
 @register("fts_phrase_search", _FTS_PHRASE_ORACLE)
 def q_fts_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Phrase queries over the FTS index — the positional half a
-    keyword index can't answer: top-10 docs per two-word phrase by
-    occurrence count. Query phrases are the corpus's 3 most frequent
-    bigrams (deterministic, tie-broken lexicographically), so the
-    gate is self-contained.
-
-    Scale shape: positions come from posexplode (DuckDB: lockstep
-    unnest + generate_subscripts); adjacency is lead() over a window
-    PARTITIONED BY doc_id — state is one document's token stream,
-    never the corpus, and k-word phrases chain k-1 leads with the
-    same plan. Phrase selection and the match probe are two-phase
-    count aggs; the 3-row phrase relation broadcasts; per-phrase
-    ranking is ONE window Spark executes as WindowGroupLimit (partial
-    top-k per map task before the shuffle)."""
-    docs = load_table(spark, sf_dir, "documents").where(
-        F.length(F.trim("text")) > 0
-    )
-    toks = docs.select(
-        "doc_id",
-        F.posexplode(F.split(F.trim(F.lower("text")), r"\s+")).alias(
-            "pos", "tok"
-        ),
-    )
-    wdoc = Window.partitionBy("doc_id").orderBy("pos")
-    big = toks.select(
-        "doc_id",
-        F.col("tok").alias("w1"),
-        F.lead("tok").over(wdoc).alias("w2"),
-    ).where(F.col("w2").isNotNull())
-    phrases = (
-        big.groupBy("w1", "w2")
-        .agg(F.count(F.lit(1)).alias("n_total"))
-        .orderBy(F.desc("n_total"), "w1", "w2")
-        .limit(_FTS_NPHRASES)
-        .select("w1", "w2")
-    )
-    m = (
-        big.join(F.broadcast(phrases), ["w1", "w2"])
-        .groupBy("w1", "w2", "doc_id")
-        .agg(F.count(F.lit(1)).alias("n_occ"))
-    )
-    w = Window.partitionBy("w1", "w2").orderBy(F.desc("n_occ"), "doc_id")
-    return (
-        m.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= _FTS_TOPK)
-        .select(
-            "w1", "w2", "doc_id",
-            F.col("n_occ").cast("bigint").alias("n_occ"),
-            F.col("rank").cast("bigint").alias("rank"),
-        )
-    )
+    """Top-10 docs for each of the 3 most frequent bigrams."""
+    return fts.phrase_search(load_table(spark, sf_dir, "documents"))
 
 
 from ..operators import countmin as cms_op  # noqa: E402
 
 _CMS_TOKS = (
-    "SELECT unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS tok "
+    f"SELECT unnest({_FTS_TOKS}) AS tok "
     "FROM documents WHERE length(trim(text)) > 0"
 )
 _CMS_ORACLE = f"""
 WITH est AS ({cms_op.estimate_oracle_sql(
     items_sql=_CMS_TOKS,
-    keys_sql=f"SELECT tok FROM ({_CMS_TOKS}) GROUP BY tok ORDER BY count(*) DESC, tok LIMIT 20",
+    keys_sql=f"SELECT tok FROM ({_CMS_TOKS}) GROUP BY tok ORDER BY count(*) DESC, tok LIMIT {fts.N_CMS_KEYS}",
     key_col="tok",
 )}),
 exact AS (SELECT tok, count(*) AS exact_cnt FROM ({_CMS_TOKS}) GROUP BY tok)
@@ -2069,25 +1908,8 @@ FROM est e JOIN exact x ON x.tok = e.tok
 
 @register("cms_token_freq", _CMS_ORACLE)
 def q_cms_token_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Count-min sketch point estimates for the corpus's 20 most
-    frequent tokens, next to their exact counts (est ≥ exact always;
-    the gate hash-pins both). The sketch build is a fixed d×w partial
-    agg — the fixed-memory substitute for a full token groupBy when
-    only frequency screens are needed."""
-    docs = load_table(spark, sf_dir, "documents").where(
-        F.length(F.trim("text")) > 0
-    )
-    toks = docs.select(
-        F.explode(F.split(F.trim(F.lower("text")), r"\s+")).alias("tok")
-    )
-    cms = cms_op.build_cms(toks, "tok")
-    exact = toks.groupBy("tok").agg(F.count("*").alias("exact_cnt"))
-    keys = exact.orderBy(F.desc("exact_cnt"), F.asc("tok")).limit(20).select("tok")
-    est = cms_op.estimate(keys, cms, "tok")
-    return est.join(exact, "tok").select(
-        "tok", "exact_cnt", "est",
-        (F.col("est") - F.col("exact_cnt")).cast("long").alias("overestimate"),
-    )
+    """Count-min estimates beside exact counts; the hash pins both."""
+    return fts.token_freq_cms(load_table(spark, sf_dir, "documents"))
 
 
 # Hypertable-style two-level rollup: the daily aggregate is computed
@@ -4305,6 +4127,7 @@ def q_clf_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Full curation decision record: every admission family in ONE row/doc
 # ---------------------------------------------------------------------------
 
+from ..operators import curation  # noqa: E402
 from ..operators import decontam as decontam_op  # noqa: E402
 
 _CUR_GRAMS_CORPUS = decontam_op._gram_sets_expr(
@@ -4357,76 +4180,12 @@ FROM rep
 """.strip()
 
 
-def curation_record(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Public entry for the per-document curation decision record
-    (quality ∧ edu ∧ exact-dedup ∧ holdout/decontam) — used by the
-    two gates below and by `jobs/run_pipeline.py --mode curate`."""
-    return _curation_record(spark, sf_dir)
-
-
-def _curation_record(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    emb = load_table(spark, sf_dir, "embeddings")
-
-    qk = quality.with_keep(quality.with_signals(docs)).select(
-        "doc_id", "keep", "drop_reason"
-    )
-    cent = similarity.train_edu_centroid(emb)
-    edu = similarity.edu_scores(emb, cent).select(
-        "doc_id", F.col("keep").alias("edu_keep_raw")
-    )
-    h = docs.select("doc_id", F.md5("text").alias("th"))
-    mins = h.groupBy("th").agg(F.min("doc_id").alias("keeper"))
-    canon = h.join(mins, "th").select(
-        "doc_id", (F.col("doc_id") == F.col("keeper")).alias("is_canonical")
-    )
-    bench_docs = docs.where(F.col("doc_id") % 97 == 0).select(
-        "doc_id", "text"
-    )
-    corpus_excl = docs.where(F.col("doc_id") % 97 != 0).select(
-        "doc_id", "text"
-    )
-    cont = decontam_op.decontaminate(
-        corpus_excl, decontam_op.benchmark_grams(bench_docs)
-    ).select("doc_id", F.lit(True).alias("cont_raw"))
-
-    rep = (
-        docs.select("doc_id")
-        .join(qk, "doc_id")
-        .join(edu, "doc_id", "left")
-        .join(canon, "doc_id")
-        .join(cont, "doc_id", "left")
-        .withColumn("edu_keep", F.coalesce("edu_keep_raw", F.lit(True)))
-        .withColumn("contaminated", F.coalesce("cont_raw", F.lit(False)))
-    )
-    reason = (
-        F.when(F.col("doc_id") % 97 == 0, F.lit("benchmark_doc"))
-        .when(~F.col("keep"), F.col("drop_reason"))
-        .when(~F.col("edu_keep"), F.lit("low_edu_score"))
-        .when(~F.col("is_canonical"), F.lit("duplicate"))
-        .when(F.col("contaminated"), F.lit("contaminated"))
-    )
-    return rep.select(
-        "doc_id",
-        reason.isNull().alias("final_keep"),
-        F.col("keep").alias("q_keep"),
-        "edu_keep",
-        "is_canonical",
-        "contaminated",
-        reason.alias("reason"),
-    )
-
-
 @register("full_curation_report", _CURATION_ORACLE)
 def q_full_curation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One decision record per document joining EVERY admission
-    family: heuristic quality battery, semantic edu score (left join
-    — docs without an embedding pass by default), exact-dedup
-    canonical keeper, benchmark holdout + n-gram decontamination.
-    First failing stage names the reason, fixed precedence both
-    dialects. All equi-joins on doc_id (AQE broadcasts the small
-    relations); the gram probe touches only contaminated docs."""
-    return _curation_record(spark, sf_dir)
+    family; the first failing stage names the reason, fixed
+    precedence in both dialects."""
+    return curation.curation_record(spark, sf_dir)
 
 
 _FUNNEL_ORACLE = f"""
@@ -4450,7 +4209,7 @@ def q_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONE integer row — the yield dashboard a corpus owner reads before
     anything else. Pure boolean algebra over the decision record; one
     1-row reduce."""
-    rec = _curation_record(spark, sf_dir)
+    rec = curation.curation_record(spark, sf_dir)
     not_bench = F.col("reason").isNull() | (
         F.col("reason") != F.lit("benchmark_doc")
     )

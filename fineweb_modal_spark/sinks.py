@@ -378,12 +378,9 @@ def read_output(spark: SparkSession, out_dir: str) -> DataFrame:
     def _parquet_scan(ds_list) -> DataFrame:
         dirs = [os.path.join(out_dir, f"ds={ds}") for ds in ds_list]
         reader = spark.read.option("basePath", out_dir)
-        first = next((os.path.join(d, f) for d in dirs for f in _data_files(d)), None)
-        if first is None:  # no committed file: Spark reports the paths
+        schema = _file_schema(dirs)
+        if schema is None:  # no committed file: Spark reports the paths
             return reader.parquet(*dirs)
-        schema = StructType.fromJson(
-            json.loads(pq.read_schema(first).metadata[_SPARK_ROW_SCHEMA])
-        )
         # Spark appends a declared partition column; re-select file order
         return reader.schema(schema).parquet(*dirs).select(*schema.names)
 
@@ -419,6 +416,16 @@ def read_output(spark: SparkSession, out_dir: str) -> DataFrame:
             ice, allowMissingColumns=True
         )
     return out
+
+
+def _file_schema(dirs: list[str]) -> StructType | None:
+    """The row schema Spark recorded in the footer of the first data
+    file under `dirs`, read with pyarrow: no Spark job infers it.
+    None when the dirs hold no data file."""
+    first = next((os.path.join(d, f) for d in dirs for f in _data_files(d)), None)
+    if first is None:
+        return None
+    return StructType.fromJson(json.loads(pq.read_schema(first).metadata[_SPARK_ROW_SCHEMA]))
 
 
 def _manifest_table(out_dir: str) -> pa.Table | None:
@@ -491,18 +498,22 @@ def compact_partition(
     coalesces, overwrites the SAME directory via a temp dir + atomic
     rename, and appends a superseding manifest row (op='compact') so
     time-travel reads stay consistent; the row re-derives the
-    partition's metrics from the compacted files. Returns the row."""
+    partition's metrics from the compacted files. Both reads declare
+    their schema, so no Spark job only infers one. Returns the row."""
     pdir = os.path.join(out_dir, f"ds={ds}")
     n_before = len(partition_files(out_dir, ds))
     t0 = time.monotonic()
-    df = spark.read.parquet(pdir)
+    schema = _file_schema([pdir])
+    if schema is None:
+        raise FileNotFoundError(f"ds={ds} has no committed file under {out_dir}")
+    df = spark.read.schema(schema).parquet(pdir)
     # compacted copy is written NEXT TO the partition (same filesystem,
     # so the swap below is two cheap renames, never a cross-fs copy)
     tag = uuid.uuid4().hex[:8]
     tmp = os.path.join(out_dir, f"_compact_{tag}")
     df.coalesce(target_files).write.mode("overwrite").option("compression", CODEC).parquet(tmp)
     metrics = _metric_values(
-        spark.read.parquet(tmp).agg(*_partition_metrics()).first()
+        spark.read.schema(df.schema).parquet(tmp).agg(*_partition_metrics()).first()
     )
     _swap_dir(tmp, pdir)
     row = {

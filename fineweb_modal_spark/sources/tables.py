@@ -26,8 +26,6 @@ TABLES = [
     "embeddings",
 ]
 
-DEFAULT_SF_DIR = "/root/testdata/sf0.01"
-
 
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")

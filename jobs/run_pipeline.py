@@ -250,9 +250,9 @@ def main(argv: list[str] | None = None) -> int:
         from pyspark.sql import functions as F2
 
         from fineweb_modal_spark.operators import scrub as scrub_mod
-        from fineweb_modal_spark.plans import queries as registry
+        from fineweb_modal_spark.operators.curation import curation_record
 
-        rec = registry.curation_record(spark, args.input)
+        rec = curation_record(spark, args.input)
         docs = spark.read.parquet(f"{args.input.rstrip('/')}/documents.parquet")
         admitted = rec.where(F2.col("final_keep")).select("doc_id")
         curated = scrub_mod.with_scrubbed(docs.join(admitted, "doc_id")).drop("text")

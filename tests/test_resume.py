@@ -361,6 +361,21 @@ def test_read_output_declares_committed_schema(spark, tmp_path):
     assert got.where(F.col("ds") == ds2[1]).count() == 3
 
 
+def test_compact_partition_infers_no_schema(spark, tmp_path):
+    """compact_partition declares both of its read schemas (the
+    committed footer, then the frame it just wrote): it starts 3
+    Spark jobs — the rewrite and the metrics scan — where inferring
+    the partition's and the temp dir's schemas started 5."""
+    out = str(tmp_path / "out_compact_jobs")
+    ds0 = "2024-01-01-00-00"
+    rows = _tiny_df(spark, [ds0])
+    sinks.commit(spark, rows, out)
+    got = []
+    assert _jobs_of(spark, "compact", lambda: got.append(sinks.compact_partition(spark, out, ds0))) == 3
+    assert got[0]["n_rows"] == 3
+    assert sorted(sinks.read_output(spark, out).collect()) == sorted(rows.collect())
+
+
 def test_every_written_file_is_zstd(spark, tmp_path):
     """Batch commit, stream commit, compaction and their manifest
     appends all write zstd column chunks, and read_output returns the

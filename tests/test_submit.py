@@ -251,7 +251,7 @@ def test_job_curate_mode(spark, tmp_path):
     the funnel; written rows must equal the decision record's
     admitted count and carry no raw text column."""
     import jobs.run_pipeline as job
-    from fineweb_modal_spark.plans import queries as registry
+    from fineweb_modal_spark.operators.curation import curation_record
     from pyspark.sql import functions as F
 
     out_dir = str(tmp_path / "curated")
@@ -259,7 +259,7 @@ def test_job_curate_mode(spark, tmp_path):
     assert rc == 0
     back = spark.read.parquet(out_dir)
     want = (
-        registry.curation_record(spark, SF)
+        curation_record(spark, SF)
         .where(F.col("final_keep"))
         .count()
     )

@@ -625,11 +625,9 @@ def test_cms_never_underestimates(spark):
     from pyspark.sql import functions as F
 
     from fineweb_modal_spark.operators import countmin as cms_op
+    from fineweb_modal_spark.operators import fts
 
-    docs = load_table(spark, SF, "documents").limit(100)
-    toks = docs.select(
-        F.explode(F.split(F.trim(F.lower("text")), r"\s+")).alias("tok")
-    )
+    toks = fts.tokens(load_table(spark, SF, "documents").limit(100)).select("tok")
     cms = cms_op.build_cms(toks, "tok")
     exact = toks.groupBy("tok").agg(F.count("*").alias("exact_cnt"))
     est = cms_op.estimate(exact.select("tok"), cms, "tok")
