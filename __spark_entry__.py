@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from fineweb_modal_spark import session as _session  # noqa: E402
 from fineweb_modal_spark.plans import pipeline as _pipeline  # noqa: E402
 from fineweb_modal_spark.plans import queries as _registry  # noqa: E402
 
@@ -27,10 +28,9 @@ SF001 = "/root/testdata/sf0.01"
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query: the full pipeline rolled up per predicted lang."""
-    # same tz-immunity contract as every registry gate (queries.py
-    # _tz_pinned): the driver's session inherits the host timezone
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    return _pipeline.pipeline_summary(spark, SF001)
+    # the driver's session inherits the host timezone: apply the
+    # engine's settings, as the registry dispatch does for every gate
+    return _pipeline.pipeline_summary(_session.configure(spark), SF001)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -366,18 +366,6 @@ def resolve_clusters(
     (`df.observe` counting label changes) — no separate compare join
     or count job per round.
     """
-    # For the duration of the loop, let AQE coalesce purely by SIZE
-    # (parallelismFirst=false): label/edge rows are two longs, so the
-    # default parallelism-first policy pins every round's shuffles at
-    # full partition count and the iteration cost becomes pure
-    # stage-overhead (measured 3.6s -> ~1s at sf0.1). At real scale
-    # the advisory size (64 MiB) keeps partition counts high, so this
-    # is not a local-only tune.
-    spark = pairs.sparkSession
-    _PF = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
-    prev_pf = spark.conf.get(_PF, "true")
-    spark.conf.set(_PF, "false")
-
     edges = pairs.select(
         F.col("doc_a").cast("long").alias("src"),
         F.col("doc_b").cast("long").alias("dst"),
@@ -390,27 +378,23 @@ def resolve_clusters(
         F.col("doc_id").cast("long").alias("label"),
     ).localCheckpoint()
     changed = None
-    try:
-        for it in range(max_iters):
-            changed = _cc_round(sym, labels, it)
-            if changed[0] == 0:
-                labels = changed[1]
-                break
-            labels = changed[1]
-        else:
-            # max_iters exhausted with labels still moving: the labels
-            # are NOT component minima — returning them would hand
-            # callers a wrong keeper mapping with no signal. With
-            # pointer jumping, max_iters=12 covers diameters up to
-            # ~2^12, so hitting this means a pathological graph, not a
-            # tuning issue.
-            raise RuntimeError(
-                f"resolve_clusters did not converge within {max_iters} "
-                f"iterations ({changed[0]} labels still changing); raise "
-                "max_iters — partial labels are not a valid dedup result"
-            )
-    finally:
-        spark.conf.set(_PF, prev_pf)
+    for it in range(max_iters):
+        changed = _cc_round(sym, labels, it)
+        labels = changed[1]
+        if changed[0] == 0:
+            break
+    else:
+        # max_iters exhausted with labels still moving: the labels
+        # are NOT component minima — returning them would hand
+        # callers a wrong keeper mapping with no signal. With
+        # pointer jumping, max_iters=12 covers diameters up to
+        # ~2^12, so hitting this means a pathological graph, not a
+        # tuning issue.
+        raise RuntimeError(
+            f"resolve_clusters did not converge within {max_iters} "
+            f"iterations ({changed[0]} labels still changing); raise "
+            "max_iters — partial labels are not a valid dedup result"
+        )
     return labels.select("doc_id", F.col("label").alias("keeper_doc_id"))
 
 

@@ -27,6 +27,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import session
 from ..functions import sqldialect as sd
 from ..operators import fts, quality, reweight, scrub, topk
 from ..sources import pages as pages_mod
@@ -112,32 +113,23 @@ def _ordered(d: dict) -> dict:
     return {n: d[n] for n in (*front, *(n for n in d if n not in _FRONT))}
 
 
-def _tz_pinned(fn: QueryFn) -> QueryFn:
-    """Pin the CALLER's session timezone to UTC before dispatching a
-    gate (and leave it pinned — the returned DataFrame is lazy, so the
-    conf must still be UTC when the driver collects it later).
-
-    Why: the fixtures' TIMESTAMP_NTZ columns are UTC wall-clock by
-    construction and every DuckDB oracle is tz-free, but the session
-    the DRIVER passes in inherits the host timezone. Any NTZ→LTZ cast
-    or date/window rendering then shifts by the host offset — the
-    exact r4 `hll_distinct_stream` hash-FAIL (7-day epoch-aligned
-    window + date cast under a non-UTC session moves week starts by
-    one day). `spark.sql.session.timeZone` is a runtime conf, so
-    pinning at dispatch covers analysis, execution AND collect-side
-    rendering for every gate regardless of the driver's environment.
-    """
+def _configured(fn: QueryFn) -> QueryFn:
+    """Apply the engine's settings (`session.configure`) to the CALLER's
+    session before a gate runs, and leave them applied: the returned
+    DataFrame is lazy and is collected later. The driver's session is
+    input from outside the program; under its host timezone any
+    NTZ→LTZ cast or date/window rendering shifts against the UTC
+    oracles (the r4 `hll_distinct_stream` hash-FAIL)."""
 
     @functools.wraps(fn)
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        return fn(spark, sf_dir)
+        return fn(session.configure(spark), sf_dir)
 
     return wrapped
 
 
 def queries() -> dict[str, QueryFn]:
-    return {n: _tz_pinned(fn) for n, fn in _ordered(_QUERIES).items()}
+    return {n: _configured(fn) for n, fn in _ordered(_QUERIES).items()}
 
 
 def oracles() -> dict[str, str]:
@@ -2790,8 +2782,8 @@ def q_hll_distinct_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch count per window. The 90-day watermark horizon exceeds the
     fixture's 30-day span, so the registers equal the batch/DuckDB
     re-derivation under every legal micro-batch split. Week keys are
-    computed under the UTC session the registry dispatch pins
-    (_tz_pinned) and emitted as ISO strings, the estimate and its
+    computed under the UTC session the registry dispatch applies
+    (session.configure) and emitted as ISO strings, the estimate and its
     error as ppm BIGINTs, so no date or float rendering reaches the
     value hash."""
     events = _staged(load_table(spark, sf_dir, "events"))

@@ -1,8 +1,9 @@
-"""SparkSession factory tuned for this engine.
+"""The engine's one session configuration.
 
-Local-mode testing stands in for a multi-executor cluster; every
-config below is chosen to also be the right default at cluster scale
-(AQE on, skew-join on, Arrow batching sized for vectorized UDFs).
+`SQL_CONF` holds every runtime SQL setting; `configure(spark)` applies
+it. `get_spark`, the spark-submit job, `__spark_entry__.entry` and the
+gate registry's dispatch call it, and nothing else sets a conf. Each
+value is also the right default at cluster scale.
 """
 
 from __future__ import annotations
@@ -11,51 +12,58 @@ import os
 
 from pyspark.sql import SparkSession
 
+TZ = "spark.sql.session.timeZone"
+SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+
+SQL_CONF: dict[str, str] = {
+    TZ: "UTC",  # every oracle is UTC
+    # adaptive execution: runtime re-plan, skew splitting
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    # Arrow batches sized for the vectorized UDFs
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
+    # scan sizing (100 TB: 128 MiB splits is the sane default)
+    "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
+    "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+}
+
+
+def configure(spark: SparkSession) -> SparkSession:
+    """Apply `SQL_CONF`, plus shuffle partitions = defaultParallelism,
+    to `spark`. A key given at launch (`spark-submit --conf`, a builder
+    option) keeps its launch value, except the timezone: always UTC."""
+    launch = spark.sparkContext.getConf()
+    table = {
+        SHUFFLE_PARTITIONS: str(spark.sparkContext.defaultParallelism),
+        **SQL_CONF,
+    }
+    for k, v in table.items():
+        spark.conf.set(k, v if k == TZ else launch.get(k, v))
+    return spark
+
 
 def get_spark(
     master: str | None = None,
     app_name: str = "fineweb-modal-spark",
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or fetch) a SparkSession with engine defaults.
-
-    master defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
-    shuffle_partitions defaults to the local core count — at cluster
-    scale callers pass ~2-3× total executor cores instead.
-    """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """Build (or fetch) a SparkSession and `configure` it. master
+    defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default: the cores
+    this process may run on); `extra_conf` holds launch settings."""
     if master is None:
+        cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
         master = f"local[{cpus}]"
-    if shuffle_partitions is None:
-        # match parallelism for local mode; avoids 200 tiny shuffle tasks
-        n = master[master.index("[") + 1 : master.index("]")] if "local[" in master else str(cpus)
-        shuffle_partitions = cpus if n == "*" else int(n)
-
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
         # local-mode default heap is 1 GiB; string-heavy plans want more
         # (effective only if this process hasn't launched the JVM yet)
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        # --- determinism & oracle comparability -------------------------
-        .config("spark.sql.session.timeZone", "UTC")
-        # --- adaptive execution: runtime re-plan, skew splitting ---------
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # --- shuffle sizing ----------------------------------------------
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        # --- Arrow / vectorized UDF path ---------------------------------
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        # --- scan sizing (100 TB: 128 MiB splits is the sane default) ----
-        .config("spark.sql.files.maxPartitionBytes", "134217728")
         # keep driver UI quiet in tests
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
-    return builder.getOrCreate()
+    for k, v in (extra_conf or {}).items():
+        builder = builder.config(k, v)
+    return configure(builder.getOrCreate())

@@ -77,7 +77,7 @@ COMMITTED_COLS = (
     "keep", "drop_reason", "scrubbed_text",
 )
 
-# When set (e.g. spark.conf.set(ICEBERG_TABLE_CONF, "cat.db.docs")), a
+# When set (e.g. `--conf spark.fineweb.iceberg.table=cat.db.docs`), a
 # batch commit goes through Iceberg's `writeTo(...).overwritePartitions()`
 # — a real snapshot commit — instead of the parquet-directory overwrite.
 # The table must exist and be partitioned by ds. Offline (no Iceberg

@@ -72,8 +72,8 @@ def events_stream(
 ) -> DataFrame:
     """A file stream over an events directory, `ts` as TIMESTAMP."""
     # fixture ts is TIMESTAMP_NTZ; watermarks require TIMESTAMP (LTZ) —
-    # gate dispatch pins the session TZ to UTC (plans/queries.py
-    # _tz_pinned) so the cast is value-preserving in any environment
+    # every entry point sets the session TZ to UTC (session.configure)
+    # so the cast is value-preserving in any environment
     return file_stream(spark, events_dir, max_files_per_trigger).withColumn(
         "ts", F.col("ts").cast("timestamp")
     )

@@ -125,11 +125,14 @@ def main(argv: list[str] | None = None) -> int:
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    from fineweb_modal_spark import sinks
+    from fineweb_modal_spark import session, sinks
     from fineweb_modal_spark.plans import pipeline as pl
 
-    spark = SparkSession.builder.appName("fineweb-modal-spark-pipeline").getOrCreate()
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    # spark-submit's master and --conf values stand; the engine's
+    # settings fill in every SQL key the launch did not give
+    spark = session.configure(
+        SparkSession.builder.appName("fineweb-modal-spark-pipeline").getOrCreate()
+    )
 
     t0 = time.monotonic()
     if args.mode in ("hygiene", "crawl"):

@@ -16,7 +16,7 @@ SF_ORACLE = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(master="local[4]", shuffle_partitions=4, app_name="pytest")
+    s = get_spark(master="local[4]", app_name="pytest")
     yield s
 
 

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
+from fineweb_modal_spark import session
 from fineweb_modal_spark.sources.tables import load_table, register_views
 
 SF = "/root/testdata/sf0.001"
@@ -56,9 +57,7 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
         ).count()
         assert j.count() == want
     finally:
-        spark.conf.set(
-            "spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024)
-        )
+        session.configure(spark)
 
 
 def test_sql_string_interface(spark):

@@ -3,10 +3,11 @@
 The r4 driver ran `hll_distinct_stream` from a session that inherited
 the host timezone; the gate's NTZ→LTZ cast + epoch-aligned 7-day
 window + date cast shifted week starts by one day and the hash
-mismatched the DuckDB oracle. The registry dispatch now pins
-`spark.sql.session.timeZone=UTC` on the CALLER's session at gate-call
-time (plans/queries.py `_tz_pinned`), so every gate must hash-green no
-matter what timezone the driver's session starts in.
+mismatched the DuckDB oracle. The registry dispatch now applies the
+engine's settings (`session.configure`, which always sets
+`spark.sql.session.timeZone=UTC`) to the CALLER's session at gate-call
+time, so every gate must hash-green no matter what timezone the
+driver's session starts in.
 
 These tests simulate hostile driver sessions for every gate that
 emits a temporal column (the sensitivity class, enumerated by the
@@ -19,6 +20,7 @@ from __future__ import annotations
 import pytest
 
 import __spark_entry__ as entrymod
+from fineweb_modal_spark import session
 from tools.compare_oracle import frame_fingerprint
 
 from .conftest import SF_ORACLE
@@ -62,10 +64,11 @@ def _assert_gate_green(spark, duck, name: str) -> None:
 
 @pytest.fixture
 def hostile_tz(spark, request):
-    """Set a non-UTC session timezone; restore UTC afterwards."""
+    """Set a non-UTC session timezone; restore the engine's settings
+    afterwards."""
     spark.conf.set("spark.sql.session.timeZone", request.param)
     yield request.param
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    session.configure(spark)
 
 
 @pytest.mark.parametrize("hostile_tz", HOSTILE_TZS, indirect=True)
@@ -92,7 +95,7 @@ def test_dispatch_pins_utc_without_restoring(spark):
         df.collect()
         assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
     finally:
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
+        session.configure(spark)
 
 
 def test_entry_pins_utc(spark):
@@ -101,4 +104,4 @@ def test_entry_pins_utc(spark):
         entrymod.entry(spark)
         assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
     finally:
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
+        session.configure(spark)

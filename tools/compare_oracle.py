@@ -12,8 +12,9 @@ Usage: python tools/compare_oracle.py [sf_dir] [query ...]
 
 --tz simulates a driver whose session inherits a non-UTC host
 timezone (the r4 `hll_distinct_stream` hash-FAIL environment): the
-session timeZone is set to TZ before any gate runs; the registry's
-_tz_pinned dispatch must keep every gate hash-green regardless.
+session timeZone is set to TZ before each gate runs; the registry's
+dispatch (`session.configure`) must keep every gate hash-green
+regardless.
 
 --json additionally writes the full sweep in the driver's
 CORRECTNESS_r{N}.json schema ({name: {rows_match, schema_match,
@@ -88,9 +89,7 @@ def run(
 
     spark = get_spark()
     if session_tz:
-        # hostile-driver simulation: the gates themselves must re-pin
-        spark.conf.set("spark.sql.session.timeZone", session_tz)
-        print(f"session timeZone set to {session_tz} (gates must re-pin)")
+        print(f"session timeZone set to {session_tz} before each gate (gates must re-pin)")
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
 
@@ -108,6 +107,9 @@ def run(
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        if session_tz:
+            # hostile-driver simulation: the dispatch itself must re-pin
+            spark.conf.set("spark.sql.session.timeZone", session_tz)
         try:
             sdf = fn(spark, sf_dir)
             srows = [tuple(r) for r in sdf.collect()]
