@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import sinks
 from . import quality
 
 ETA = 2.0  # step size for z-scored features
@@ -107,11 +108,6 @@ def apply_stats(
     return out
 
 
-def standardize(feat: DataFrame) -> DataFrame:
-    """z-score every feature with stats fitted on the same frame."""
-    return apply_stats(feat, fit_stats(feat))
-
-
 def _margin(w: list[float]) -> F.Column:
     m = F.lit(w[0])
     for i, n in enumerate(_FN):
@@ -150,18 +146,21 @@ def train(
     text_col: str = "text",
     steps: int = K_STEPS,
     eta: float = ETA,
-) -> tuple[list[float], DataFrame]:
-    """Returns ([b, w1..w5], z-scored feature frame) after `steps`
-    full-batch GD steps from 0."""
-    feat = standardize(feature_frame(docs, text_col=text_col)).persist()
-    return _gd_loop(feat, steps, eta), feat
+) -> tuple[list[float], dict[str, tuple[float, float]], DataFrame]:
+    """Returns ([b, w1..w5], the z-score stats it fitted, the persisted
+    z-scored feature frame) after `steps` full-batch GD steps from 0;
+    the caller unpersists the frame."""
+    feat = feature_frame(docs, text_col=text_col)
+    st = fit_stats(feat)
+    featz = apply_stats(feat, st).persist()
+    return _gd_loop(featz, steps, eta), st, featz
 
 
 def train_report(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """1-row gate frame: trained weights (round6) + training-set
     agreement with the judge (integer counts — float-boundary-proof
     unless a logit lands within an ulp of exactly 0)."""
-    w, feat = train(docs, text_col=text_col)
+    w, _st, feat = train(docs, text_col=text_col)
     try:
         agree = (_margin(w) >= 0.0) == (F.col("y") == 1.0)
         row = feat.agg(
@@ -290,7 +289,7 @@ def f1_vs_judge(docs: DataFrame, text_col: str = "text") -> DataFrame:
     analog lives in quality.f1_report). Training cost is the K+1
     passes of train(); the evaluation itself is one map-side integer
     reduce over the already-persisted feature frame."""
-    w, feat = train(docs, text_col=text_col)
+    w, _st, feat = train(docs, text_col=text_col)
     try:
         agg = quality.confusion_counts(
             feat, _margin(w) >= 0.0, F.col("y") == 1.0
@@ -386,22 +385,25 @@ def holdout_f1_oracle_sql(
 def save_model(
     spark, w: list[float], st: dict[str, tuple[float, float]], path: str
 ) -> None:
-    """Persist the trained classifier as two tiny parquet relations:
-    weights (1 row) and z-score stats (one row per feature) + meta.
-    The artifact is self-describing — score_with_model needs nothing
-    else — mirroring the ngram-LM train-once/score-anywhere shape."""
-    p = path.rstrip("/")
-    spark.createDataFrame(
-        [tuple(w)], ", ".join(f"{c} double" for c in _W)
-    ).write.mode("overwrite").parquet(f"{p}/weights")
-    spark.createDataFrame(
-        [(n, st[n][0], st[n][1]) for n in _FN],
-        "feature string, mu double, sd double",
-    ).write.mode("overwrite").parquet(f"{p}/stats")
-    spark.createDataFrame(
-        [(K_STEPS, ETA, MOMENTUM, len(_FN))],
-        "steps int, eta double, momentum double, n_features int",
-    ).write.mode("overwrite").parquet(f"{p}/meta")
+    """Persist the trained classifier as three tiny parquet parts —
+    weights (1 row), z-score stats (one row per feature) and meta —
+    published together (sinks.publish), so a reader never sees new
+    weights beside old stats. The artifact is self-describing —
+    score_with_model needs nothing else — mirroring the ngram-LM
+    train-once/score-anywhere shape."""
+    sinks.publish(path, {
+        "weights": spark.createDataFrame(
+            [tuple(w)], ", ".join(f"{c} double" for c in _W)
+        ),
+        "stats": spark.createDataFrame(
+            [(n, st[n][0], st[n][1]) for n in _FN],
+            "feature string, mu double, sd double",
+        ),
+        "meta": spark.createDataFrame(
+            [(K_STEPS, ETA, MOMENTUM, len(_FN))],
+            "steps int, eta double, momentum double, n_features int",
+        ),
+    })
 
 
 def load_model(spark, path: str):

@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import sinks
 from ..functions import sqldialect as sd
 from ..spec import hashing as H
 from ..spec import quality_rules as qr
@@ -219,10 +220,10 @@ def score_with_ratio(new_docs: DataFrame, ratio: DataFrame) -> DataFrame:
     )
 
 
-def save_ratio(ratio: DataFrame, path: str) -> None:
-    """Persist the trained index (≤ DSIR_BUCKETS rows, self-describing
-    via the nr/nt totals on every row)."""
-    ratio.write.mode("overwrite").parquet(path.rstrip("/"))
+def save_ratio(ratio: DataFrame, path: str) -> int:
+    """Publish the trained index (≤ DSIR_BUCKETS rows, self-describing
+    via the nr/nt totals on every row); returns its bucket count."""
+    return sinks.publish(path, ratio)["rows"]
 
 
 def load_ratio(spark, path: str) -> DataFrame:

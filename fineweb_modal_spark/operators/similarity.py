@@ -31,9 +31,9 @@ matrix larger than SCORE_CELLS regardless of corpus size or cell skew.
 
 The reference's index is the LanceDB IVF-PQ build (lancer.py:203-216,
 SURVEY.md S11) — num_partitions=int(n**0.5), metric=cosine, trained
-on the data. `train_ivf_centroids` + `train_pq_codebooks` +
-`build_ivf_index` reproduce that contract (sampled training, sqrt(n)
-cells, PQ compression, persisted centroid table) on Spark.
+on the data. `train_ivf_centroids` + `train_pq_codebooks` reproduce
+that contract (sampled training, sqrt(n) cells, PQ compression) on
+Spark; the (ids, matrix) centroid pair is the index every scorer takes.
 """
 
 from __future__ import annotations
@@ -455,28 +455,6 @@ def train_ivf_centroids(
             np.float64
         )
     return cent_ids, cent_mat
-
-
-def build_ivf_index(spark, emb: DataFrame, path: str, **kw) -> None:
-    """Persist the trained centroid table (the IVF index) as parquet —
-    the operational analog of the reference's persisted LanceDB index
-    (lancer.py:203-216)."""
-    cent_ids, cent_mat = train_ivf_centroids(emb, **kw)
-    rows = [
-        (int(i), [float(x) for x in v]) for i, v in zip(cent_ids, cent_mat)
-    ]
-    spark.createDataFrame(
-        rows, "centroid_id bigint, cvec array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(path)
-
-
-def load_ivf_index(spark, path: str):
-    """(centroid_ids, centroid_matrix) from a persisted index."""
-    np = _np()
-    rows = spark.read.parquet(path).orderBy("centroid_id").collect()
-    ids = np.array([r.centroid_id for r in rows], dtype=np.int64)
-    mat = np.stack([np.asarray(r.cvec) for r in rows]).astype(np.float64)
-    return ids, mat
 
 
 def _blocked_cogroup(
@@ -1177,7 +1155,7 @@ def ivf_assign_delta(delta: DataFrame, centroids) -> DataFrame:
     the index is never rescanned and the index is never retrained;
     only the delta pays the one BLAS assignment pass (zero shuffle).
     Re-centering drift is a separate, deliberate rebuild decision
-    (build_ivf_index), exactly as LanceDB treats compaction."""
+    (train_ivf_centroids), exactly as LanceDB treats compaction."""
     cent_ids, cent_mat = centroids
     a = _assign_cells(delta, cent_ids, cent_mat, n_probe=1, emit_ccos=True)
     return a.select(

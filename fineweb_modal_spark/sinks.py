@@ -22,7 +22,11 @@ engine generalizes that to *partition-granular snapshot commits*:
   the kill-and-resume contract (tests/test_resume.py kills mid-run
   and completes on the second invocation without redoing work);
 * a stream commit is replay-safe under the foreachBatch batchId
-  contract.
+  contract;
+* every other job output and persisted model (score tables, the
+  curated corpus, the ablation table, LM / classifier / DSIR models,
+  the CDX index) goes through `publish`: staged beside its target,
+  swapped in by rename, counted from the write itself.
 
 This module is the only one that knows the committed-table format:
 the committed row shape (COMMITTED_COLS), the partition directory and
@@ -54,7 +58,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.errors import AnalysisException
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -291,6 +295,41 @@ def _swap_dir(src: str, dst: str) -> None:
         os.rename(dst, aside)
     os.rename(src, dst)
     shutil.rmtree(aside, ignore_errors=True)
+
+
+def publish(target: str, frames: DataFrame | dict[str, DataFrame], *metrics: Column) -> dict:
+    """Publish a job output or a persisted model whole — the one write
+    path of every output that is not the committed table.
+
+    `frames` is one frame, written as the directory `target`, or a
+    model's named parts, each written as `target/<name>`. Everything is
+    written under the `_`-prefixed sibling `_publishing_<basename>`
+    (same filesystem), then that one directory replaces `target` by
+    `_swap_dir`: a reader sees the old output or the new one, never new
+    weights beside old stats. A failure before the swap deletes the
+    stage and leaves `target` as it was.
+
+    Counts come from the write itself, not a read-back: each part is
+    written under an Observation of `rows` (its row count) plus
+    `metrics` (named aggregate columns over the part). Returns those
+    values as a dict for one frame, {name: dict} for named parts;
+    aggregates over no rows read 0."""
+    tgt = target.rstrip("/")
+    stage = os.path.join(os.path.dirname(tgt), f"_publishing_{os.path.basename(tgt)}")
+    parts = {"": frames} if isinstance(frames, DataFrame) else frames
+    shutil.rmtree(stage, ignore_errors=True)  # a torn earlier publish
+    seen = {}
+    try:
+        for name, df in parts.items():
+            obs = Observation()
+            df.observe(obs, F.count(F.lit(1)).alias("rows"), *metrics).write.option(
+                "compression", CODEC
+            ).parquet(os.path.join(stage, name))
+            seen[name] = {k: 0 if v is None else v for k, v in obs.get.items()}
+        _swap_dir(stage, tgt)
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)
+    return seen[""] if isinstance(frames, DataFrame) else seen
 
 
 def write_partition(

@@ -33,6 +33,7 @@ import zlib
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import sinks
 from . import shards
 from . import warc as warc_mod
 
@@ -211,10 +212,11 @@ def write_cdx(index: DataFrame, out_dir: str) -> None:
     shape (CC sorts by SURT so lookups can binary-search the flat
     file and per-domain slices are contiguous; parquet gets the same
     effect from min/max pruning on the sort)."""
-    with_surt(index).repartitionByRange(
-        max(1, index.sparkSession.sparkContext.defaultParallelism // 4),
-        "surt",
-    ).sortWithinPartitions("surt").write.mode("overwrite").parquet(out_dir)
+    n = max(1, index.sparkSession.sparkContext.defaultParallelism // 4)
+    sinks.publish(
+        out_dir,
+        with_surt(index).repartitionByRange(n, "surt").sortWithinPartitions("surt"),
+    )
 
 
 def read_cdx(spark: SparkSession, cdx_dir: str) -> DataFrame:

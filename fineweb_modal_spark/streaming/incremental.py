@@ -111,30 +111,6 @@ def hourly_event_counts(
     return run_to_memory(agg, "complete", checkpoint)
 
 
-def dedup_stream(
-    spark: SparkSession, pages_dir: str, out_dir: str, checkpoint: str
-) -> None:
-    """Streaming exact-dedup on url with a 1-day event-time watermark:
-    re-crawled duplicates arriving within the watermark are dropped
-    exactly-once across micro-batches (state = seen keys inside the
-    watermark window — bounded, unlike an unwatermarked distinct).
-    Writes the deduplicated rows to out_dir; returns None."""
-    stream = file_stream(spark, pages_dir).withColumn(
-        "warc_ts", F.col("warc_ts").cast("timestamp")
-    )
-    deduped = stream.withWatermark("warc_ts", "1 day").dropDuplicates(
-        ["url", "warc_ts"]
-    )
-    q = (
-        deduped.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
 def attribution_join_stream(
     spark: SparkSession,
     events_dir: str,

@@ -65,9 +65,13 @@ ablate       per-rule filter-ablation waterfall (solo / first-fail
              --output and summarized on stdout. One scan, one
              single-row aggregate at any corpus size.
 
-Every committing mode (batch, resume, stream-commit, hygiene, crawl)
-writes through the one `sinks.commit` path. Prints one JSON metrics
-line to stdout (docs, keep rate, wall seconds).
+Every output publishes through `sinks`: the committing modes (batch,
+resume, stream-commit, hygiene, crawl) through `sinks.commit`, every
+other output and model through `sinks.publish` (staged beside the
+target, swapped in by rename, so a failed run leaves the previous
+output or model whole). Prints one JSON metrics line to stdout (docs,
+keep rate, wall seconds); its counts come from the write itself, never
+from reading the output back.
 """
 
 from __future__ import annotations
@@ -203,33 +207,32 @@ def main(argv: list[str] | None = None) -> int:
             out["wat_shards"] = len(wat)
     elif args.mode == "train-lm":
         # fit the bigram LM on a documents parquet dir (doc_id, text)
-        # and persist the model as its two count relations + meta —
+        # and publish the model as its two count relations + meta —
         # the artifact score-lm (or the scoring stream) applies later.
         from fineweb_modal_spark.operators import ngramlm
 
         mdir = (args.model or args.output).rstrip("/")
-        docs = spark.read.parquet(args.input)
-        model, uni, n_total = ngramlm.train_model(docs)
-        model.write.mode("overwrite").parquet(f"{mdir}/bigrams")
-        uni.write.mode("overwrite").parquet(f"{mdir}/unigrams")
-        spark.createDataFrame(
-            [(n_total, ngramlm.ALPHA, ngramlm.MIN_BIGRAM_COUNT,
-              ngramlm.MIN_UNIGRAM_COUNT)],
-            "n_total long, alpha double, min_bigram int, min_unigram int",
-        ).write.mode("overwrite").parquet(f"{mdir}/meta")
+        model, uni, n_total = ngramlm.train_model(spark.read.parquet(args.input))
+        parts = sinks.publish(mdir, {
+            "bigrams": model,
+            "unigrams": uni,
+            "meta": spark.createDataFrame(
+                [(n_total, ngramlm.ALPHA, ngramlm.MIN_BIGRAM_COUNT,
+                  ngramlm.MIN_UNIGRAM_COUNT)],
+                "n_total long, alpha double, min_bigram int, min_unigram int",
+            ),
+        })
         out = {
             "mode": "train-lm",
             "model_dir": mdir,
             "n_total_tokens": n_total,
-            "vocab": uni.count(),
-            "bigram_types": model.count(),
+            "vocab": parts["unigrams"]["rows"],
+            "bigram_types": parts["bigrams"]["rows"],
         }
     elif args.mode == "score-lm":
         # apply a stored model to a documents parquet dir; committed
         # partitioned write is unnecessary for a scores table — plain
         # parquet keyed by doc_id.
-        from pyspark.sql import functions as F2
-
         from fineweb_modal_spark.operators import ngramlm
 
         mdir = args.model.rstrip("/")
@@ -237,40 +240,36 @@ def main(argv: list[str] | None = None) -> int:
         uni = spark.read.parquet(f"{mdir}/unigrams")
         n_total = spark.read.parquet(f"{mdir}/meta").collect()[0].n_total
         docs = spark.read.parquet(args.input)
-        scored = ngramlm.score_against_model(docs, model, uni, n_total)
-        scored.write.mode("overwrite").parquet(args.output)
-        back = spark.read.parquet(args.output)
-        out = {
-            "mode": "score-lm",
-            "rows": back.count(),
-            "scored": back.where(F2.col("ppl").isNotNull()).count(),
-        }
+        got = sinks.publish(
+            args.output,
+            ngramlm.score_against_model(docs, model, uni, n_total),
+            F.count("ppl").alias("scored"),
+        )
+        out = {"mode": "score-lm", **got}
     elif args.mode == "curate":
         # the whole admission battery in one command: quality ∧ edu ∧
         # exact-dedup ∧ benchmark-holdout/decontam over an sf-layout
         # dir (documents.parquet + embeddings.parquet), admitted docs
         # scrubbed and written out, funnel metrics on stdout.
-        from pyspark.sql import functions as F2
+        from pyspark.sql import Observation
 
         from fineweb_modal_spark.operators import scrub as scrub_mod
         from fineweb_modal_spark.operators.curation import curation_record
 
-        rec = curation_record(spark, args.input)
+        # the funnel is observed on the record inside the written plan
+        funnel = Observation()
+        rec = curation_record(spark, args.input).observe(
+            funnel,
+            F.count(F.lit(1)).alias("n_total"),
+            F.count_if("final_keep").alias("admitted"),
+        )
         docs = spark.read.parquet(f"{args.input.rstrip('/')}/documents.parquet")
-        admitted = rec.where(F2.col("final_keep")).select("doc_id")
-        curated = scrub_mod.with_scrubbed(docs.join(admitted, "doc_id")).drop("text")
-        curated.write.mode("overwrite").parquet(args.output)
-        back = spark.read.parquet(args.output)
-        funnel = rec.agg(
-            F2.count("*").alias("n_total"),
-            F2.sum(F2.col("final_keep").cast("long")).alias("admitted"),
-        ).collect()[0]
-        out = {
-            "mode": "curate",
-            "n_total": funnel["n_total"],
-            "admitted": funnel["admitted"],
-            "rows_written": back.count(),
-        }
+        admitted = rec.where(F.col("final_keep")).select("doc_id")
+        got = sinks.publish(
+            args.output,
+            scrub_mod.with_scrubbed(docs.join(admitted, "doc_id")).drop("text"),
+        )
+        out = {"mode": "curate", **funnel.get, "rows_written": got["rows"]}
     elif args.mode == "ablate":
         # threshold audit: which battery rule costs how many docs —
         # the table that drives per-rule threshold tuning before a
@@ -281,8 +280,10 @@ def main(argv: list[str] | None = None) -> int:
             f"{args.input.rstrip('/')}/documents.parquet"
         )
         table = quality_mod.rule_ablation(docs)
-        table.write.mode("overwrite").parquet(args.output)
-        rows = spark.read.parquet(args.output).orderBy("stage").collect()
+        got = sinks.publish(
+            args.output, table, F.collect_list(F.struct(*table.columns)).alias("table")
+        )
+        rows = sorted(got["table"], key=lambda r: r.stage)
         out = {
             "mode": "ablate",
             "n_total": int(rows[0].n_total),
@@ -298,19 +299,13 @@ def main(argv: list[str] | None = None) -> int:
         }
     elif args.mode == "train-clf":
         # distill the heuristic judge into the logistic classifier on a
-        # documents parquet dir and persist weights + z-score stats —
+        # documents parquet dir and publish weights + z-score stats —
         # the artifact score-clf applies to any later corpus.
         from fineweb_modal_spark.operators import clftrain
 
         mdir = (args.model or args.output).rstrip("/")
-        docs = spark.read.parquet(args.input)
-        feat = clftrain.feature_frame(docs)
-        st = clftrain.fit_stats(feat)
-        featz = clftrain.apply_stats(feat, st).persist()
-        try:
-            w = clftrain._gd_loop(featz, clftrain.K_STEPS, clftrain.ETA)
-        finally:
-            featz.unpersist()
+        w, st, feat = clftrain.train(spark.read.parquet(args.input))
+        feat.unpersist()
         clftrain.save_model(spark, w, st, mdir)
         out = {
             "mode": "train-clf",
@@ -319,19 +314,16 @@ def main(argv: list[str] | None = None) -> int:
         }
     elif args.mode == "train-dsir":
         # fit the hashed-ngram bucket log-ratio index on a documents
-        # parquet dir (needs doc_id, text, source) and persist it —
+        # parquet dir (needs doc_id, text, source) and publish it —
         # the artifact score-dsir applies to any later crawl batch.
         from fineweb_modal_spark.operators import reweight
 
         mdir = (args.model or args.output).rstrip("/")
-        docs = spark.read.parquet(args.input)
-        ratio = reweight.train_dsir_ratio(docs)
-        reweight.save_ratio(ratio, mdir)
-        back = reweight.load_ratio(spark, mdir)
+        ratio = reweight.train_dsir_ratio(spark.read.parquet(args.input))
         out = {
             "mode": "train-dsir",
             "model_dir": mdir,
-            "buckets": back.count(),
+            "buckets": reweight.save_ratio(ratio, mdir),
         }
     elif args.mode == "score-dsir":
         # score a delta batch against a stored DSIR index: one
@@ -340,32 +332,21 @@ def main(argv: list[str] | None = None) -> int:
 
         ratio = reweight.load_ratio(spark, args.model.rstrip("/"))
         docs = spark.read.parquet(args.input)
-        reweight.score_with_ratio(docs, ratio).write.mode(
-            "overwrite"
-        ).parquet(args.output)
-        back = spark.read.parquet(args.output)
-        out = {
-            "mode": "score-dsir",
-            "rows": back.count(),
-        }
+        got = sinks.publish(args.output, reweight.score_with_ratio(docs, ratio))
+        out = {"mode": "score-dsir", **got}
     elif args.mode == "score-clf":
         # apply a stored classifier to a documents parquet dir: one
         # zero-shuffle codegen projection per row, no training passes.
-        from pyspark.sql import functions as F2
-
         from fineweb_modal_spark.operators import clftrain
 
         w, st = clftrain.load_model(spark, args.model.rstrip("/"))
         docs = spark.read.parquet(args.input)
-        clftrain.score_with_model(docs, w, st).write.mode(
-            "overwrite"
-        ).parquet(args.output)
-        back = spark.read.parquet(args.output)
-        out = {
-            "mode": "score-clf",
-            "rows": back.count(),
-            "kept": back.where(F2.col("clf_keep")).count(),
-        }
+        got = sinks.publish(
+            args.output,
+            clftrain.score_with_model(docs, w, st),
+            F.count_if("clf_keep").alias("kept"),
+        )
+        out = {"mode": "score-clf", **got}
     elif args.mode == "stream-commit":
         from fineweb_modal_spark.streaming import incremental
 

@@ -20,6 +20,39 @@ def spark():
     yield s
 
 
+@pytest.fixture
+def jobs_of(spark):
+    """jobs_of(group, fn): Spark jobs started while fn() runs, counted
+    through a job group."""
+
+    def count(group: str, fn) -> int:
+        sc = spark.sparkContext
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+            return len(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    return count
+
+
+@pytest.fixture
+def run_job(capsys):
+    """run_job(*argv): the stdout JSON line of one successful
+    `jobs/run_pipeline.py` run."""
+    import json
+
+    import jobs.run_pipeline as job
+
+    def run(*argv: str) -> dict:
+        assert job.main(list(argv)) == 0
+        return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+    return run
+
+
 @pytest.fixture(scope="session")
 def duck():
     import duckdb

@@ -314,25 +314,13 @@ def test_hidden_files_stay_hidden(spark, tmp_path):
     assert sinks.read_output(spark, out).count() == 6
 
 
-def _jobs_of(spark, group: str, fn) -> int:
-    """Spark jobs started while fn() runs, counted through a job group."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-        return len(sc.statusTracker().getJobIdsForGroup(group))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-
-
-def test_commit_jobs_independent_of_ds_count(spark, tmp_path):
+def test_commit_jobs_independent_of_ds_count(spark, tmp_path, jobs_of):
     """One staged write and one metrics scan, then renames: a commit
     over 6 ds starts no more Spark jobs than one over 2 ds."""
     ds6 = [f"2024-01-01-00-0{i}" for i in range(6)]
     jobs = {
-        n: _jobs_of(
-            spark, f"commit-{n}-ds",
+        n: jobs_of(
+            f"commit-{n}-ds",
             lambda n=n: sinks.commit(spark, _tiny_df(spark, ds6[:n]), str(tmp_path / f"o{n}")),
         )
         for n in (2, 6)
@@ -341,7 +329,7 @@ def test_commit_jobs_independent_of_ds_count(spark, tmp_path):
     assert sinks.committed_partitions(spark, str(tmp_path / "o6")) == set(ds6)
 
 
-def test_read_output_declares_committed_schema(spark, tmp_path):
+def test_read_output_declares_committed_schema(spark, tmp_path, jobs_of):
     """read_output takes its schema from a committed file's footer:
     building it starts no Spark job, the columns keep the files'
     order, and a day-granular ds reads back as the string it was
@@ -351,7 +339,7 @@ def test_read_output_declares_committed_schema(spark, tmp_path):
     rows = _tiny_df(spark, ds2)
     sinks.commit(spark, rows, out)
     built = []
-    assert _jobs_of(spark, "read-output", lambda: built.append(sinks.read_output(spark, out))) == 0
+    assert jobs_of("read-output", lambda: built.append(sinks.read_output(spark, out))) == 0
     got = built[0]
     assert got.columns == rows.columns
     assert got.schema["ds"].dataType.simpleString() == "string"
@@ -361,7 +349,7 @@ def test_read_output_declares_committed_schema(spark, tmp_path):
     assert got.where(F.col("ds") == ds2[1]).count() == 3
 
 
-def test_compact_partition_infers_no_schema(spark, tmp_path):
+def test_compact_partition_infers_no_schema(spark, tmp_path, jobs_of):
     """compact_partition declares both of its read schemas (the
     committed footer, then the frame it just wrote): it starts 3
     Spark jobs — the rewrite and the metrics scan — where inferring
@@ -371,7 +359,7 @@ def test_compact_partition_infers_no_schema(spark, tmp_path):
     rows = _tiny_df(spark, [ds0])
     sinks.commit(spark, rows, out)
     got = []
-    assert _jobs_of(spark, "compact", lambda: got.append(sinks.compact_partition(spark, out, ds0))) == 3
+    assert jobs_of("compact", lambda: got.append(sinks.compact_partition(spark, out, ds0))) == 3
     assert got[0]["n_rows"] == 3
     assert sorted(sinks.read_output(spark, out).collect()) == sorted(rows.collect())
 

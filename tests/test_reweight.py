@@ -191,14 +191,14 @@ def test_nfc_python_matches_duckdb_utf8proc(texts):
         assert got == unicodedata.normalize("NFC", t), repr(t)
 
 
-def test_job_train_then_score_dsir(spark, tmp_path):
+def test_job_train_then_score_dsir(spark, tmp_path, run_job):
     """--mode train-dsir persists the bucket log-ratio index;
     --mode score-dsir applies it to a later batch. Scored weights
     must equal the in-session train+score path, and docs made ONLY of
-    training-unseen tokens must get the closed-form unseen default."""
+    training-unseen tokens must get the closed-form unseen default.
+    Both stdout lines count what was written."""
     import os
 
-    import jobs.run_pipeline as job
     from fineweb_modal_spark.sources.tables import load_table
 
     docs_dir = str(tmp_path / "docs")
@@ -208,11 +208,9 @@ def test_job_train_then_score_dsir(spark, tmp_path):
     docs.write.parquet(docs_dir)
 
     mdir = str(tmp_path / "dsir_index")
-    rc = job.main(
-        ["--input", docs_dir, "--output", mdir, "--mode", "train-dsir"]
-    )
-    assert rc == 0
+    trained = run_job("--input", docs_dir, "--output", mdir, "--mode", "train-dsir")
     assert os.path.isdir(mdir)
+    assert trained["buckets"] == reweight.load_ratio(spark, mdir).count() > 0
 
     delta_dir = str(tmp_path / "delta")
     delta = spark.createDataFrame(
@@ -221,11 +219,10 @@ def test_job_train_then_score_dsir(spark, tmp_path):
     )
     delta.write.parquet(delta_dir)
     scores_dir = str(tmp_path / "dsir_scores")
-    rc = job.main(
-        ["--input", delta_dir, "--output", scores_dir,
-         "--mode", "score-dsir", "--model", mdir]
+    scored = run_job(
+        "--input", delta_dir, "--output", scores_dir,
+        "--mode", "score-dsir", "--model", mdir,
     )
-    assert rc == 0
 
     got = {
         r.doc_id: (r.tok_count, r.lw_micro)
@@ -237,6 +234,7 @@ def test_job_train_then_score_dsir(spark, tmp_path):
         for r in reweight.score_with_ratio(delta, ratio).collect()
     }
     assert got == want
+    assert scored["rows"] == len(got)
     assert got[9_000_002] == (0, 0)  # NULL text → identity weight
     assert got[9_000_001][0] == 3
 

@@ -209,29 +209,6 @@ def test_stateful_sessionize_matches_batch_closed_sessions(spark, tmp_path):
     assert got <= want_all
 
 
-def test_streaming_dedup_drops_recrawls(spark, tmp_path):
-    """Duplicate (url, warc_ts) rows arriving in a later file are
-    dropped by the stateful streaming dedup."""
-    pages_dir = str(tmp_path / "pages_dup")
-    out = str(tmp_path / "dedup_out")
-    ckpt = str(tmp_path / "dedup_ckpt")
-
-    full = pages_mod.load_pages(spark, SF, with_html=False)
-    first = full.where("doc_id % 2 = 0")
-    first.coalesce(1).write.mode("append").parquet(pages_dir)
-    incremental.dedup_stream(spark, pages_dir, out, ckpt)
-
-    # second file: half re-crawls (dupes), half new
-    dupes = first.limit(100)
-    fresh = full.where("doc_id % 2 = 1")
-    dupes.unionByName(fresh).coalesce(1).write.mode("append").parquet(pages_dir)
-    incremental.dedup_stream(spark, pages_dir, out, ckpt)
-
-    got = spark.read.parquet(out)
-    assert got.count() == full.count()  # dupes dropped, everything else kept
-    assert got.select("url").distinct().count() == full.count()
-
-
 def test_weekly_hll_sketch_matches_batch(spark, tmp_path):
     """Streaming register build must equal the batch HLL over the same
     rows (max is order/micro-batch-insensitive — the property that

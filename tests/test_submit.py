@@ -148,13 +148,12 @@ def test_job_hygiene_mode(spark, tmp_path):
         assert (r.scrubbed_text is not None) == bool(r.keep)
 
 
-def test_job_train_then_score_lm(spark, tmp_path):
+def test_job_train_then_score_lm(spark, tmp_path, run_job):
     """--mode train-lm persists the frozen bigram LM as parquet
     relations; --mode score-lm applies that artifact to a (possibly
     different) corpus. Scores must equal the in-session train+score
-    path on the same split — the artifact round-trip is lossless."""
-    import jobs.run_pipeline as job
-
+    path on the same split — the artifact round-trip is lossless — and
+    both stdout lines count what was written."""
     from fineweb_modal_spark.operators import ngramlm
     from fineweb_modal_spark.sources.tables import load_table
 
@@ -163,24 +162,24 @@ def test_job_train_then_score_lm(spark, tmp_path):
     docs.write.parquet(docs_dir)
 
     mdir = str(tmp_path / "lm_model")
-    rc = job.main(
-        ["--input", docs_dir, "--output", mdir, "--mode", "train-lm"]
-    )
-    assert rc == 0
+    trained = run_job("--input", docs_dir, "--output", mdir, "--mode", "train-lm")
     for rel in ("bigrams", "unigrams", "meta"):
         assert os.path.isdir(os.path.join(mdir, rel)), rel
+    assert trained["vocab"] == spark.read.parquet(f"{mdir}/unigrams").count() > 0
+    assert trained["bigram_types"] == spark.read.parquet(f"{mdir}/bigrams").count() > 0
 
     scores_dir = str(tmp_path / "scores")
-    rc = job.main(
-        ["--input", docs_dir, "--output", scores_dir,
-         "--mode", "score-lm", "--model", mdir]
+    scored = run_job(
+        "--input", docs_dir, "--output", scores_dir,
+        "--mode", "score-lm", "--model", mdir,
     )
-    assert rc == 0
 
     got = {
         r.doc_id: r.ppl
         for r in spark.read.parquet(scores_dir).collect()
     }
+    assert scored["rows"] == len(got)
+    assert scored["scored"] == sum(v is not None for v in got.values())
     model, uni, n_total = ngramlm.train_model(docs)
     want = {
         r.doc_id: r.ppl
@@ -196,14 +195,13 @@ def test_job_train_then_score_lm(spark, tmp_path):
             assert abs(got[k] - v) < 1e-9, k
 
 
-def test_job_train_then_score_clf(spark, tmp_path):
+def test_job_train_then_score_clf(spark, tmp_path, run_job, jobs_of):
     """--mode train-clf persists the distilled classifier (weights +
     z-score stats); --mode score-clf applies the artifact to a corpus.
     Scores must equal the in-session train+score path — and the keep
-    bit must agree with quality_classifier-style thresholding."""
-    import os
-
-    import jobs.run_pipeline as job
+    bit must agree with quality_classifier-style thresholding. The
+    score run's stdout counts come from its write: 6 Spark jobs where
+    reading the output back took 11."""
     from fineweb_modal_spark.operators import clftrain
     from fineweb_modal_spark.sources.tables import load_table
 
@@ -212,27 +210,26 @@ def test_job_train_then_score_clf(spark, tmp_path):
     docs.write.parquet(docs_dir)
 
     mdir = str(tmp_path / "clf_model")
-    rc = job.main(
-        ["--input", docs_dir, "--output", mdir, "--mode", "train-clf"]
-    )
-    assert rc == 0
+    run_job("--input", docs_dir, "--output", mdir, "--mode", "train-clf")
     for rel in ("weights", "stats", "meta"):
         assert os.path.isdir(os.path.join(mdir, rel)), rel
 
     scores_dir = str(tmp_path / "clf_scores")
-    rc = job.main(
-        ["--input", docs_dir, "--output", scores_dir,
-         "--mode", "score-clf", "--model", mdir]
-    )
-    assert rc == 0
+    out = []
+    n_jobs = jobs_of("score-clf", lambda: out.append(run_job(
+        "--input", docs_dir, "--output", scores_dir,
+        "--mode", "score-clf", "--model", mdir,
+    )))
+    assert n_jobs == 6
 
     got = {
         r.doc_id: (r.clf_score, r.clf_keep)
         for r in spark.read.parquet(scores_dir).collect()
     }
-    w, feat = clftrain.train(docs)
+    assert out[0]["rows"] == len(got)
+    assert out[0]["kept"] == sum(keep for _, keep in got.values())
+    w, st, feat = clftrain.train(docs)
     feat.unpersist()
-    st = clftrain.fit_stats(clftrain.feature_frame(docs))
     want = {
         r.doc_id: (r.clf_score, r.clf_keep)
         for r in clftrain.score_with_model(docs, w, st).collect()
@@ -246,43 +243,110 @@ def test_job_train_then_score_clf(spark, tmp_path):
     assert 0 < n_keep <= len(want)
 
 
-def test_job_curate_mode(spark, tmp_path):
+@pytest.mark.parametrize("mode", ["train-lm", "train-clf"])
+def test_failed_retrain_keeps_previous_model(spark, tmp_path, monkeypatch, mode):
+    """A retrain whose writer dies on the model's second part leaves
+    the published model byte-for-byte as it was, with no partial
+    directory beside it, and the score mode reproduces its old scores.
+    Writing the parts one by one onto the final path left new bigrams
+    beside old unigrams (new weights beside old stats), which scored
+    with the mix and raised no error."""
+    import jobs.run_pipeline as job
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from fineweb_modal_spark.sources.tables import load_table
+
+    docs = load_table(spark, SF, "documents").select("doc_id", "text")
+    old_dir, new_dir = str(tmp_path / "docs_old"), str(tmp_path / "docs_new")
+    docs.where("doc_id % 2 = 0").write.parquet(old_dir)
+    docs.write.parquet(new_dir)
+    models = tmp_path / "models"
+    mdir = str(models / "model")
+    col = "ppl" if mode == "train-lm" else "clf_score"
+
+    def scores(n: int) -> list:
+        out = str(tmp_path / f"scores{n}")
+        argv = ["--input", new_dir, "--output", out, "--mode", f"score-{mode[6:]}", "--model", mdir]
+        assert job.main(argv) == 0
+        return sorted(spark.read.parquet(out).select("doc_id", col).collect())
+
+    def snapshot() -> dict:
+        return {str(p.relative_to(models)): p.read_bytes() for p in models.rglob("*") if p.is_file()}
+
+    assert job.main(["--input", old_dir, "--output", mdir, "--mode", mode]) == 0
+    before, scored = snapshot(), scores(0)
+
+    real, calls = DataFrameWriter.parquet, []
+
+    def dies_on_second_part(self, path, *a, **kw):
+        calls.append(path)
+        if len(calls) == 2:
+            raise RuntimeError("writer died")
+        return real(self, path, *a, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", dies_on_second_part)
+    with pytest.raises(RuntimeError, match="writer died"):
+        job.main(["--input", new_dir, "--output", mdir, "--mode", mode])
+    monkeypatch.undo()
+
+    assert len(calls) == 2
+    assert snapshot() == before
+    assert os.listdir(models) == ["model"]
+    assert scores(1) == scored
+    # a retrain that completes does move the scores, so a mixed model
+    # would have shown above
+    assert job.main(["--input", new_dir, "--output", mdir, "--mode", mode]) == 0
+    assert scores(2) != scored
+
+
+def test_job_curate_mode(spark, tmp_path, run_job, jobs_of):
     """--mode curate writes the scrubbed admitted corpus and reports
     the funnel; written rows must equal the decision record's
-    admitted count and carry no raw text column."""
-    import jobs.run_pipeline as job
+    admitted count and carry no raw text column. The funnel is
+    observed on the written plan: 18 Spark jobs where a second
+    record and a read-back took 32."""
     from fineweb_modal_spark.operators.curation import curation_record
     from pyspark.sql import functions as F
 
     out_dir = str(tmp_path / "curated")
-    rc = job.main(["--input", SF, "--output", out_dir, "--mode", "curate"])
-    assert rc == 0
-    back = spark.read.parquet(out_dir)
-    want = (
-        curation_record(spark, SF)
-        .where(F.col("final_keep"))
-        .count()
+    out = []
+    n_jobs = jobs_of(
+        "curate", lambda: out.append(run_job("--input", SF, "--output", out_dir, "--mode", "curate"))
     )
+    assert n_jobs == 18
+    back = spark.read.parquet(out_dir)
+    rec = curation_record(spark, SF)
+    want = rec.where(F.col("final_keep")).count()
     assert back.count() == want > 0
+    assert out[0]["rows_written"] == out[0]["admitted"] == want
+    assert out[0]["n_total"] == rec.count()
     assert "scrubbed_text" in back.columns and "text" not in back.columns
 
 
-def test_job_ablate_mode(spark, tmp_path):
+def test_job_ablate_mode(spark, tmp_path, run_job):
     """--mode ablate writes the six-row waterfall and its final
     survivor count must equal the battery's keep count on the same
-    corpus — the job surface and the gate agree."""
-    import jobs.run_pipeline as job
+    corpus — the job surface and the gate agree — and the stdout
+    waterfall equals the written table."""
     from fineweb_modal_spark.operators import quality
     from fineweb_modal_spark.sources.tables import load_table
 
     out_dir = str(tmp_path / "ablation")
-    rc = job.main(["--input", SF, "--output", out_dir, "--mode", "ablate"])
-    assert rc == 0
+    out = run_job("--input", SF, "--output", out_dir, "--mode", "ablate")
     back = spark.read.parquet(out_dir).orderBy("stage").collect()
     assert len(back) == 6
     docs = load_table(spark, SF, "documents")
     kept = quality.with_keep(quality.with_signals(docs)).where("keep").count()
-    assert back[-1].cumulative_survivors == kept
+    assert back[-1].cumulative_survivors == kept == out["final_survivors"]
+    assert out["n_total"] == back[0].n_total
+    assert out["waterfall"] == {
+        r.rule: {
+            "solo": r.solo_drops,
+            "marginal": r.marginal_drops,
+            "survivor_rate": r.survivor_rate,
+        }
+        for r in back
+    }
 
 
 def test_job_stream_commit_mode(spark, tmp_path):

@@ -241,16 +241,14 @@ def test_salted_join_equals_plain_join(spark):
 
 
 def test_ivf_index_persists_and_roundtrips(spark, tmp_path):
-    """build_ivf_index persists the trained centroid table (the
-    reference's persisted LanceDB index, lancer.py:203-216); a query
-    against the loaded index equals one against a freshly trained
-    index (training is deterministic end-to-end)."""
+    """train_ivf_centroids builds sqrt(n) cells (lancer.py:208) and is
+    deterministic end-to-end: two trainings give the same index, and a
+    query against a trained index passed as `centroids=` equals one
+    that trains its own."""
     import numpy as np
 
     emb = load_table(spark, SF, "embeddings")
-    path = str(tmp_path / "ivf_index")
-    similarity.build_ivf_index(spark, emb, path)
-    ids, mat = similarity.load_ivf_index(spark, path)
+    ids, mat = similarity.train_ivf_centroids(emb)
     ids2, mat2 = similarity.train_ivf_centroids(emb)
     assert np.array_equal(ids, ids2)
     assert np.allclose(mat, mat2, atol=1e-12)
